@@ -29,20 +29,26 @@ ADD_OPENS = [f"--add-opens=java.base/{p}=ALL-UNNAMED" for p in (
     "java.lang", "java.lang.invoke", "java.lang.reflect", "java.io", "java.net",
     "java.nio", "java.util", "java.util.concurrent", "java.util.concurrent.atomic",
     "sun.nio.ch", "sun.nio.cs", "sun.security.action", "sun.util.calendar")]
+# JIT per workload. tier_query runs C1 only: under C2 its read loop had not
+# reached steady state after ~35 s of queries (latency kept falling while
+# the C2 backlog competed with Spark for the 4 cores), so a run measured how
+# far the JIT had got. The build workloads time one warm build each, which
+# measured steadier under the default tiered JIT (perfbench/README.md, *JIT*).
+JIT = {"tier_query": ["-XX:TieredStopAtLevel=1"]}
 
 
-def run_jvm(classes, state, jvm_args, limit_s):
+def run_jvm(classes, state, workload, jvm_args, limit_s):
     """Run the benchmark JVM; returns (exit code, stdout lines). Its stderr goes to
     state/jvm.log."""
     shutil.rmtree(state, ignore_errors=True)
     os.makedirs(os.path.join(state, "tmp"))
     cp = classes + os.pathsep + os.path.join(build.spark_jars(), "*")
     # -XX:-UsePerfData: no hsperfdata file outside the checkout
-    cmd = (["java", "-Xmx2g", "-XX:-UsePerfData"] + ADD_OPENS +
+    cmd = (["java", "-Xmx2g", "-XX:-UsePerfData"] + JIT.get(workload, []) + ADD_OPENS +
            ["-Djava.io.tmpdir=" + os.path.join(state, "tmp"),
             "-Dspark.driver.host=127.0.0.1", "-Dspark.driver.bindAddress=127.0.0.1",
             "-Dderby.system.home=" + state,
-            "-cp", cp, "perfbench.Main"] + jvm_args)
+            "-cp", cp, "perfbench.Main", "--workload", workload] + jvm_args)
     env = dict(os.environ, SPARK_LOCAL_IP="127.0.0.1")
     with open(os.path.join(state, "jvm.log"), "w") as err:
         p = subprocess.Popen(cmd, cwd=state, stdout=subprocess.PIPE, stderr=err,
@@ -104,7 +110,7 @@ def main():
     if a.smoke:
         ok = True
         for w in WORKLOADS:
-            rc, lines = run_jvm(classes, state, ["--workload", w, "--seed", str(a.seed),
+            rc, lines = run_jvm(classes, state, w, ["--seed", str(a.seed),
                                 "--seconds", "1", "--trace", "1"], RUN_LIMIT_S)
             r = result_of(lines)
             good = rc == 0 and r is not None and r["correct"] and r["failed"] == 0
@@ -115,9 +121,9 @@ def main():
         return 0 if ok else 1
 
     limit = RUN_LIMIT_S - (0 if built_s > 5 else built_s)
-    rc, lines = run_jvm(classes, state,
-                        ["--workload", a.workload, "--seed", str(a.seed),
-                         "--seconds", str(a.seconds), "--trace", str(a.trace)], limit)
+    rc, lines = run_jvm(classes, state, a.workload,
+                        ["--seed", str(a.seed), "--seconds", str(a.seconds),
+                         "--trace", str(a.trace)], limit)
     r = result_of(lines)
     if rc != 0 or r is None:
         print("\n".join(lines[-8:]), file=sys.stderr)

@@ -280,7 +280,7 @@ object Workloads {
   // ------------------------------------------------------------------ tier_query
 
   val MaxGapPeriods = 4
-  val WarmUpPasses = 3
+  val WarmUpPasses = 8
 
   /** One query of the mix: its kind, what it runs, and how the same
     * answer is computed by an independent path.
