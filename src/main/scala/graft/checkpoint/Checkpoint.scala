@@ -1,18 +1,19 @@
 package graft.checkpoint
 
-import org.apache.spark.sql.DataFrame
+import java.nio.file.{Files, Path, Paths}
 import graft.table.{ManifestTableLayer, PartitionMeta}
 
-/** Per-partition checkpointed execution (the engine analog of the
+/** Per-partition checkpointed commits (the engine analog of the
   * reference's per-source pickle cache — SURVEY.md §2.1 S4, and the north
   * rule's "resumable from per-partition checkpoints").
   *
-  * A stage is a list of independent work units keyed by partition
-  * ("tier=15min/day=2024-01-03"). Each unit is computed, written as an
-  * immutable partition dir, and committed to the table manifest
-  * INDIVIDUALLY — so a killed run resumes by skipping every key already in
-  * the current snapshot. Partition metas carry rows/bytes/lineage, giving
-  * the per-partition metrics emission for free.
+  * `Pipeline.runRollup` computes a stage in ONE Spark job over all of its
+  * missing days into a staging dir with one `_day=<d>` subdir per day.
+  * Each staged dir is then moved to its partition's data dir
+  * ("tier=15min/day=2024-01-03") and committed INDIVIDUALLY, in order — so
+  * a killed run resumes by skipping every key already in the current
+  * snapshot. Partition metas carry rows/bytes/lineage, giving the
+  * per-partition metrics emission for free.
   */
 object Checkpoint {
 
@@ -20,23 +21,32 @@ object Checkpoint {
   final class InjectedCrash(val after: Int)
       extends RuntimeException(s"injected crash after $after partitions")
 
-  /** Run all units not yet committed. Returns metas of newly committed
-    * partitions. `failAfter >= 0` injects a crash (test hook).
+  /** Move each staged partition dir to `table.dataDir(key)` and commit it
+    * on its own, in the given order, then remove the emptied `staging` dir.
+    * `committed` is the number of commits the caller already made in this
+    * run; `failAfter >= 0` injects a crash once the run reaches that many
+    * (test hook) and leaves the staging dir for the resume to overwrite.
+    * Returns the new total.
     */
-  def runResumable(
+  def commitEach(
       table: ManifestTableLayer,
-      units: Seq[(String, () => DataFrame)],
-      lineage: String,
-      failAfter: Int = -1
-  ): Seq[PartitionMeta] = {
-    val done = table.currentPartitions().map(_.key).toSet
-    var committed = 0
-    units.filterNot { case (k, _) => done.contains(k) }.map { case (key, compute) =>
-      if (failAfter >= 0 && committed >= failAfter) throw new InjectedCrash(failAfter)
-      val meta = ManifestTableLayer.writePartition(table, compute(), key, lineage)
-      table.commit(Seq(meta), Seq.empty)
-      committed += 1
-      meta
+      staging: Path,
+      staged: Seq[PartitionMeta],
+      committed: Int,
+      failAfter: Int
+  ): Int = {
+    val n = staged.foldLeft(committed) { (n, meta) =>
+      if (failAfter >= 0 && n >= failAfter) throw new InjectedCrash(failAfter)
+      val dest = table.dataDir(meta.key)
+      // left by a run killed between move and commit, or the dir of a
+      // dropped key that is being rebuilt
+      if (Files.exists(dest)) ManifestTableLayer.deleteTree(dest)
+      Files.createDirectories(dest.getParent)
+      Files.move(Paths.get(meta.path), dest)
+      table.commit(Seq(meta.copy(path = dest.toString)), Seq.empty)
+      n + 1
     }
+    ManifestTableLayer.deleteTree(staging)
+    n
   }
 }

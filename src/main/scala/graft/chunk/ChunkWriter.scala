@@ -97,12 +97,14 @@ object ChunkWriter {
     * repartition+sort+mapPartitions job instead of one driver-launched job
     * per day. Chunk runs restart at every (pkey, series) boundary, so each
     * pkey's chunks are bitwise identical to a per-pkey [[build]] — the
-    * invariant the batched delta refresh relies on.
+    * invariant the batched tier build and refresh rely on. The points are
+    * hash-partitioned by (pkey, series) into `numPartitions` tasks.
     */
   def buildKeyed(
       points: DataFrame, // (pkey string, series_flat string, ts long, value double?)
       tier: String,
-      maxPoints: Int = 1024
+      maxPoints: Int,
+      numPartitions: Int
   ): Dataset[KeyedChunk] = {
     val spark = points.sparkSession
     import spark.implicits._
@@ -110,7 +112,7 @@ object ChunkWriter {
       .select(col("pkey"), col("series_flat"), col("ts").cast("long"),
         coalesce(col("value").cast("double"), lit(Double.NaN)).as("value"))
       .as[KeyedPoint]
-    pts.repartition(col("pkey"), col("series_flat"))
+    pts.repartition(numPartitions, col("pkey"), col("series_flat"))
       .sortWithinPartitions(col("pkey"), col("series_flat"), col("ts"))
       .mapPartitions { it =>
         new Iterator[KeyedChunk] {

@@ -1,11 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import java.nio.file.{Files, Path}
 import graft.ingest.Pages
 import graft.rollup.TimeSeriesOps
 import graft.chunk.ChunkWriter
-import graft.table.ManifestTableLayer
+import graft.table.{ManifestTableLayer, PartitionMeta}
 import graft.checkpoint.Checkpoint
 import graft.retention.Retention
 
@@ -15,17 +17,24 @@ import graft.retention.Retention
   *   pages (partitioned bucket x day)
   *     -> points (domain-level metrics derived from the page row ONLY)
   *     -> 15min tier  (algebraic partials, per-day partitions)
-  *     -> hourly tier  (chained from stored 15min partitions)
-  *     -> daily tier   (chained from stored hourly partitions)
+  *     -> 30min, hourly, daily tiers (each chained from the stored tier
+  *        before it)
   *     -> Gorilla chunk partitions + delta index per day
-  *   all stages checkpointed per (tier, day) partition in a
+  *   computed per stage, committed per (tier, day) partition in a
   *   ManifestTableLayer; retention sweeps raw tiers, aggregates survive.
   *
-  * Partition-independence invariant: every work unit is a pure function of
-  * one day of one tier (windows never span days: 900 | 3600 | 86400 all
-  * divide a day), so units can run/retry/resume in any order on any number
-  * of executors. Gap-fill is a query-time op over stored tiers (OPSD
-  * semantics, cross-day windows) rather than part of the per-day build.
+  * Every stage is one query and one dynamic-partition write over all the
+  * days it builds; the build ([[runRollup]]) and the refreshes
+  * ([[applyDelta]], [[forgetUrls]]) run the same stages and differ only in
+  * how they commit: one commit per (tier, day) partition for the resumable
+  * build, one copy-on-write swap per stage for a refresh.
+  *
+  * Partition-independence invariant: every partition is a pure function of
+  * one day of the stage before it (windows never span days: 900 | 3600 |
+  * 86400 all divide a day), so a stage can build any subset of days in one
+  * job and a crashed build resumes by recomputing only the uncommitted
+  * days. Gap-fill is a query-time op over stored tiers (OPSD semantics,
+  * cross-day windows) rather than part of the per-day build.
   */
 object Pipeline {
 
@@ -96,8 +105,13 @@ object Pipeline {
     withDay.distinct().collect().map(_.getString(0)).sorted.toSeq
   }
 
-  /** Build all tier + chunk partitions for the given days, resumable.
-    * Returns number of newly committed partitions.
+  /** Build all tier + chunk partitions for the given days, resumable:
+    * each stage writes every day missing from the current snapshot in one
+    * job to its staging dir (`build-<stage>-r0`, which a resume's write
+    * overwrites), then commits them one (tier, day) at a time. A crash
+    * loses at most the uncommitted days of one stage. `failAfter >= 0`
+    * crashes after that many commits (test hook). Returns the number of
+    * newly committed partitions.
     */
   def runRollup(
       spark: SparkSession,
@@ -108,57 +122,23 @@ object Pipeline {
       indexBuckets: Int = 16,
       failAfter: Int = -1
   ): Int = {
-    import spark.implicits._
     val pages = spark.read.parquet(pagesPath)
-
-    def dayPages(day: String): DataFrame =
-      if (pages.columns.contains("day")) pages.filter(col("day") === day)
-      else pages.filter(to_date(col("warc_ts")) === to_date(lit(day)))
-
-    // tier-0 from raw pages, higher tiers chained from the STORED child
-    // tier partition (continuous aggregates: raw data is read once)
-    def tierUnit(tier: String, period: Long, day: String): () => DataFrame = () => {
-      if (tier == "15min")
-        tier15FromPages(dayPages(day))
+    val pageDay =
+      (if (pages.columns.contains("day")) col("day") else to_date(col("warc_ts")))
+        .cast("string")
+    val chain = stages(spark, table,
+      ds => tier15FromPages(pages.filter(pageDay.isin(ds: _*))),
+      chunkMaxPoints, indexBuckets)
+    chain.foldLeft(0) { (n, stage) =>
+      val done = table.currentPartitions().map(_.key).toSet
+      val missing = days.filterNot(d => done.contains(stage.keyOf(d)))
+      if (missing.isEmpty) n
       else {
-        // chain from the immediately preceding tier (900|1800|3600|86400
-        // each divide the next, so every step is an exact re-aggregation)
-        val child = Tiers(Tiers.indexWhere(_._1 == tier) - 1)._1
-        val childDf = spark.read.parquet(table.dataDir(tierKey(child, day)).toString)
-        TimeSeriesOps.chainTier(childDf, seriesCols, period)
+        val staging = table.dataDir(s"build-${stage.name}-r0")
+        Checkpoint.commitEach(table, staging,
+          writeStage(stage, missing, staging, "build"), n, failAfter)
       }
     }
-
-    def chunkUnit(day: String): () => DataFrame = () => {
-      val t15 = spark.read.parquet(table.dataDir(tierKey("15min", day)).toString)
-      val flat = t15.select(
-        concat_ws("_", col("domain"), col("metric")).as("series_flat"),
-        col("bucket_ts").as("ts"), col("mean_v").as("value"))
-      ChunkWriter.build(flat, "15min", chunkMaxPoints).toDF()
-    }
-
-    def indexUnit(day: String): () => DataFrame = () => {
-      val chunks = spark.read.parquet(table.dataDir(chunkKey("15min", day)).toString)
-        .as[ChunkWriter.FlatChunk]
-      ChunkWriter.buildIndex(chunks, indexBuckets).toDF()
-    }
-
-    // stage order matters (parents read stored children); within a stage
-    // units are independent and resumable
-    var n = 0
-    for ((tier, period) <- Tiers) {
-      val units = days.map(d => tierKey(tier, d) -> tierUnit(tier, period, d))
-      n += Checkpoint.runResumable(table, units,
-        lineage = s"rollup:$tier<-${if (tier == "15min") "pages" else "child-tier"}",
-        failAfter = failAfter).size
-    }
-    n += Checkpoint.runResumable(table,
-      days.map(d => chunkKey("15min", d) -> chunkUnit(d)),
-      lineage = "gorilla:15min", failAfter = failAfter).size
-    n += Checkpoint.runResumable(table,
-      days.map(d => indexKey("15min", d) -> indexUnit(d)),
-      lineage = "delta-index:chunks-15min", failAfter = failAfter).size
-    n
   }
 
   /** INCREMENTAL tier refresh (materialized-view maintenance): merge a
@@ -316,8 +296,12 @@ object Pipeline {
 
   /** Shared tail of [[applyDelta]] / [[forgetUrls]]: commit the given
     * 15-min tier content for the touched days, then re-chain every higher
-    * tier and rebuild chunks + index — one aggregation + one
-    * copy-on-write dynamic-partition commit PER STAGE (never per day).
+    * tier and rebuild chunks + index — one job + one copy-on-write commit
+    * PER STAGE (never per day). Each stage writes to a FRESH stage dir
+    * (`<tag>-<stage>-r<n>`) — never the live dirs, which the merged plan
+    * is lazily reading — and swaps all touched days in ONE snapshot; old
+    * dirs stay for time travel until `expireSnapshots`. The store-level
+    * twin of the streaming MergeSink's one-job MERGE.
     */
   private def refreshChainFrom15(
       spark: SparkSession,
@@ -327,97 +311,111 @@ object Pipeline {
       tag: String,
       chunkMaxPoints: Int,
       indexBuckets: Int
-  ): Unit = {
-    // bucket_ts -> day, for routing merged rows into day partitions
-    // (windows never span days, so this is exact)
-    val dayOfBucket =
-      to_date(timestamp_seconds(col("bucket_ts"))).cast("string").as("_day")
-    commitRefreshedDays(spark, table, merged15.withColumn("_day", dayOfBucket),
-      days, d => tierKey("15min", d), s"$tag-15min", s"$tag-merge:15min")
-
-    // one snapshot read per stage (not per day): the committed paths of
-    // the touched days, for the read-back that feeds the next stage
-    def committedPaths(keyOf: String => String): Seq[String] = {
-      val cur = table.currentPartitions().map(p => p.key -> p.path).toMap
-      days.map(d => cur(keyOf(d)))
-    }
-    for (((tier, period), idx) <- Tiers.zipWithIndex if tier != "15min") {
-      val child = Tiers(idx - 1)._1
-      val childDf = spark.read.parquet(
-        committedPaths(d => tierKey(child, d)): _*)
-      commitRefreshedDays(spark, table,
-        TimeSeriesOps.chainTier(childDf, seriesCols, period)
-          .withColumn("_day", dayOfBucket),
-        days, d => tierKey(tier, d), s"$tag-$tier", s"$tag-chain:$tier")
+  ): Unit =
+    for (stage <- stages(spark, table, _ => merged15, chunkMaxPoints, indexBuckets)) {
+      val dir = Iterator.from(0)
+        .map(i => table.dataDir(s"$tag-${stage.name}-r$i"))
+        .find(p => !Files.exists(p)).get
+      val metas = writeStage(stage, days, dir, tag)
+      table.commit(metas, metas.map(_.key))
     }
 
-    // ---- Gorilla chunks + delta index for every touched day, each ONE
-    // keyed job (runs restart at day boundaries — bitwise the per-day
-    // build)
-    val t15 = spark.read.parquet(
-      committedPaths(d => tierKey("15min", d)): _*)
-    val flat = t15.select(
-      to_date(timestamp_seconds(col("bucket_ts"))).cast("string").as("pkey"),
-      concat_ws("_", col("domain"), col("metric")).as("series_flat"),
-      col("bucket_ts").as("ts"), col("mean_v").as("value"))
-    commitRefreshedDays(spark, table,
-      ChunkWriter.buildKeyed(flat, "15min", chunkMaxPoints).toDF()
-        .withColumnRenamed("pkey", "_day"),
-      days, d => chunkKey("15min", d), s"$tag-chunks", s"$tag-chunks:15min")
-    val chunks = spark.read.parquet(
-        committedPaths(d => chunkKey("15min", d)): _*)
-      .withColumn("pkey",
-        to_date(timestamp_seconds(col("t0"))).cast("string"))
-    commitRefreshedDays(spark, table,
-      ChunkWriter.buildIndexKeyed(chunks, indexBuckets)
-        .withColumnRenamed("pkey", "_day"),
-      days, d => indexKey("15min", d), s"$tag-index", s"$tag-index:chunks-15min")
-  }
-
-  /** Copy-on-write refresh of MANY day partitions in one shot: write the
-    * frame (routing column `_day`) to a FRESH stage dir — never the live
-    * dirs, which the merged plan is lazily reading — as ONE
-    * dynamic-partition job, then swap all touched days in ONE snapshot.
-    * Old dirs stay for time travel until `expireSnapshots`. This is the
-    * store-level twin of the streaming MergeSink's one-job MERGE.
+  /** One stage of the tier chain: `name` tags its stage dir, `keyOf` gives
+    * a day's partition key, and `frame(days)` is the stage's output for
+    * those days with the routing column `_day`. A partition's lineage is
+    * the caller's tag (build: from pages; delta: stored + late partials;
+    * forget: patched pages) and the stage's input.
     */
-  private def commitRefreshedDays(
+  private case class Stage(
+      name: String,
+      keyOf: String => String,
+      lineage: String,
+      frame: Seq[String] => DataFrame)
+
+  private val TierSchema = StructType.fromDDL(
+    "domain STRING, metric STRING, bucket_ts BIGINT, n BIGINT, sum_v DOUBLE, mean_v DOUBLE")
+
+  /** bucket start (epoch s) -> day, for routing rows into day partitions
+    * (windows never span days, so this is exact)
+    */
+  private def dayOf(epochSec: String) =
+    to_date(timestamp_seconds(col(epochSec))).cast("string")
+
+  /** The tier chain that the build and both refreshes run: 15 min from
+    * `tier15(days)` (pages, or stored + delta partials), then 30 min, 1 h
+    * and 1 d each chained from the STORED partitions of the tier before
+    * it (continuous aggregates: raw data is read once; 900|1800|3600|86400
+    * each divide the next, so every step is an exact re-aggregation), then
+    * the Gorilla chunks and the delta index of the stored 15-min tier.
+    * Chunk runs restart at every (day, series) boundary, so each day's
+    * chunks are bitwise those of a per-day build.
+    *
+    * Layout: each stage's output is hash-partitioned by (day, series key)
+    * into `spark.sql.shuffle.partitions` tasks, so a day partition holds
+    * that many files, each with a share of the series — the per-series
+    * dictionary skipping the readers rely on.
+    */
+  private def stages(
       spark: SparkSession,
       table: ManifestTableLayer,
-      df: DataFrame, // carries "_day"
+      tier15: Seq[String] => DataFrame,
+      chunkMaxPoints: Int,
+      indexBuckets: Int
+  ): Seq[Stage] = {
+    val files = spark.sessionState.conf.numShufflePartitions
+    def laidOut(df: DataFrame, key: String) =
+      df.repartition(files, col("_day"), col(key))
+    // one snapshot read per stage (not per day); the explicit schema saves
+    // the footer-inference job a schema-less read would run
+    def stored(schema: StructType, keyOf: String => String, days: Seq[String]) = {
+      val cur = table.currentPartitions().map(p => p.key -> p.path).toMap
+      spark.read.schema(schema).parquet(days.map(d => cur(keyOf(d))): _*)
+    }
+    val t15 = Stage("15min", tierKey("15min", _), "15min", days =>
+      laidOut(tier15(days).withColumn("_day", dayOf("bucket_ts")), "domain"))
+    val chained = Tiers.sliding(2).map { case Seq((child, _), (tier, period)) =>
+      Stage(tier, tierKey(tier, _), s"$tier<-$child", days => laidOut(
+        TimeSeriesOps.chainTier(stored(TierSchema, tierKey(child, _), days),
+          seriesCols, period).withColumn("_day", dayOf("bucket_ts")), "domain"))
+    }.toSeq
+    val chunks = Stage("chunks", chunkKey("15min", _), "chunks-15min<-15min", days => {
+      val flat = stored(TierSchema, tierKey("15min", _), days).select(
+        dayOf("bucket_ts").as("pkey"),
+        concat_ws("_", col("domain"), col("metric")).as("series_flat"),
+        col("bucket_ts").as("ts"), col("mean_v").as("value"))
+      ChunkWriter.buildKeyed(flat, "15min", chunkMaxPoints, files).toDF()
+        .withColumnRenamed("pkey", "_day")
+    })
+    val index = Stage("index", indexKey("15min", _), "index-15min<-chunks-15min", days => {
+      val keyed = stored(Encoders.product[ChunkWriter.FlatChunk].schema,
+        chunkKey("15min", _), days).withColumn("pkey", dayOf("t0"))
+      laidOut(ChunkWriter.buildIndexKeyed(keyed, indexBuckets)
+        .withColumnRenamed("pkey", "_day"), "part_id")
+    })
+    (t15 +: chained) :+ chunks :+ index
+  }
+
+  /** Write `stage` for `days` as ONE dynamic-partition job into `dir`
+    * (overwritten) and return one meta per day at `dir/_day=<d>`, its rows
+    * and bytes from the Parquet footers and file sizes (no Spark job).
+    * Every day must come out: a day the stage emptied would leave its
+    * STALE partition live after a refresh swap.
+    */
+  private def writeStage(
+      stage: Stage,
       days: Seq[String],
-      keyFor: String => String,
-      stageTag: String,
-      lineage: String
-  ): Unit = {
-    val stageDir = Iterator.from(0)
-      .map(i => table.dataDir(s"$stageTag-r$i"))
-      .find(p => !java.nio.file.Files.exists(p)).get
-    val pinned = df.persist()
-    try {
-      pinned.write.partitionBy("_day").mode("overwrite").parquet(stageDir.toString)
-      val counts = pinned.groupBy(col("_day")).count()
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      // every touched day must re-appear: a day the merge emptied would
-      // leave its STALE pre-delta partition live after the swap
-      val missing = days.filterNot(counts.contains)
-      require(missing.isEmpty,
-        s"$stageTag produced zero rows for day(s) ${missing.mkString(",")}")
-      val metas = days.map { d =>
-        val dir = stageDir.resolve(s"_day=$d")
-        val bytes = {
-          import scala.jdk.CollectionConverters._
-          val s = java.nio.file.Files.walk(dir)
-          try s.iterator().asScala
-            .filter(java.nio.file.Files.isRegularFile(_))
-            .map(java.nio.file.Files.size).sum
-          finally s.close()
-        }
-        graft.table.PartitionMeta(keyFor(d), dir.toString, counts(d), bytes,
-          s"$lineage day=$d")
-      }
-      table.commit(metas, metas.map(_.key))
-    } finally pinned.unpersist()
+      dir: Path,
+      tag: String
+  ): Seq[PartitionMeta] = {
+    stage.frame(days).write.partitionBy("_day").mode("overwrite").parquet(dir.toString)
+    days.map { d =>
+      val part = dir.resolve(s"_day=$d")
+      require(Files.isDirectory(part),
+        s"${dir.getFileName} produced zero rows for day $d")
+      val (rows, bytes) = ManifestTableLayer.dirStats(part)
+      PartitionMeta(stage.keyOf(d), part.toString, rows, bytes,
+        s"$tag:${stage.lineage} day=$d")
+    }
   }
 
   /** Read one full tier back from the table (all live day partitions). */

@@ -5,6 +5,8 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.io.LocalInputFile
 
 /** Snapshot-isolated table layout over plain Parquet directories — the
   * local stand-in for Iceberg (no Iceberg jar ships offline; on a real
@@ -147,17 +149,13 @@ class ManifestTableLayer(rootDir: String) extends TableLayer {
     val live = keepIds.flatMap(readSnap).map(_.path).toSet
     val all = Files.list(root.resolve("data")).iterator().asScala.toSeq
     var deleted = 0
-    def rmTree(p: Path): Unit = {
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(Files.delete)
-    }
     // partition dirs may nest (tier=x/day=y): collect leaf dirs two deep
     def leaves(p: Path): Seq[Path] = {
       val children = Files.list(p).iterator().asScala.toSeq.filter(Files.isDirectory(_))
       if (children.isEmpty) Seq(p) else children.flatMap(leaves)
     }
     all.filter(Files.isDirectory(_)).flatMap(leaves).foreach { leaf =>
-      if (!live.contains(leaf.toString)) { rmTree(leaf); deleted += 1 }
+      if (!live.contains(leaf.toString)) { ManifestTableLayer.deleteTree(leaf); deleted += 1 }
     }
     // drop snapshot files older than the retained window
     Files.list(snapsDir).iterator().asScala.foreach { sp =>
@@ -179,14 +177,31 @@ object ManifestTableLayer {
       lineage: String
   ): PartitionMeta = {
     val path = table.dataDir(key)
-    // persist so rows-metric + write compute the partition once, not twice
-    df.persist()
-    try {
-      val rows = df.count()
-      df.write.mode("overwrite").parquet(path.toString)
-      val bytes = Files.walk(path).iterator().asScala
-        .filter(Files.isRegularFile(_)).map(Files.size).sum
-      PartitionMeta(key, path.toString, rows, bytes, lineage)
-    } finally df.unpersist()
+    df.write.mode("overwrite").parquet(path.toString)
+    val (rows, bytes) = dirStats(path)
+    PartitionMeta(key, path.toString, rows, bytes, lineage)
+  }
+
+  /** Rows and bytes of a written partition dir, taken on the driver from
+    * the Parquet footers and the file sizes — no Spark job re-reads what
+    * the write just produced (the Delta log's per-file stats, PAPERS.md).
+    */
+  def dirStats(dir: Path): (Long, Long) = {
+    val files = {
+      val s = Files.walk(dir)
+      try s.iterator().asScala.filter(Files.isRegularFile(_)).toSeq finally s.close()
+    }
+    val rows = files.filter(_.getFileName.toString.endsWith(".parquet")).map { f =>
+      val r = ParquetFileReader.open(new LocalInputFile(f))
+      try r.getRecordCount finally r.close()
+    }.sum
+    (rows, files.map(Files.size).sum)
+  }
+
+  /** Delete `p` and everything under it. */
+  def deleteTree(p: Path): Unit = {
+    val s = Files.walk(p)
+    try s.sorted(java.util.Comparator.reverseOrder()).forEach(f => Files.delete(f))
+    finally s.close()
   }
 }

@@ -6,6 +6,8 @@ import graft.ingest.Pages
 import graft.pipeline.Pipeline
 import graft.table.ManifestTableLayer
 import graft.chunk.ChunkWriter
+import graft.checkpoint.Checkpoint
+import graft.retention.Retention
 import java.nio.file.Files
 
 /** End-to-end pipeline on sf0.001: rollup -> read back -> invariants,
@@ -30,6 +32,36 @@ class PipelineSpec extends AnyFunSuite {
       chunkMaxPoints = 128)
     t
   }
+
+  /** Runs `body` and counts the Spark jobs it started. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    // listener events arrive asynchronously: wait until the count settles
+    def settled(): Int = {
+      var prev = -1; var cur = jobs.get()
+      while (cur != prev) { Thread.sleep(250); prev = cur; cur = jobs.get() }
+      cur
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try { val r = body; (r, settled()) }
+    finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** Per partition key: row count and the sum of xxhash64 over every column
+    * (equal digests = equal row multisets with bitwise-equal values).
+    */
+  private def digests(t: ManifestTableLayer): Map[String, (Long, java.math.BigDecimal)] =
+    t.currentPartitions().map { p =>
+      val d = spark.read.parquet(p.path)
+      val r = d.agg(count(lit(1)),
+        sum(xxhash64(d.columns.sorted.map(col): _*).cast("decimal(38,0)"))).head()
+      p.key -> (r.getLong(0), r.getDecimal(1))
+    }.toMap
 
   test("rollup commits tiers + chunks + index partitions for every day") {
     val keys = table.currentPartitions().map(_.key)
@@ -171,37 +203,20 @@ class PipelineSpec extends AnyFunSuite {
     val t = new ManifestTableLayer(s"$base/table")
     Pipeline.runRollup(spark, s"$base/pages", t,
       Pipeline.listDays(spark, s"$base/pages"), chunkMaxPoints = 128)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    def settled(): Int = {
-      var prev = -1; var cur = jobs.get()
-      while (cur != prev) { Thread.sleep(250); prev = cur; cur = jobs.get() }
-      cur
-    }
     val delta = all.filter(late).persist()
     val twoDays = delta.filter(to_date(col("warc_ts")) < lit("2024-01-03"))
     val restDays = delta.filter(to_date(col("warc_ts")) >= lit("2024-01-03"))
-    spark.sparkContext.addSparkListener(listener)
     try {
-      Pipeline.applyDelta(spark, twoDays, t, chunkMaxPoints = 128)
-      val j2 = settled()
-      jobs.set(0)
-      val refreshed = Pipeline.applyDelta(spark, restDays, t, chunkMaxPoints = 128)
-      val j14 = settled()
+      val (_, j2) = jobsOf(Pipeline.applyDelta(spark, twoDays, t, chunkMaxPoints = 128))
+      val (refreshed, j14) =
+        jobsOf(Pipeline.applyDelta(spark, restDays, t, chunkMaxPoints = 128))
       assert(refreshed.size == 12)
       // 7x the touched days must NOT mean more driver-launched jobs: each
       // stage is one dynamic-partition job regardless of day span (AQE
       // stage materialization adds a constant few per query)
       assert(j14 <= j2 + 4,
         s"14-day delta ran $j14 jobs vs $j2 for 2 days — per-day driver loop is back")
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      delta.unpersist()
-    }
+    } finally delta.unpersist()
     // and the result is still right: hourly tier equals a direct rebuild
     val direct = graft.rollup.TimeSeriesOps.tier(
       Pipeline.pointsFromPages(all), Seq("domain", "metric"),
@@ -210,6 +225,61 @@ class PipelineSpec extends AnyFunSuite {
     val cols = Seq("domain", "metric", "bucket_ts", "n", "sum_v", "mean_v").map(col)
     assert(stored.select(cols: _*).except(direct.select(cols: _*)).isEmpty)
     assert(stored.count() == direct.count())
+  }
+
+  test("runRollup job count does not depend on the day span") {
+    val base = Files.createTempDirectory(
+      java.nio.file.Paths.get(root), "pipe-rjobs-").toString
+    val week = Pages.synthesize(spark, SparkTestSession.sf0001)
+      .select("url", "warc_ts", "html", "text", "lang")
+    Pages.writePartitioned(week, s"$base/pages7", buckets = 8)
+    Pages.writePartitioned(week.unionByName(
+        week.withColumn("warc_ts", expr("warc_ts + INTERVAL 7 DAYS"))
+          .withColumn("url", concat(col("url"), lit("?w=2")))),
+      s"$base/pages14", buckets = 8)
+    def build(n: Int): (Int, Int) = {
+      val pages = s"$base/pages$n"
+      val days = Pipeline.listDays(spark, pages)
+      assert(days.size == n)
+      jobsOf(Pipeline.runRollup(spark, pages,
+        new ManifestTableLayer(s"$base/table$n"), days, chunkMaxPoints = 128))
+    }
+    val (n7, j7) = build(7)
+    val (n14, j14) = build(14)
+    assert(n7 == 6 * 7 && n14 == 6 * 14)
+    // each stage is one query over all its days, committed per (tier, day):
+    // twice the days must not mean more driver-launched jobs
+    assert(j7 < n7, s"7-day build ran $j7 jobs for $n7 partitions — per-unit loop is back")
+    assert(j14 <= j7 + 2, s"14-day build ran $j14 jobs vs $j7 for 7 days")
+  }
+
+  test("crash + resume + expire: no orphan dirs, equals a fresh build") {
+    val fresh = table // the uninterrupted build of the same pages
+    val root2 = Files.createTempDirectory(
+      java.nio.file.Paths.get(root), "pipe-resume-").toString
+    val t = new ManifestTableLayer(s"$root2/table")
+    val days = Pipeline.listDays(spark, pagesPath)
+    // 7 days per stage: the crash lands inside the 30-min stage
+    val k = 9
+    intercept[Checkpoint.InjectedCrash] {
+      Pipeline.runRollup(spark, pagesPath, t, days, chunkMaxPoints = 128, failAfter = k)
+    }
+    assert(t.currentPartitions().map(_.key) ==
+      days.map(Pipeline.tierKey("15min", _)) ++ days.take(2).map(Pipeline.tierKey("30min", _)))
+    // only the remaining partitions run
+    assert(Pipeline.runRollup(spark, pagesPath, t, days, chunkMaxPoints = 128) == 6 * 7 - k)
+    assert(t.currentPartitions().map(_.key).toSet == fresh.currentPartitions().map(_.key).toSet)
+    // the crashed run's staging dirs are gone: expiry finds nothing to
+    // delete, and every leaf dir under data/ is a live partition
+    assert(Retention.expire(t, keepLast = 1) == 0)
+    def leaves(p: java.nio.file.Path): Seq[String] = {
+      import scala.jdk.CollectionConverters._
+      val kids = Files.list(p).iterator().asScala.filter(Files.isDirectory(_)).toSeq
+      if (kids.isEmpty) Seq(p.toString) else kids.flatMap(leaves)
+    }
+    assert(leaves(java.nio.file.Paths.get(s"$root2/table/data")).toSet ==
+      t.currentPartitions().map(_.path).toSet)
+    assert(digests(t) == digests(fresh))
   }
 
   test("sweep drops raw + chunks + index below cutoff; aggregates intact") {

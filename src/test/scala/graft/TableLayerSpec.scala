@@ -3,7 +3,6 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.table.{ManifestTableLayer, PartitionMeta}
-import graft.checkpoint.Checkpoint
 import graft.retention.Retention
 import java.nio.file.Files
 
@@ -247,27 +246,5 @@ class TableLayerSpec extends AnyFunSuite {
     // the staged frame satisfies its own key's predicate, row for row
     assert(ns.filter(org.apache.spark.sql.functions.expr(
       IcebergTableLayer.partitionKeySql("chunks-15min/day=d"))).count() == 1)
-  }
-
-  test("checkpoint resume: crash mid-stage, rerun, result equals single run") {
-    val rootA = freshRoot()
-    val rootB = freshRoot()
-    def units = (1 to 6).map(i => s"p=$i" -> (() => df(i)))
-    // run A: crash after 3 commits, then resume
-    val tA = new ManifestTableLayer(rootA)
-    intercept[Checkpoint.InjectedCrash] {
-      Checkpoint.runResumable(tA, units, "test", failAfter = 3)
-    }
-    assert(tA.currentPartitions().size == 3)
-    val resumed = Checkpoint.runResumable(tA, units, "test")
-    assert(resumed.size == 3) // only the remaining units ran
-    // run B: single uninterrupted run
-    val tB = new ManifestTableLayer(rootB)
-    Checkpoint.runResumable(tB, units, "test")
-    val a = tA.read(spark).orderBy("k", "v").collect().toSeq
-    val b = tB.read(spark).orderBy("k", "v").collect().toSeq
-    assert(a == b)
-    assert(tA.currentPartitions().map(_.key).toSet ==
-      tB.currentPartitions().map(_.key).toSet)
   }
 }
