@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import java.nio.file.{Files, Path}
+import java.nio.file.Path
 import graft.ingest.Pages
 import graft.rollup.TimeSeriesOps
 import graft.chunk.ChunkWriter
@@ -23,11 +23,15 @@ import graft.retention.Retention
   *   computed per stage, committed per (tier, day) partition in a
   *   ManifestTableLayer; retention sweeps raw tiers, aggregates survive.
   *
-  * Every stage is one query and one dynamic-partition write over all the
-  * days it builds; the build ([[runRollup]]) and the refreshes
-  * ([[applyDelta]], [[forgetUrls]]) run the same stages and differ only in
-  * how they commit: one commit per (tier, day) partition for the resumable
-  * build, one copy-on-write swap per stage for a refresh.
+  * Every stage is one query and one `ManifestTableLayer.writeStage` job
+  * over all the days it builds, and every partition is committed where
+  * it was written (`<stage dir>/_day=<d>`). The build ([[runRollup]]) and
+  * the refreshes ([[applyDelta]], [[forgetUrls]]) run the same stages and
+  * differ only in the stage dir and the commit: the resumable build
+  * writes the fixed dir `<ns>/build` (`ns` the stage's key namespace,
+  * e.g. `tier=1h`) and commits one (tier, day) partition at a time; a
+  * refresh writes a fresh `<ns>/<tag>[-r<n>]` dir and swaps all its days
+  * in one copy-on-write commit per stage.
   *
   * Partition-independence invariant: every partition is a pure function of
   * one day of the stage before it (windows never span days: 900 | 3600 |
@@ -107,11 +111,13 @@ object Pipeline {
 
   /** Build all tier + chunk partitions for the given days, resumable:
     * each stage writes every day missing from the current snapshot in one
-    * job to its staging dir (`build-<stage>-r0`, which a resume's write
-    * overwrites), then commits them one (tier, day) at a time. A crash
-    * loses at most the uncommitted days of one stage. `failAfter >= 0`
-    * crashes after that many commits (test hook). Returns the number of
-    * newly committed partitions.
+    * job into its fixed stage dir (`<ns>/build`), then commits those
+    * `_day=<d>` dirs where they were written, one (tier, day) per commit.
+    * A resume's write replaces only the uncommitted day dirs, never a
+    * committed one, so a crash loses at most the uncommitted days of one
+    * stage and leaves no orphan dir. `failAfter >= 0` crashes after that
+    * many commits (test hook). Returns the number of newly committed
+    * partitions.
     */
   def runRollup(
       spark: SparkSession,
@@ -133,11 +139,12 @@ object Pipeline {
       val done = table.currentPartitions().map(_.key).toSet
       val missing = days.filterNot(d => done.contains(stage.keyOf(d)))
       if (missing.isEmpty) n
-      else {
-        val staging = table.dataDir(s"build-${stage.name}-r0")
-        Checkpoint.commitEach(table, staging,
-          writeStage(stage, missing, staging, "build"), n, failAfter)
-      }
+      else writeStage(table, stage, missing, table.dataDir(s"${stage.ns}/build"), "build")
+        .foldLeft(n) { (n, meta) =>
+          if (failAfter >= 0 && n >= failAfter) throw new Checkpoint.InjectedCrash(failAfter)
+          table.commit(Seq(meta), Seq.empty)
+          n + 1
+        }
     }
   }
 
@@ -250,11 +257,8 @@ object Pipeline {
         col("day").cast("string").isin(days: _*))
       .filter(!col("url").isin(urls: _*))
       .localCheckpoint() // materialized BEFORE the overwrite deletes its own input files
-    val prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try patched.write.mode("overwrite").partitionBy("bucket", "day")
-      .parquet(pagesPath)
-    finally spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    patched.write.mode("overwrite").partitionBy("bucket", "day")
+      .option("partitionOverwriteMode", "dynamic").parquet(pagesPath)
     // a (bucket, day) partition the erasure emptied ENTIRELY gets no dir
     // from the dynamic overwrite — its stale pre-forget files must go
     // explicitly, or the deleted rows would silently stay live
@@ -298,7 +302,7 @@ object Pipeline {
     * 15-min tier content for the touched days, then re-chain every higher
     * tier and rebuild chunks + index — one job + one copy-on-write commit
     * PER STAGE (never per day). Each stage writes to a FRESH stage dir
-    * (`<tag>-<stage>-r<n>`) — never the live dirs, which the merged plan
+    * (`<ns>/<tag>[-r<n>]`) — never the live dirs, which the merged plan
     * is lazily reading — and swaps all touched days in ONE snapshot; old
     * dirs stay for time travel until `expireSnapshots`. The store-level
     * twin of the streaming MergeSink's one-job MERGE.
@@ -313,24 +317,24 @@ object Pipeline {
       indexBuckets: Int
   ): Unit =
     for (stage <- stages(spark, table, _ => merged15, chunkMaxPoints, indexBuckets)) {
-      val dir = Iterator.from(0)
-        .map(i => table.dataDir(s"$tag-${stage.name}-r$i"))
-        .find(p => !Files.exists(p)).get
-      val metas = writeStage(stage, days, dir, tag)
+      val metas =
+        writeStage(table, stage, days, table.freshDir(s"${stage.ns}/$tag"), tag)
       table.commit(metas, metas.map(_.key))
     }
 
-  /** One stage of the tier chain: `name` tags its stage dir, `keyOf` gives
-    * a day's partition key, and `frame(days)` is the stage's output for
-    * those days with the routing column `_day`. A partition's lineage is
-    * the caller's tag (build: from pages; delta: stored + late partials;
-    * forget: patched pages) and the stage's input.
+  /** One stage of the tier chain: `ns` is its key namespace (a day's
+    * partition key is `<ns>/day=<d>`, and its stage dirs live under
+    * `data/<ns>/`), and `frame(days)` is the stage's output for those days
+    * with the routing column `_day`. A partition's lineage is the caller's
+    * tag (build: from pages; delta: stored + late partials; forget:
+    * patched pages) and the stage's input.
     */
   private case class Stage(
-      name: String,
-      keyOf: String => String,
+      ns: String,
       lineage: String,
-      frame: Seq[String] => DataFrame)
+      frame: Seq[String] => DataFrame) {
+    def keyOf(day: String): String = s"$ns/day=$day"
+  }
 
   private val TierSchema = StructType.fromDDL(
     "domain STRING, metric STRING, bucket_ts BIGINT, n BIGINT, sum_v DOUBLE, mean_v DOUBLE")
@@ -371,14 +375,14 @@ object Pipeline {
       val cur = table.currentPartitions().map(p => p.key -> p.path).toMap
       spark.read.schema(schema).parquet(days.map(d => cur(keyOf(d))): _*)
     }
-    val t15 = Stage("15min", tierKey("15min", _), "15min", days =>
+    val t15 = Stage("tier=15min", "15min", days =>
       laidOut(tier15(days).withColumn("_day", dayOf("bucket_ts")), "domain"))
     val chained = Tiers.sliding(2).map { case Seq((child, _), (tier, period)) =>
-      Stage(tier, tierKey(tier, _), s"$tier<-$child", days => laidOut(
+      Stage(s"tier=$tier", s"$tier<-$child", days => laidOut(
         TimeSeriesOps.chainTier(stored(TierSchema, tierKey(child, _), days),
           seriesCols, period).withColumn("_day", dayOf("bucket_ts")), "domain"))
     }.toSeq
-    val chunks = Stage("chunks", chunkKey("15min", _), "chunks-15min<-15min", days => {
+    val chunks = Stage("chunks-15min", "chunks-15min<-15min", days => {
       val flat = stored(TierSchema, tierKey("15min", _), days).select(
         dayOf("bucket_ts").as("pkey"),
         concat_ws("_", col("domain"), col("metric")).as("series_flat"),
@@ -386,7 +390,7 @@ object Pipeline {
       ChunkWriter.buildKeyed(flat, "15min", chunkMaxPoints, files).toDF()
         .withColumnRenamed("pkey", "_day")
     })
-    val index = Stage("index", indexKey("15min", _), "index-15min<-chunks-15min", days => {
+    val index = Stage("index-15min", "index-15min<-chunks-15min", days => {
       val keyed = stored(Encoders.product[ChunkWriter.FlatChunk].schema,
         chunkKey("15min", _), days).withColumn("pkey", dayOf("t0"))
       laidOut(ChunkWriter.buildIndexKeyed(keyed, indexBuckets)
@@ -395,27 +399,22 @@ object Pipeline {
     (t15 +: chained) :+ chunks :+ index
   }
 
-  /** Write `stage` for `days` as ONE dynamic-partition job into `dir`
-    * (overwritten) and return one meta per day at `dir/_day=<d>`, its rows
-    * and bytes from the Parquet footers and file sizes (no Spark job).
+  /** Write `stage` for `days` into `dir` and return one meta per day.
     * Every day must come out: a day the stage emptied would leave its
     * STALE partition live after a refresh swap.
     */
   private def writeStage(
+      table: ManifestTableLayer,
       stage: Stage,
       days: Seq[String],
       dir: Path,
       tag: String
   ): Seq[PartitionMeta] = {
-    stage.frame(days).write.partitionBy("_day").mode("overwrite").parquet(dir.toString)
-    days.map { d =>
-      val part = dir.resolve(s"_day=$d")
-      require(Files.isDirectory(part),
-        s"${dir.getFileName} produced zero rows for day $d")
-      val (rows, bytes) = ManifestTableLayer.dirStats(part)
-      PartitionMeta(stage.keyOf(d), part.toString, rows, bytes,
-        s"$tag:${stage.lineage} day=$d")
-    }
+    val (metas, empty) = table.writeStage(stage.frame(days), dir, "_day", days,
+      stage.keyOf, d => s"$tag:${stage.lineage} day=$d")
+    require(empty.isEmpty,
+      s"${dir.getFileName} produced zero rows for day(s) ${empty.mkString(",")}")
+    metas
   }
 
   /** Read one full tier back from the table (all live day partitions). */

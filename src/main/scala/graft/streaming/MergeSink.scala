@@ -2,20 +2,21 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.table.{ManifestTableLayer, PartitionMeta}
+import graft.table.ManifestTableLayer
 
 /** The shared `foreachBatch` copy-on-write MERGE sink used by every
   * streaming path (hourly rollup, latest-per-user upsert, exact dedup,
   * near-dup candidates). One micro-batch is merged into its bucketed
-  * snapshot table with a CONSTANT number of Spark jobs — three —
+  * snapshot table with a CONSTANT number of Spark jobs — two —
   * regardless of how many buckets the batch touches:
   *
   *   1. touched-bucket discovery (also materializes the incoming cache),
-  *   2. ONE dynamic-partition write of the merged contents of ALL touched
-  *      buckets (`partitionBy` over the routing column — the same
-  *      all-partitions-in-one-job shape the chunk-store compaction uses),
-  *   3. per-bucket row counts from the merged cache (one aggregate job;
-  *      file sizes come from a driver-side fs listing, not a re-read).
+  *   2. ONE `ManifestTableLayer.writeStage` job writing the merged
+  *      contents of ALL touched buckets (`partitionBy` over the routing
+  *      column — the same all-partitions-in-one-job shape the build and
+  *      the chunk-store compaction use). Per-bucket rows and bytes come
+  *      from the written files' Parquet footers and sizes on the driver,
+  *      not from a second job.
   *
   * The whole batch then commits as ONE snapshot. The previous shape — a
   * sequential `buckets.foreach` launching a write job plus a parquet
@@ -24,8 +25,8 @@ import graft.table.{ManifestTableLayer, PartitionMeta}
   * once a cluster batch touches hundreds of day/bucket partitions.
   *
   * Retention: with `expireEvery > 0` the sink calls
-  * `expireSnapshots(keepLast)` every N batches, so a long-running stream
-  * keeps a bounded number of `b<batchId>` staging dirs on disk instead of
+  * `expireSnapshots(keepLast = 2)` every N batches, so a long-running stream
+  * keeps a bounded number of `b<batchId>` stage dirs on disk instead of
   * one per touched bucket per batch forever. Expiry never touches live
   * data (every current partition is referenced by the latest snapshot)
   * and replaying a batch after a crash re-runs an idempotent expire.
@@ -51,7 +52,7 @@ object MergeSink {
     *                  caller guarantees by construction — the bucket IS a
     *                  hash/date of the merge key — so a global window or
     *                  anti-join inside `merge` equals the per-bucket one.
-    * @param expireEvery run `expireSnapshots(keepLast)` every N batches
+    * @param expireEvery run `expireSnapshots(keepLast = 2)` every N batches
     *                  (0 = never; finite drains with AvailableNow keep
     *                  full history for the duration of the run anyway)
     * @param extraBuckets buckets to REWRITE even when no incoming row
@@ -73,7 +74,6 @@ object MergeSink {
       lineageTag: String,
       merge: (DataFrame, DataFrame) => DataFrame,
       expireEvery: Int = 0,
-      keepLast: Int = 2,
       extraBuckets: Seq[String] = Nil,
       allowEmptied: Boolean = false
   ): Unit = {
@@ -94,58 +94,32 @@ object MergeSink {
       val existing = existingFor(spark, dataSchema, existingPaths)
         .getOrElse(spark.createDataFrame(
           spark.sparkContext.emptyRDD[Row], inc.schema))
-      val merged = merge(existing, inc).persist()
-      try {
-        // one dynamic-partition job writes every touched bucket. The
-        // stage dir must be FRESH: a replayed batch (foreachBatch is
-        // at-least-once) would otherwise overwrite — delete-first — the
-        // very files its merge plan is lazily reading as "existing".
-        // On replay/crash-leftovers the attempt suffix picks an unused
-        // dir; orphaned attempts are unreferenced by any snapshot and
-        // swept by expireSnapshots.
-        val ns = keyPrefix.split("/").head
-        val stageDir = Iterator.from(0)
-          .map(a => layer.dataDir(if (a == 0) s"$ns/b$batchId" else s"$ns/b$batchId-r$a"))
-          .find(p => !java.nio.file.Files.exists(p)).get
-        merged.write.partitionBy(BucketCol)
-          .mode("overwrite").parquet(stageDir.toString)
-        val counts = merged.groupBy(BucketCol).count()
-          .as[(String, Long)].collect().toMap
-        val added = buckets.toSeq.flatMap { b =>
-          val dir = stageDir.resolve(s"$BucketCol=$b")
-          if (!java.nio.file.Files.isDirectory(dir)) None
-          else {
-            val bytes = {
-              import scala.jdk.CollectionConverters._
-              val s = java.nio.file.Files.list(dir)
-              try s.iterator().asScala
-                .filter(p => java.nio.file.Files.isRegularFile(p))
-                .map(java.nio.file.Files.size).sum
-              finally s.close()
-            }
-            Some(PartitionMeta(keyPrefix + b, dir.toString,
-              counts.getOrElse(b, 0L), bytes, s"$lineageTag batch=$batchId"))
-          }
-        }
-        // merge-contract check: every TOUCHED bucket must re-appear in the
-        // merged output (the default mergers only grow or keep per-key
-        // rows). A merge that emptied a bucket writes no mbk= dir; without
-        // an explicit commit the STALE old partition would silently stay
-        // live — fail loudly, unless the caller declared a
-        // deletion-capable merge (allowEmptied), in which case the emptied
-        // buckets' keys are DROPPED in the same snapshot.
-        val written = added.map(_.key.stripPrefix(keyPrefix)).toSet
-        val vanished = buckets.filterNot(written.contains)
-        require(allowEmptied || vanished.isEmpty,
-          s"merge produced zero rows for touched bucket(s) ${vanished.mkString(",")} " +
-            "— a bucket-emptying merge needs an explicit empty-partition commit, " +
-            "which no current sink's merge can produce")
-        // one snapshot per batch; re-written keys are swapped, emptied
-        // keys (allowEmptied only) are dropped
-        layer.commit(added, added.map(_.key) ++ vanished.map(keyPrefix + _))
-        if (expireEvery > 0 && (batchId + 1) % expireEvery == 0)
-          layer.expireSnapshots(keepLast)
-      } finally merged.unpersist()
+      val merged = merge(existing, inc)
+      // one dynamic-partition job writes every touched bucket. The stage
+      // dir must be FRESH: a replayed batch (foreachBatch is at-least-once)
+      // would otherwise overwrite the very files its merge plan is lazily
+      // reading as "existing". Orphaned attempts are unreferenced by any
+      // snapshot and swept by expireSnapshots.
+      val ns = keyPrefix.split("/").head
+      val (added, vanished) = layer.writeStage(merged,
+        layer.freshDir(s"$ns/b$batchId"), BucketCol, buckets.toSeq,
+        keyPrefix + _, _ => s"$lineageTag batch=$batchId")
+      // merge-contract check: every TOUCHED bucket must re-appear in the
+      // merged output (the default mergers only grow or keep per-key
+      // rows). A merge that emptied a bucket writes no mbk= dir; without
+      // an explicit commit the STALE old partition would silently stay
+      // live — fail loudly, unless the caller declared a deletion-capable
+      // merge (allowEmptied), in which case the emptied buckets' keys are
+      // DROPPED in the same snapshot.
+      require(allowEmptied || vanished.isEmpty,
+        s"merge produced zero rows for touched bucket(s) ${vanished.mkString(",")} " +
+          "— a bucket-emptying merge needs an explicit empty-partition commit, " +
+          "which no current sink's merge can produce")
+      // one snapshot per batch; re-written keys are swapped, emptied keys
+      // (allowEmptied only) are dropped
+      layer.commit(added, added.map(_.key) ++ vanished.map(keyPrefix + _))
+      if (expireEvery > 0 && (batchId + 1) % expireEvery == 0)
+        layer.expireSnapshots(keepLast = 2)
     } finally inc.unpersist()
   }
 

@@ -177,9 +177,7 @@ object StreamingCrawlCorpus {
       case Nil => fresh
       case ds => spark.read.parquet(ds: _*).unionByName(fresh).distinct()
     }
-    val attempt = Iterator.from(0)
-      .map(a => ns.resolve(if (a == 0) s"b$batchId" else s"b$batchId-r$a"))
-      .find(p => !java.nio.file.Files.exists(p)).get
+    val attempt = layer.freshDir(s"corpus-affected/b$batchId")
     combined.coalesce(1).write.mode("overwrite").parquet(attempt.toString)
     val out = spark.read.parquet(attempt.toString).persist()
     out.count()

@@ -32,7 +32,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * `partitionKeySql` turns a layer key like "tier=1h/day=2024-01-03" into
   * the matching predicate; keys are the same strings ManifestTableLayer
-  * uses, so Pipeline/Retention code is layer-agnostic.
+  * uses.
   */
 class IcebergTableLayer(
     spark: SparkSession,

@@ -57,6 +57,41 @@ class ManifestTableLayer(rootDir: String) extends TableLayer {
 
   def dataDir(key: String): Path = root.resolve("data").resolve(key)
 
+  /** The first of `name`, `name-r1`, `name-r2`, ... under `data/` that
+    * does not exist yet: a stage dir no live partition and no earlier
+    * attempt of the same write lives in.
+    */
+  def freshDir(name: String): Path =
+    Iterator.from(0).map(i => dataDir(if (i == 0) name else s"$name-r$i"))
+      .find(p => !Files.exists(p)).get
+
+  /** Write `df` into `dir` in ONE `partitionBy(route)` job and describe
+    * the partitions it made: one meta per requested value `v` whose
+    * `dir/<route>=<v>` dir came out (key `keyOf(v)`, rows and bytes from
+    * [[ManifestTableLayer.dirStats]]), plus the requested values that
+    * produced no dir. The overwrite is dynamic for this write only: it
+    * replaces just the route dirs it writes, so partitions already in
+    * `dir` — committed or not — stay as they are. Values must be
+    * partition-path-safe (days, rendered numbers).
+    */
+  def writeStage(
+      df: DataFrame,
+      dir: Path,
+      route: String,
+      values: Seq[String],
+      keyOf: String => String,
+      lineageOf: String => String
+  ): (Seq[PartitionMeta], Seq[String]) = {
+    df.write.partitionBy(route).mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic").parquet(dir.toString)
+    val (made, missing) = values.partition(v => Files.isDirectory(dir.resolve(s"$route=$v")))
+    (made.map { v =>
+      val part = dir.resolve(s"$route=$v")
+      val (rows, bytes) = ManifestTableLayer.dirStats(part)
+      PartitionMeta(keyOf(v), part.toString, rows, bytes, lineageOf(v))
+    }, missing)
+  }
+
   private def currentSnapId(): Long =
     if (Files.exists(currentPtr)) Files.readString(currentPtr).trim.toLong else -1L
 
@@ -167,21 +202,6 @@ class ManifestTableLayer(rootDir: String) extends TableLayer {
 }
 
 object ManifestTableLayer {
-  /** Write one partition of `df` as an immutable dir + return its meta.
-    * `lineage` records what produced it (inputs + stage), per north rule.
-    */
-  def writePartition(
-      table: ManifestTableLayer,
-      df: DataFrame,
-      key: String,
-      lineage: String
-  ): PartitionMeta = {
-    val path = table.dataDir(key)
-    df.write.mode("overwrite").parquet(path.toString)
-    val (rows, bytes) = dirStats(path)
-    PartitionMeta(key, path.toString, rows, bytes, lineage)
-  }
-
   /** Rows and bytes of a written partition dir, taken on the driver from
     * the Parquet footers and the file sizes — no Spark job re-reads what
     * the write just produced (the Delta log's per-file stats, PAPERS.md).

@@ -145,6 +145,8 @@ class PipelineSpec extends AnyFunSuite {
     val tInc = new ManifestTableLayer(s"$base/inc")
     Pipeline.runRollup(spark, s"$base/pages80", tInc,
       Pipeline.listDays(spark, s"$base/pages80"), chunkMaxPoints = 128)
+    val built15 = tInc.currentPartitions()
+      .filter(_.key.startsWith("tier=15min/")).map(p => p.key -> p.path).toMap
     val refreshed = Pipeline.applyDelta(spark, all.filter(late), tInc,
       chunkMaxPoints = 128)
     assert(refreshed.nonEmpty)
@@ -174,12 +176,11 @@ class PipelineSpec extends AnyFunSuite {
     // copy-on-write: a refreshed day's tier partition lives in a FRESH
     // stage dir, the pre-delta dir survives for time travel
     val day0 = refreshed.head
-    val pm = tInc.currentPartitions()
-      .find(_.key == Pipeline.tierKey("15min", day0)).get
-    assert(pm.path != tInc.dataDir(Pipeline.tierKey("15min", day0)).toString,
+    val key0 = Pipeline.tierKey("15min", day0)
+    val pm = tInc.currentPartitions().find(_.key == key0).get
+    assert(pm.path != built15(key0),
       s"refresh must not overwrite in place: ${pm.path}")
-    assert(Files.exists(java.nio.file.Paths.get(
-      tInc.dataDir(Pipeline.tierKey("15min", day0)).toString)))
+    assert(Files.exists(java.nio.file.Paths.get(built15(key0))))
     // a delta that introduces an entirely NEW day builds fresh partitions
     val shifted = all.filter(late).withColumn("warc_ts",
       org.apache.spark.sql.functions.expr("warc_ts + INTERVAL 30 DAYS"))

@@ -410,7 +410,7 @@ class StreamingSpec extends AnyFunSuite {
     val base = Files.createTempDirectory(
       Paths.get("/root/repo/target"), "stream-jobs-").toString
     val layer = new graft.table.ManifestTableLayer(s"$base/table")
-    // 64 users over 16 buckets — every bucket touched
+    // 64 users over 16 buckets — 15 of them touched
     def batchDf(epoch: Long) = (0 until 64).map(u =>
         (u.toLong, u.toLong * 10 + epoch, epoch, "t", 100L))
       .toDF("user_id", "event_id", "epoch_us", "event_type", "cents")
@@ -425,26 +425,43 @@ class StreamingSpec extends AnyFunSuite {
       while (cur != prev) { Thread.sleep(250); prev = cur; cur = jobs.get() }
       cur
     }
+    // the live partitions after each batch, checked once the listener is off
+    val live = scala.collection.mutable.Buffer.empty[graft.table.PartitionMeta]
     spark.sparkContext.addSparkListener(listener)
     try {
-      // the merge is 3 queries (bucket discovery, partitioned write,
-      // per-bucket counts); AQE materializes each shuffle stage as its
-      // own job, so "O(1)" lands at ~8 — the per-bucket loop it replaced
-      // ran 2 jobs PER bucket (write + count re-read), >= 32 here
+      // the merge is 2 queries (bucket discovery, partitioned write);
+      // AQE materializes each shuffle stage as its own job, so "O(1)"
+      // lands at a handful — the per-bucket loop it replaced ran 2 jobs
+      // PER bucket (write + count re-read), >= 32 here
       StreamingRollup.mergeLatestBatch(spark, layer, batchDf(1L), 0L, nBuckets = 16)
       val fresh = settled()
+      live ++= layer.currentPartitions()
+      info(s"fresh-table merge: $fresh jobs")
       assert(fresh <= 10,
         s"fresh-table merge of 16 buckets must be O(1) jobs, ran $fresh")
       jobs.set(0)
       // second batch exercises the read-existing-partitions path
       StreamingRollup.mergeLatestBatch(spark, layer, batchDf(2L), 1L, nBuckets = 16)
       val upsert = settled()
+      live ++= layer.currentPartitions()
+      info(s"upsert merge: $upsert jobs")
       assert(upsert <= 10,
         s"upsert merge of 16 existing buckets must be O(1) jobs, ran $upsert")
     } finally spark.sparkContext.removeSparkListener(listener)
     // and the merge itself is right: every user at epoch 2
     assert(layer.read(spark).count() == 64)
     assert(layer.read(spark).filter(col("epoch_us") === 2).count() == 64)
+    // per-partition stats come from the written files, and match them
+    assert(live.size == 2 * layer.currentPartitions().size)
+    live.foreach { p =>
+      assert(p.rows == spark.read.parquet(p.path).count(), s"rows of ${p.key}")
+      val onDisk = {
+        val s = Files.walk(Paths.get(p.path))
+        try s.filter(Files.isRegularFile(_)).mapToLong(Files.size(_)).sum()
+        finally s.close()
+      }
+      assert(p.bytes == onDisk, s"bytes of ${p.key}")
+    }
   }
 
   test("MERGE sink reads hundreds of touched buckets as ONE multi-path scan, not a union chain") {

@@ -16,11 +16,19 @@ class TableLayerSpec extends AnyFunSuite {
 
   private def df(k: Int) = (1 to 10).map(i => (k, i)).toDF("k", "v")
 
+  /** `df(k)` written as the one partition `key`, in a fresh stage dir. */
+  private def write(t: ManifestTableLayer, k: Int, key: String): PartitionMeta = {
+    val (metas, missing) = t.writeStage(df(k).withColumn("p", lit("v")),
+      t.freshDir(key), "p", Seq("v"), _ => key, _ => "test")
+    assert(missing.isEmpty && metas.map(_.key) == Seq(key))
+    metas.head
+  }
+
   test("commit + read: snapshot sees exactly the committed partitions") {
     val t = new ManifestTableLayer(freshRoot())
-    val m1 = ManifestTableLayer.writePartition(t, df(1), "tier=x/day=d1", "test")
+    val m1 = write(t, 1, "tier=x/day=d1")
     t.commit(Seq(m1), Seq.empty)
-    val m2 = ManifestTableLayer.writePartition(t, df(2), "tier=x/day=d2", "test")
+    val m2 = write(t, 2, "tier=x/day=d2")
     t.commit(Seq(m2), Seq.empty)
     assert(t.read(spark).count() == 20)
     assert(t.currentPartitions().map(_.key).sorted ==
@@ -30,36 +38,38 @@ class TableLayerSpec extends AnyFunSuite {
 
   test("dropPartitions is a logical drop; data returns on no snapshot change") {
     val t = new ManifestTableLayer(freshRoot())
-    Seq("d1", "d2", "d3").foreach { d =>
-      val m = ManifestTableLayer.writePartition(t, df(1), s"tier=x/day=$d", "test")
+    val metas = Seq("d1", "d2", "d3").map { d =>
+      val m = write(t, 1, s"tier=x/day=$d")
       t.commit(Seq(m), Seq.empty)
+      m
     }
     t.dropPartitions(_.key.endsWith("d1"))
     assert(t.currentPartitions().map(_.key).sorted ==
       Seq("tier=x/day=d2", "tier=x/day=d3"))
     assert(t.read(spark).count() == 20)
     // physical file still on disk until expire (time travel window)
-    assert(Files.exists(t.dataDir("tier=x/day=d1")))
+    assert(Files.exists(java.nio.file.Paths.get(metas.head.path)))
   }
 
   test("expireSnapshots physically deletes unreferenced partitions only") {
     val t = new ManifestTableLayer(freshRoot())
-    Seq("d1", "d2").foreach { d =>
-      val m = ManifestTableLayer.writePartition(t, df(1), s"tier=x/day=$d", "test")
+    val Seq(m1, m2) = Seq("d1", "d2").map { d =>
+      val m = write(t, 1, s"tier=x/day=$d")
       t.commit(Seq(m), Seq.empty)
+      m
     }
     t.dropPartitions(_.key.endsWith("d1"))
     val deleted = t.expireSnapshots(keepLast = 1)
     assert(deleted == 1)
-    assert(!Files.exists(t.dataDir("tier=x/day=d1")))
-    assert(Files.exists(t.dataDir("tier=x/day=d2")))
+    assert(!Files.exists(java.nio.file.Paths.get(m1.path)))
+    assert(Files.exists(java.nio.file.Paths.get(m2.path)))
     assert(t.read(spark).count() == 10)
   }
 
   test("retention sweep drops only the raw tier below the cutoff") {
     val t = new ManifestTableLayer(freshRoot())
     for (tier <- Seq("15min", "1d"); d <- Seq("2024-01-01", "2024-01-05")) {
-      val m = ManifestTableLayer.writePartition(t, df(1), s"tier=$tier/day=$d", "test")
+      val m = write(t, 1, s"tier=$tier/day=$d")
       t.commit(Seq(m), Seq.empty)
     }
     Retention.sweep(t, "15min", "2024-01-04")
@@ -146,7 +156,7 @@ class TableLayerSpec extends AnyFunSuite {
 
     // replace-commit shape (the streaming MERGE path): added + removed on
     // the same key is ONE REPLACE WHERE statement covering exactly that key
-    val m = ManifestTableLayer.writePartition(t, df(9), "tier=1h/day=x", "test")
+    val m = write(t, 9, "tier=1h/day=x")
     t.commit(Seq(m), Seq("tier=1h/day=x"))
     assert(t.statements.last ==
       s"INSERT INTO $fq REPLACE WHERE (tier = '1h' AND day = 'x') " +
