@@ -345,17 +345,11 @@ object ChunkWriter {
       decode(scan.drop("part_id").as[FlatChunk]), tiers.head, maxPoints)
       .localCheckpoint()
     try {
-      val prev =
-        spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try {
-        rebuilt.toDF()
-          .withColumn("part_id",
-            pmod(xxhash64(col("series_flat")), lit(buckets)).cast("int"))
-          .write.mode("overwrite").partitionBy("part_id")
-          .parquet(s"$path/chunks")
-      } finally
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+      rebuilt.toDF()
+        .withColumn("part_id",
+          pmod(xxhash64(col("series_flat")), lit(buckets)).cast("int"))
+        .write.mode("overwrite").partitionBy("part_id")
+        .option("partitionOverwriteMode", "dynamic").parquet(s"$path/chunks")
       // swap the affected index rows; kept rows are bounded (<= buckets x
       // tiers), collected BEFORE the overwrite of the directory they come
       // from

@@ -1,8 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 import java.nio.file.Path
 import graft.ingest.Pages
 import graft.rollup.TimeSeriesOps
@@ -195,7 +194,7 @@ object Pipeline {
       val stored15 = touchedPaths(d => tierKey("15min", d))
       val base15 =
         if (stored15.isEmpty) d15
-        else spark.read.parquet(stored15: _*).select(tierCols.map(col): _*)
+        else ManifestTableLayer.readPartitions(spark, stored15).select(tierCols.map(col): _*)
           .unionByName(d15)
       val merged15 = base15
         .groupBy(col("domain"), col("metric"), col("bucket_ts"))
@@ -336,9 +335,6 @@ object Pipeline {
     def keyOf(day: String): String = s"$ns/day=$day"
   }
 
-  private val TierSchema = StructType.fromDDL(
-    "domain STRING, metric STRING, bucket_ts BIGINT, n BIGINT, sum_v DOUBLE, mean_v DOUBLE")
-
   /** bucket start (epoch s) -> day, for routing rows into day partitions
     * (windows never span days, so this is exact)
     */
@@ -369,21 +365,20 @@ object Pipeline {
     val files = spark.sessionState.conf.numShufflePartitions
     def laidOut(df: DataFrame, key: String) =
       df.repartition(files, col("_day"), col(key))
-    // one snapshot read per stage (not per day); the explicit schema saves
-    // the footer-inference job a schema-less read would run
-    def stored(schema: StructType, keyOf: String => String, days: Seq[String]) = {
+    // one snapshot read per stage (not per day), schema from the footers
+    def stored(keyOf: String => String, days: Seq[String]) = {
       val cur = table.currentPartitions().map(p => p.key -> p.path).toMap
-      spark.read.schema(schema).parquet(days.map(d => cur(keyOf(d))): _*)
+      ManifestTableLayer.readPartitions(spark, days.map(d => cur(keyOf(d))))
     }
     val t15 = Stage("tier=15min", "15min", days =>
       laidOut(tier15(days).withColumn("_day", dayOf("bucket_ts")), "domain"))
     val chained = Tiers.sliding(2).map { case Seq((child, _), (tier, period)) =>
       Stage(s"tier=$tier", s"$tier<-$child", days => laidOut(
-        TimeSeriesOps.chainTier(stored(TierSchema, tierKey(child, _), days),
+        TimeSeriesOps.chainTier(stored(tierKey(child, _), days),
           seriesCols, period).withColumn("_day", dayOf("bucket_ts")), "domain"))
     }.toSeq
     val chunks = Stage("chunks-15min", "chunks-15min<-15min", days => {
-      val flat = stored(TierSchema, tierKey("15min", _), days).select(
+      val flat = stored(tierKey("15min", _), days).select(
         dayOf("bucket_ts").as("pkey"),
         concat_ws("_", col("domain"), col("metric")).as("series_flat"),
         col("bucket_ts").as("ts"), col("mean_v").as("value"))
@@ -391,8 +386,7 @@ object Pipeline {
         .withColumnRenamed("pkey", "_day")
     })
     val index = Stage("index-15min", "index-15min<-chunks-15min", days => {
-      val keyed = stored(Encoders.product[ChunkWriter.FlatChunk].schema,
-        chunkKey("15min", _), days).withColumn("pkey", dayOf("t0"))
+      val keyed = stored(chunkKey("15min", _), days).withColumn("pkey", dayOf("t0"))
       laidOut(ChunkWriter.buildIndexKeyed(keyed, indexBuckets)
         .withColumnRenamed("pkey", "_day"), "part_id")
     })
@@ -417,12 +411,15 @@ object Pipeline {
     metas
   }
 
-  /** Read one full tier back from the table (all live day partitions). */
+  /** Read one full tier back from the table (all live day partitions),
+    * through [[ManifestTableLayer.readPartitions]]: no Spark job runs
+    * before the caller's action.
+    */
   def readTier(spark: SparkSession, table: ManifestTableLayer, tier: String): DataFrame = {
     val prefix = s"tier=$tier/"
     val parts = table.currentPartitions().filter(_.key.startsWith(prefix))
     require(parts.nonEmpty, s"no live partitions for tier $tier")
-    spark.read.parquet(parts.map(_.path): _*)
+    ManifestTableLayer.readPartitions(spark, parts.map(_.path))
   }
 
   /** Retention: drop raw 15-min partitions (and their chunk/index

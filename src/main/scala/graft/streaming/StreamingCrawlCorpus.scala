@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.ingest.Warc
+import graft.table.ManifestTableLayer
 import graft.web.Web
 
 /** The streaming crawl-to-corpus capstone: S9s -> T28 -> T21 as ONE
@@ -47,7 +48,7 @@ object StreamingCrawlCorpus {
   /** One micro-batch: pages upsert + incremental corpus recount. */
   def mergeCrawlBatch(
       spark: SparkSession,
-      layer: graft.table.ManifestTableLayer,
+      layer: ManifestTableLayer,
       batch: DataFrame, // (url, epoch_s, text)
       batchId: Long,
       nBuckets: Int,
@@ -81,7 +82,7 @@ object StreamingCrawlCorpus {
       val preParts = partsOf("pages/bucket=", urlBuckets)
       val oldMd5 =
         if (preParts.isEmpty) rows.select("text_md5").limit(0)
-        else spark.read.parquet(preParts: _*)
+        else ManifestTableLayer.readPartitions(spark, preParts)
           .join(rows.select("url").distinct(), Seq("url"), "left_semi")
           .select("text_md5")
       val freshAffected = oldMd5.unionByName(rows.select("text_md5")).distinct()
@@ -105,8 +106,8 @@ object StreamingCrawlCorpus {
         // deletions empty commits as a dropped partition (allowEmptied).
         // Replay-safe: urlTruth re-derives from the idempotent pages
         // table; delete-then-insert converges on any replay.
-        val urlTruth = spark.read
-          .parquet(partsOf("pages/bucket=", urlBuckets): _*)
+        val urlTruth = ManifestTableLayer
+          .readPartitions(spark, partsOf("pages/bucket=", urlBuckets))
           .join(rows.select("url").distinct(), Seq("url"), "left_semi")
           .select(col("url"), col("text_md5"), col("n_tokens"))
           .withColumn(MergeSink.BucketCol, md5Bucket)
@@ -125,7 +126,7 @@ object StreamingCrawlCorpus {
         val members =
           if (compParts.isEmpty)
             rows.select("url", "text_md5", "n_tokens").limit(0)
-          else spark.read.parquet(compParts: _*)
+          else ManifestTableLayer.readPartitions(spark, compParts)
         val recounts = members.join(broadcast(affected), "text_md5")
           .groupBy(col("text_md5"))
           .agg(min(col("url")).as("url"), count(lit(1)).as("n_copies"),
@@ -159,7 +160,7 @@ object StreamingCrawlCorpus {
     */
   private def persistAffected(
       spark: SparkSession,
-      layer: graft.table.ManifestTableLayer,
+      layer: ManifestTableLayer,
       fresh: DataFrame,
       batchId: Long
   ): DataFrame = {
@@ -196,9 +197,9 @@ object StreamingCrawlCorpus {
       maxFilesPerTrigger: Int = 0,
       nBuckets: Int = 16,
       expireEvery: Int = 8
-  ): graft.table.ManifestTableLayer = {
+  ): ManifestTableLayer = {
     import spark.implicits._
-    val layer = new graft.table.ManifestTableLayer(tableRoot)
+    val layer = new ManifestTableLayer(tableRoot)
     // binaryFile's schema is FIXED (path, modificationTime, length,
     // content) — declaring it directly avoids the batch-read probe that
     // throws on a not-yet-populated landing dir (the StreamingAnn
@@ -246,13 +247,13 @@ object StreamingCrawlCorpus {
     */
   def corpus(
       spark: SparkSession,
-      layer: graft.table.ManifestTableLayer,
+      layer: ManifestTableLayer,
       minTokens: Long
   ): DataFrame = {
     val parts = layer.currentPartitions()
       .filter(_.key.startsWith("corpus/bucket=")).map(_.path)
     require(parts.nonEmpty, "corpus table has no live partitions")
-    spark.read.parquet(parts: _*)
+    ManifestTableLayer.readPartitions(spark, parts)
       .filter(col("n_copies") > 0 && col("n_tokens") >= minTokens)
       .select("url", "text_md5", "n_copies", "n_tokens")
   }

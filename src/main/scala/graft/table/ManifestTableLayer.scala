@@ -5,8 +5,12 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
+import org.apache.parquet.ParquetReadOptions
+import org.apache.parquet.conf.PlainParquetConfiguration
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.io.LocalInputFile
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Snapshot-isolated table layout over plain Parquet directories — the
   * local stand-in for Iceberg (no Iceberg jar ships offline; on a real
@@ -158,18 +162,25 @@ class ManifestTableLayer(rootDir: String) extends TableLayer {
     readSnap(snapId)
   }
 
-  /** Read the table AS OF snapshot `snapId` (optionally one key prefix). */
+  /** Read the table AS OF snapshot `snapId` (optionally one key prefix),
+    * through [[ManifestTableLayer.readPartitions]]: no Spark job runs
+    * before the caller's action.
+    */
   def readAt(spark: SparkSession, snapId: Long, keyPrefix: String = ""): DataFrame = {
     val parts = partitionsAt(snapId).filter(_.key.startsWith(keyPrefix))
     require(parts.nonEmpty,
       s"snapshot $snapId has no partitions with prefix '$keyPrefix'")
-    spark.read.parquet(parts.map(_.path): _*)
+    ManifestTableLayer.readPartitions(spark, parts.map(_.path))
   }
 
+  /** Read every live partition, through
+    * [[ManifestTableLayer.readPartitions]]: no Spark job runs before the
+    * caller's action.
+    */
   override def read(spark: SparkSession): DataFrame = {
     val parts = currentPartitions()
     require(parts.nonEmpty, s"table $rootDir has no live partitions")
-    spark.read.parquet(parts.map(_.path): _*)
+    ManifestTableLayer.readPartitions(spark, parts.map(_.path))
   }
 
   override def dropPartitions(pred: PartitionMeta => Boolean): Long = {
@@ -202,20 +213,56 @@ class ManifestTableLayer(rootDir: String) extends TableLayer {
 }
 
 object ManifestTableLayer {
+  /** One set of Parquet read options for every footer this store opens,
+    * over parquet's plain (non-Hadoop) configuration. An open without
+    * options builds a fresh Hadoop `Configuration` and parses its XML
+    * defaults, which costs an order of magnitude more than reading the
+    * footer itself. Sharing is safe only because these readers never
+    * read a page: every `close` releases the options' codec factory, which
+    * then never holds a codec.
+    */
+  private val footerOptions =
+    ParquetReadOptions.builder(new PlainParquetConfiguration()).build()
+
+  private def isDataFile(f: Path): Boolean = f.getFileName.toString.endsWith(".parquet")
+
+  private def footer[T](f: Path)(get: ParquetFileReader => T): T = {
+    val r = ParquetFileReader.open(new LocalInputFile(f), footerOptions)
+    try get(r) finally r.close()
+  }
+
   /** Rows and bytes of a written partition dir, taken on the driver from
-    * the Parquet footers and the file sizes — no Spark job re-reads what
-    * the write just produced (the Delta log's per-file stats, PAPERS.md).
+    * the Parquet footers (opened with the shared footer options) and the
+    * file sizes — no Spark job re-reads what the write just produced (the
+    * Delta log's per-file stats, PAPERS.md).
     */
   def dirStats(dir: Path): (Long, Long) = {
     val files = {
       val s = Files.walk(dir)
       try s.iterator().asScala.filter(Files.isRegularFile(_)).toSeq finally s.close()
     }
-    val rows = files.filter(_.getFileName.toString.endsWith(".parquet")).map { f =>
-      val r = ParquetFileReader.open(new LocalInputFile(f))
-      try r.getRecordCount finally r.close()
-    }.sum
+    val rows = files.filter(isDataFile).map(footer(_)(_.getRecordCount)).sum
     (rows, files.map(Files.size).sum)
+  }
+
+  /** Read stored partition dirs as one frame, with the schema Spark wrote
+    * into the footer of the first path's first data file (every partition
+    * here is written by Spark's Parquet writer). A schema-less read would
+    * run a Spark job to infer that same schema; this one runs no job
+    * until the caller's action.
+    */
+  def readPartitions(spark: SparkSession, paths: Seq[String]): DataFrame = {
+    require(paths.nonEmpty, "no partitions to read")
+    val first = {
+      val s = Files.list(Paths.get(paths.head))
+      try s.iterator().asScala.find(isDataFile)
+        .getOrElse(sys.error(s"${paths.head} holds no Parquet file"))
+      finally s.close()
+    }
+    val json = footer(first)(
+      _.getFileMetaData.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
+    require(json != null, s"$first carries no Spark schema")
+    spark.read.schema(DataType.fromJson(json).asInstanceOf[StructType]).parquet(paths: _*)
   }
 
   /** Delete `p` and everything under it. */

@@ -16,6 +16,7 @@ import java.nio.file.Files
 class PipelineSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
+  import SparkTestSession.jobsOf
 
   private lazy val root = Files.createTempDirectory(
     java.nio.file.Paths.get("/root/repo/target"), "pipe-test-").toString
@@ -31,25 +32,6 @@ class PipelineSpec extends AnyFunSuite {
     Pipeline.runRollup(spark, pagesPath, table = t, days = days,
       chunkMaxPoints = 128)
     t
-  }
-
-  /** Runs `body` and counts the Spark jobs it started. */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    // listener events arrive asynchronously: wait until the count settles
-    def settled(): Int = {
-      var prev = -1; var cur = jobs.get()
-      while (cur != prev) { Thread.sleep(250); prev = cur; cur = jobs.get() }
-      cur
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try { val r = body; (r, settled()) }
-    finally spark.sparkContext.removeSparkListener(listener)
   }
 
   /** Per partition key: row count and the sum of xxhash64 over every column

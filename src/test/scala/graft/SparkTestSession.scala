@@ -22,4 +22,23 @@ object SparkTestSession {
     s
   }
   val sf0001 = "/root/testdata/sf0.001"
+
+  /** Runs `body` and counts the Spark jobs it started. */
+  def jobsOf[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    // listener events arrive asynchronously: wait until the count settles
+    def settled(): Int = {
+      var prev = -1; var cur = jobs.get()
+      while (cur != prev) { Thread.sleep(250); prev = cur; cur = jobs.get() }
+      cur
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try { val r = body; (r, settled()) }
+    finally spark.sparkContext.removeSparkListener(listener)
+  }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.table.{ManifestTableLayer, PartitionMeta}
 import graft.retention.Retention
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 class TableLayerSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -76,6 +77,55 @@ class TableLayerSpec extends AnyFunSuite {
     assert(t.currentPartitions().map(_.key).sorted == Seq(
       "tier=15min/day=2024-01-05",
       "tier=1d/day=2024-01-01", "tier=1d/day=2024-01-05"))
+  }
+
+  /** 600 rows over three `_day` routes, in four round-robin tasks: each
+    * day dir gets four data files, as a build stage's day dirs do.
+    */
+  private def stage(t: ManifestTableLayer, ns: String): Seq[PartitionMeta] = {
+    val days = Seq("2024-01-01", "2024-01-02", "2024-01-03")
+    val frame = (0 until 600).map(i => (i, i.toLong * 7, s"s$i", days(i % 3)))
+      .toDF("k", "v", "s", "_day").repartition(4)
+    val (metas, missing) = t.writeStage(frame, t.dataDir(s"$ns/build"), "_day", days,
+      d => s"$ns/day=$d", _ => "test")
+    assert(missing.isEmpty && metas.size == days.size)
+    metas
+  }
+
+  test("writeStage footer stats match every day dir of a multi-file stage") {
+    val t = new ManifestTableLayer(freshRoot())
+    stage(t, "tier=15min").foreach { m =>
+      val files = {
+        val s = Files.walk(java.nio.file.Paths.get(m.path))
+        try s.iterator().asScala.filter(Files.isRegularFile(_)).toSeq finally s.close()
+      }
+      assert(files.count(_.getFileName.toString.endsWith(".parquet")) > 1,
+        s"${m.key} should hold several data files")
+      assert(m.rows == spark.read.parquet(m.path).count(), s"rows of ${m.key}")
+      assert(m.bytes == files.map(Files.size).sum, s"bytes of ${m.key}")
+    }
+  }
+
+  test("read, readAt and readTier take the footer schema: no Spark job before the action") {
+    import graft.pipeline.Pipeline
+    import SparkTestSession.jobsOf
+    val t = new ManifestTableLayer(freshRoot())
+    val m15 = stage(t, "tier=15min")
+    t.commit(m15, Seq.empty)
+    val snap = t.currentSnapshotId()
+    t.commit(stage(t, "tier=1h"), Seq.empty)
+    val cases = Seq(
+      "read" -> (() => t.read(spark), t.currentPartitions().map(_.path)),
+      "readAt" -> (() => t.readAt(spark, snap, "tier=15min/"), m15.map(_.path)),
+      "readTier" -> (() => Pipeline.readTier(spark, t, "15min"), m15.map(_.path)))
+    cases.foreach { case (name, (build, paths)) =>
+      val (got, jobs) = jobsOf(build())
+      assert(jobs == 0, s"$name ran $jobs Spark job(s) before any action")
+      val ref = spark.read.parquet(paths: _*)
+      assert(got.schema == ref.schema, s"$name schema")
+      assert(got.collect().map(_.toString).sorted.toSeq ==
+        ref.collect().map(_.toString).sorted.toSeq, s"$name rows")
+    }
   }
 
   test("Iceberg contract: Pipeline drives the exact DELETE/overwrite/expire sequence") {
