@@ -55,7 +55,9 @@ object Bench {
     val domains = sys.env.getOrElse("SPARK_GRAFT_BENCH_DOMAINS", "9973").toInt
     val stagesOnly = sys.env.contains("SPARK_GRAFT_STAGES_ONLY")
     val sfName = sfDir.replaceAll(".*/", "")
-    val benchRoot = s"/root/repo/target/bench/${sfName}_r${repl}_d${days}_m$domains"
+    // under the working dir's target/, so a run from a copy writes into the copy
+    val benchRoot = java.nio.file.Paths.get(System.getProperty("user.dir"), "target", "bench",
+      s"${sfName}_r${repl}_d${days}_m$domains").toString
     val pagesPath = s"$benchRoot/pages"
 
     // ---- warm-up: session + codegen + fixture file listing --------------

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.collection.mutable.ArrayBuffer
+import graft.table.NioLocalFileSystem
 
 /** Spark integration for the Gorilla codec: tier points -> chunk blobs and
   * back, plus the delta-encoded per-partition index the north rule asks for.
@@ -345,10 +346,10 @@ object ChunkWriter {
       decode(scan.drop("part_id").as[FlatChunk]), tiers.head, maxPoints)
       .localCheckpoint()
     try {
-      rebuilt.toDF()
+      NioLocalFileSystem.write(rebuilt.toDF()
         .withColumn("part_id",
-          pmod(xxhash64(col("series_flat")), lit(buckets)).cast("int"))
-        .write.mode("overwrite").partitionBy("part_id")
+          pmod(xxhash64(col("series_flat")), lit(buckets)).cast("int")))
+        .mode("overwrite").partitionBy("part_id")
         .option("partitionOverwriteMode", "dynamic").parquet(s"$path/chunks")
       // swap the affected index rows; kept rows are bounded (<= buckets x
       // tiers), collected BEFORE the overwrite of the directory they come
@@ -357,8 +358,8 @@ object ChunkWriter {
         .collect()
       val keptDf = spark.createDataFrame(
         java.util.Arrays.asList(keptRows: _*), idx.toDF().schema)
-      keptDf.unionByName(buildIndex(rebuilt, buckets).toDF())
-        .write.mode("overwrite").parquet(s"$path/index")
+      NioLocalFileSystem.write(keptDf.unionByName(buildIndex(rebuilt, buckets).toDF()))
+        .mode("overwrite").parquet(s"$path/index")
     } finally rebuilt.unpersist(false)
     affected
   }

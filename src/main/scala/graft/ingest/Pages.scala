@@ -2,6 +2,7 @@ package graft.ingest
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.table.NioLocalFileSystem
 
 /** Synthesis + ingestion of the engine's canonical input: an Iceberg-shaped
   * table of Common-Crawl-style web pages
@@ -136,13 +137,14 @@ object Pages {
   /** Write the pages table the way the 100 TB layout would be organized:
     * partitioned by (bucket = url-hash % B, day) — bucket kills hot-domain
     * skew at the storage layer, day gives time-range partition pruning.
+    * Written through [[NioLocalFileSystem]].
     */
   def writePartitioned(pages: DataFrame, outPath: String, buckets: Int): Unit = {
-    pages
+    NioLocalFileSystem.write(pages
       .withColumn("bucket", pmod(xxhash64(col("url")), lit(buckets)).cast("int"))
       .withColumn("day", to_date(col("warc_ts")))
-      .repartition(col("bucket"), col("day"))
-      .write.mode("overwrite")
+      .repartition(col("bucket"), col("day")))
+      .mode("overwrite")
       .partitionBy("bucket", "day")
       .parquet(outPath)
   }

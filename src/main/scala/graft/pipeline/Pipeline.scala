@@ -6,7 +6,7 @@ import java.nio.file.Path
 import graft.ingest.Pages
 import graft.rollup.TimeSeriesOps
 import graft.chunk.ChunkWriter
-import graft.table.{ManifestTableLayer, PartitionMeta}
+import graft.table.{ManifestTableLayer, NioLocalFileSystem, PartitionMeta}
 import graft.checkpoint.Checkpoint
 import graft.retention.Retention
 
@@ -256,7 +256,7 @@ object Pipeline {
         col("day").cast("string").isin(days: _*))
       .filter(!col("url").isin(urls: _*))
       .localCheckpoint() // materialized BEFORE the overwrite deletes its own input files
-    patched.write.mode("overwrite").partitionBy("bucket", "day")
+    NioLocalFileSystem.write(patched).mode("overwrite").partitionBy("bucket", "day")
       .option("partitionOverwriteMode", "dynamic").parquet(pagesPath)
     // a (bucket, day) partition the erasure emptied ENTIRELY gets no dir
     // from the dynamic overwrite — its stale pre-forget files must go

@@ -9,11 +9,13 @@ import java.nio.file.{Files, Paths}
   * oracle string interpolating [[dir]] always points at the store this
   * run wrote — while two CONCURRENT Verify/Bench runs land in different
   * roots and can no longer corrupt each other's stores (round-3 verdict,
-  * "What's wrong" #3: fixed `/root/repo/target/verify_tmp/<name>` paths).
+  * "What's wrong" #3: fixed `target/verify_tmp/<name>` paths). The base
+  * is `target/verify_tmp` under the JVM's working dir, so a run from a
+  * copy of the checkout writes into the copy.
   */
 object Scratch {
   lazy val root: String = {
-    val base = Paths.get("/root/repo/target/verify_tmp")
+    val base = Paths.get(System.getProperty("user.dir"), "target", "verify_tmp")
     Files.createDirectories(base)
     // sweep STALE roots left by previous runs (they otherwise accumulate
     // a full store set per Verify/Bench invocation forever). Age-gated —

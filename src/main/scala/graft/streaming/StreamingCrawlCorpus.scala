@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.ingest.Warc
-import graft.table.ManifestTableLayer
+import graft.table.{ManifestTableLayer, NioLocalFileSystem}
 import graft.web.Web
 
 /** The streaming crawl-to-corpus capstone: S9s -> T28 -> T21 as ONE
@@ -176,11 +176,11 @@ object StreamingCrawlCorpus {
     }
     val combined = prevDirs match {
       case Nil => fresh
-      case ds => spark.read.parquet(ds: _*).unionByName(fresh).distinct()
+      case ds => ManifestTableLayer.readPartitions(spark, ds).unionByName(fresh).distinct()
     }
-    val attempt = layer.freshDir(s"corpus-affected/b$batchId")
-    combined.coalesce(1).write.mode("overwrite").parquet(attempt.toString)
-    val out = spark.read.parquet(attempt.toString).persist()
+    val attempt = layer.freshDir(s"corpus-affected/b$batchId").toString
+    NioLocalFileSystem.write(combined.coalesce(1)).mode("overwrite").parquet(attempt)
+    val out = ManifestTableLayer.readPartitions(spark, Seq(attempt)).persist()
     out.count()
     out
   }

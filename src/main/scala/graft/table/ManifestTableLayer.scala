@@ -76,7 +76,8 @@ class ManifestTableLayer(rootDir: String) extends TableLayer {
     * produced no dir. The overwrite is dynamic for this write only: it
     * replaces just the route dirs it writes, so partitions already in
     * `dir` — committed or not — stay as they are. Values must be
-    * partition-path-safe (days, rendered numbers).
+    * partition-path-safe (days, rendered numbers). Local dirs and files
+    * are made through [[NioLocalFileSystem]], with no `chmod` process.
     */
   def writeStage(
       df: DataFrame,
@@ -86,7 +87,7 @@ class ManifestTableLayer(rootDir: String) extends TableLayer {
       keyOf: String => String,
       lineageOf: String => String
   ): (Seq[PartitionMeta], Seq[String]) = {
-    df.write.partitionBy(route).mode("overwrite")
+    NioLocalFileSystem.write(df).partitionBy(route).mode("overwrite")
       .option("partitionOverwriteMode", "dynamic").parquet(dir.toString)
     val (made, missing) = values.partition(v => Files.isDirectory(dir.resolve(s"$route=$v")))
     (made.map { v =>

@@ -89,7 +89,7 @@ class AnnSpec extends AnyFunSuite {
   test("materialized IVF index: probe equals direct path and scans only nProbe cell partitions") {
     import org.apache.spark.sql.functions._
     val emb = spark.read.parquet(s"${SparkTestSession.sf0001}/embeddings.parquet")
-    val path = "/root/repo/target/test_tmp/ivf_index"
+    val path = SparkTestSession.tmpDir("ivf-index-").resolve("index").toString
     Ann.writeIvfIndex(emb, "vec_id", "embedding", path, nCentroids = 20)
     val qv = emb.filter(col("vec_id") === 0L)
       .select("embedding").head().getSeq[Float](0).toArray
@@ -293,12 +293,7 @@ class AnnSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     import scala.jdk.CollectionConverters._
     val emb = spark.read.parquet(s"${SparkTestSession.sf0001}/embeddings.parquet")
-    val path = "/root/repo/target/test_tmp/ivf_append_spec"
-    val p = java.nio.file.Paths.get(path)
-    if (java.nio.file.Files.exists(p)) {
-      java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(java.nio.file.Files.delete)
-    }
+    val path = SparkTestSession.tmpDir("ivf-append-").resolve("index").toString
     Ann.writeIvfIndex(emb.filter(col("vec_id") % 3 =!= 0),
       "vec_id", "embedding", path, nCentroids = 20)
     def cellFiles() = {
@@ -343,12 +338,7 @@ class AnnSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     import scala.jdk.CollectionConverters._
     val emb = spark.read.parquet(s"${SparkTestSession.sf0001}/embeddings.parquet")
-    val root = "/root/repo/target/test_tmp/ivf_stream_spec"
-    val p = java.nio.file.Paths.get(root)
-    if (java.nio.file.Files.exists(p)) {
-      java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(java.nio.file.Files.delete)
-    }
+    val root = SparkTestSession.tmpDir("ivf-stream-").toString
     val path = s"$root/index"
     Ann.writeIvfIndex(emb.filter(col("vec_id") % 3 =!= 0),
       "vec_id", "embedding", path, nCentroids = 20)

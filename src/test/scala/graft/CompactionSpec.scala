@@ -19,7 +19,7 @@ class CompactionSpec extends AnyFunSuite {
     }.toDF("series_flat", "ts", "value")
 
   test("compactStore merges small chunks copy-on-write, content bitwise-stable") {
-    val store = "/root/repo/target/test_tmp/compact_store"
+    val store = SparkTestSession.tmpDir("compact-store-").toString
     val buckets = 8
     // fragmented group (50 chunks/series) + healthy group (5 chunks/series)
     val frag = ChunkWriter.build(

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ingest.CsvSource
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 /** S2 parity tests: EU decimal-comma numbers, multi-row headers,
   * coerce-to-null, ISO timestamps (OPSD read.py parser semantics).
@@ -12,7 +12,7 @@ class CsvSourceSpec extends AnyFunSuite {
   import spark.implicits._
 
   private lazy val csvPath = {
-    val dir = Files.createTempDirectory(Paths.get("/root/repo/target"), "csv-test-")
+    val dir = SparkTestSession.tmpDir("csv-test-")
     val f = dir.resolve("tso.csv")
     Files.writeString(f,
       """timestamp;DE_load;DE_wind
@@ -46,7 +46,7 @@ class CsvSourceSpec extends AnyFunSuite {
   }
 
   test("a data row textually equal to a header line survives (positional drop)") {
-    val dir = Files.createTempDirectory(Paths.get("/root/repo/target"), "csv-test-")
+    val dir = SparkTestSession.tmpDir("csv-test-")
     val f = dir.resolve("evil.csv")
     // row 3's content equals the first header line byte-for-byte
     Files.writeString(f,
@@ -65,7 +65,7 @@ class CsvSourceSpec extends AnyFunSuite {
     * 02:00–02:59 occur twice (CEST +2 then CET +1).
     */
   private lazy val dstCsvPath = {
-    val dir = Files.createTempDirectory(Paths.get("/root/repo/target"), "csv-dst-")
+    val dir = SparkTestSession.tmpDir("csv-dst-")
     val f = dir.resolve("local.csv")
     Files.writeString(f,
       """timestamp;DE_load
@@ -93,7 +93,7 @@ class CsvSourceSpec extends AnyFunSuite {
     * zone's rules, not hardcoded to an hour.
     */
   private lazy val lordHoweCsvPath = {
-    val dir = Files.createTempDirectory(Paths.get("/root/repo/target"), "csv-lh-")
+    val dir = SparkTestSession.tmpDir("csv-lh-")
     val f = dir.resolve("local.csv")
     Files.writeString(f,
       """timestamp;LH_load

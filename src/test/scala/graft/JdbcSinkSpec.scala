@@ -2,7 +2,6 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths}
 
 /** S7 parity (reference `df.to_sql` SQLite sink): `df.write.jdbc` of a
   * rolled-up tier into an embedded database, read back via the same JDBC
@@ -23,7 +22,7 @@ class JdbcSinkSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
   test("tier write.jdbc -> read.jdbc round-trips bitwise") {
-    val dbDir = Files.createTempDirectory(Paths.get("/root/repo/target"), "jdbc-test-")
+    val dbDir = SparkTestSession.tmpDir("jdbc-test-")
     val url = s"jdbc:derby:$dbDir/sink;create=true"
 
     val tier = spark.read

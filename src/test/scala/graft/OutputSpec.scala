@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.output.{Metadata, OutputShapes}
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 class OutputSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -67,7 +67,7 @@ class OutputSpec extends AnyFunSuite {
     assert(headers(5) == "unit,,MW,MW")
     assert(headers(6) ==
       "utc_timestamp,cet_cest_timestamp,a_load_actual_test_MW,b_load_actual_test_MW")
-    val file = "/root/repo/target/test_tmp/multiindex.csv"
+    val file = SparkTestSession.tmpDir("multiindex-").resolve("multiindex.csv").toString
     OutputShapes.writeMultiIndexCsv(body, headers, file)
     // golden checksum: the full file (header block + DST-aware body) is
     // byte-stable across runs and partitionings
@@ -83,7 +83,7 @@ class OutputSpec extends AnyFunSuite {
   }
 
   test("datapackage descriptor pins file checksums that re-verify") {
-    val dir = Files.createTempDirectory(Paths.get("/root/repo/target"), "export-")
+    val dir = SparkTestSession.tmpDir("export-")
     OutputShapes.writeCsv(
       OutputShapes.stacked(tier, col("series_flat"), "ts", "v")
         .orderBy("series", "utc_timestamp").coalesce(1),

@@ -18,8 +18,7 @@ class PipelineSpec extends AnyFunSuite {
   import spark.implicits._
   import SparkTestSession.jobsOf
 
-  private lazy val root = Files.createTempDirectory(
-    java.nio.file.Paths.get("/root/repo/target"), "pipe-test-").toString
+  private lazy val root = SparkTestSession.tmpDir("pipe-test-").toString
   private lazy val pagesPath = s"$root/pages"
   private lazy val table: ManifestTableLayer = {
     Pages.writePartitioned(
@@ -116,8 +115,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("applyDelta: incremental refresh equals full rebuild on every tier + chunk store") {
-    val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "pipe-delta-").toString
+    val base = SparkTestSession.tmpDir("pipe-delta-").toString
     val all = Pages.synthesize(spark, SparkTestSession.sf0001)
       .select("url", "warc_ts", "html", "text", "lang")
     val late = org.apache.spark.sql.functions.regexp_extract(
@@ -173,8 +171,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("applyDelta job count is O(tiers), independent of how many days the delta spans") {
-    val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "pipe-djobs-").toString
+    val base = SparkTestSession.tmpDir("pipe-djobs-").toString
     // 14 days of pages: the 7-day fixture plus a +7d shifted copy
     val week = Pages.synthesize(spark, SparkTestSession.sf0001)
       .select("url", "warc_ts", "html", "text", "lang")
@@ -236,6 +233,15 @@ class PipelineSpec extends AnyFunSuite {
     assert(j14 <= j7 + 2, s"14-day build ran $j14 jobs vs $j7 for 7 days")
   }
 
+  test("a fresh runRollup starts no child process") {
+    assert(table.currentPartitions().nonEmpty) // the shared build wrote the pages
+    val t = new ManifestTableLayer(SparkTestSession.tmpDir("pipe-proc-").toString)
+    val (_, started) = SparkTestSession.processesOf(Pipeline.runRollup(spark, pagesPath, t,
+      Pipeline.listDays(spark, pagesPath), chunkMaxPoints = 128))
+    assert(started.isEmpty, s"runRollup started ${started.size} process(es), e.g. " +
+      started.toSeq.sorted.take(3).mkString("; "))
+  }
+
   test("crash + resume + expire: no orphan dirs, equals a fresh build") {
     val fresh = table // the uninterrupted build of the same pages
     val root2 = Files.createTempDirectory(
@@ -268,8 +274,7 @@ class PipelineSpec extends AnyFunSuite {
   test("sweep drops raw + chunks + index below cutoff; aggregates intact") {
     // run on a copy-table (fresh manifest root, same data dirs would be
     // mutated) — rebuild quickly instead
-    val root2 = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "pipe-sweep-").toString
+    val root2 = SparkTestSession.tmpDir("pipe-sweep-").toString
     val t2 = new ManifestTableLayer(s"$root2/table")
     Pipeline.runRollup(spark, pagesPath, t2,
       Pipeline.listDays(spark, pagesPath), chunkMaxPoints = 128)
@@ -287,8 +292,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("forgetUrls: erased everywhere, untouched buckets byte-stable, pinned snapshot time-travels") {
-    val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "pipe-forget-").toString
+    val base = SparkTestSession.tmpDir("pipe-forget-").toString
     val all = Pages.synthesize(spark, SparkTestSession.sf0001)
       .select("url", "warc_ts", "html", "text", "lang")
     Pages.writePartitioned(all, s"$base/pages", buckets = 8)
@@ -356,8 +360,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("forgetUrls deletes fully-emptied raw partitions and drops emptied days") {
     import java.sql.Timestamp
-    val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "pipe-forget2-").toString
+    val base = SparkTestSession.tmpDir("pipe-forget2-").toString
     def row(url: String, day: Int): (String, Timestamp, Array[Byte], String, String) =
       (url, Timestamp.from(java.time.Instant.parse(f"2024-02-0$day%dT06:00:00Z")),
         "<html>x</html>".getBytes("UTF-8"), "x", "en")

@@ -342,7 +342,7 @@ class PlansSpec extends AnyFunSuite {
 
   test("indexedRead consults the delta index: skipped partitions are never listed") {
     import graft.chunk.ChunkWriter
-    val store = "/root/repo/target/test_tmp/chunk_store"
+    val store = SparkTestSession.tmpDir("chunk-store-").toString
     ChunkWriter.writeIndexedStore(chunks, store, buckets = 8)
     val totalParts = {
       val dirs = new java.io.File(s"$store/chunks")

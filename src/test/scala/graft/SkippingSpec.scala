@@ -13,8 +13,7 @@ class SkippingSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  private def tmp(tag: String): String = Files.createTempDirectory(
-    Paths.get("/root/repo/target"), tag).toString
+  private def tmp(tag: String): String = SparkTestSession.tmpDir(tag).toString
 
   test("zvalue interleaves the two bucketed dimensions bit by bit") {
     // lo=0, hi=15 makes bucket16 the identity, so the interleave is exact:

@@ -1,6 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
 
 /** One SparkSession for the whole test run (suites share the JVM). */
 object SparkTestSession {
@@ -23,6 +25,15 @@ object SparkTestSession {
   }
   val sf0001 = "/root/testdata/sf0.001"
 
+  /** A new empty dir named `prefix<n>` under `target/test_tmp` of the
+    * checkout the suite runs from (its working dir), so a run from a copy
+    * writes into the copy.
+    */
+  def tmpDir(prefix: String): Path = {
+    val root = Paths.get(System.getProperty("user.dir"), "target", "test_tmp")
+    Files.createTempDirectory(Files.createDirectories(root), prefix)
+  }
+
   /** Runs `body` and counts the Spark jobs it started. */
   def jobsOf[T](body: => T): (T, Int) = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -40,5 +51,23 @@ object SparkTestSession {
     spark.sparkContext.addSparkListener(listener)
     try { val r = body; (r, settled()) }
     finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** Runs `body` and returns the command lines of the child processes this
+    * JVM started meanwhile, seen by polling its descendants.
+    */
+  def processesOf[T](body: => T): (T, Set[String]) = {
+    // Hadoop's Shell probes for setsid in a child process when its class
+    // loads: load it before watching
+    Class.forName("org.apache.hadoop.util.Shell")
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val running = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val watcher = new Thread(() => while (running.get())
+      ProcessHandle.current().descendants().forEach { p =>
+        seen.add(p.info().commandLine().orElse(s"pid ${p.pid}"))
+      })
+    watcher.start()
+    val r = try body finally { running.set(false); watcher.join() }
+    (r, seen.asScala.toSet)
   }
 }

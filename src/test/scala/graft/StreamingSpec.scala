@@ -15,8 +15,7 @@ class StreamingSpec extends AnyFunSuite {
   test("latest-event-per-user state survives micro-batch boundaries == batch dedupe") {
     // split the fixture into 4 files; maxFilesPerTrigger=1 forces 4
     // micro-batches so the running maximum must be carried in state
-    val base = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "stream-test-").toString
+    val base = SparkTestSession.tmpDir("stream-test-").toString
     val dir = s"$base/src"
     spark.read.parquet(s"${SparkTestSession.sf0001}/events.parquet")
       .repartition(4)
@@ -43,8 +42,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("upsert MERGE sink resumes across query restarts == batch dedupe (kill/resume)") {
-    val base = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "stream-upsert-").toString
+    val base = SparkTestSession.tmpDir("stream-upsert-").toString
     val srcDir = s"$base/src"
     val events = spark.read.parquet(s"${SparkTestSession.sf0001}/events.parquet")
 
@@ -87,8 +85,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming dedup resumes across restarts == batch exact dedup (kill/resume)") {
-    val base = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "stream-dedup-").toString
+    val base = SparkTestSession.tmpDir("stream-dedup-").toString
     val srcDir = s"$base/src"
     val docs = spark.read.parquet(s"${SparkTestSession.sf0001}/documents.parquet")
       .select("doc_id", "text")
@@ -125,8 +122,7 @@ class StreamingSpec extends AnyFunSuite {
     // already runs on it; this one pins the evidence.
     assert(spark.conf.get("spark.sql.streaming.stateStore.providerClass")
       .contains("RocksDBStateStoreProvider"))
-    val base = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "stream-rocks-").toString
+    val base = SparkTestSession.tmpDir("stream-rocks-").toString
     val srcDir = s"$base/src"
     spark.read.parquet(s"${SparkTestSession.sf0001}/documents.parquet")
       .select("doc_id", "text")
@@ -151,8 +147,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming warc ingestion resumes across restarts == batch Warc.read (kill/resume)") {
     import spark.implicits._
-    val base = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "stream-warc-").toString
+    val base = SparkTestSession.tmpDir("stream-warc-").toString
     val srcDir = s"$base/src"
     def wave(tag: String, ids: Seq[Int]): Unit = {
       val df = ids.map(i => (s"https://w$i.example/$tag", 1704067200L + i * 60,
@@ -186,8 +181,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming crawl corpus: kill/resume, changed url moves md5 groups, late dup recounts == batch truth") {
     import graft.streaming.StreamingCrawlCorpus
     import spark.implicits._
-    val base = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "stream-crawl-").toString
+    val base = SparkTestSession.tmpDir("stream-crawl-").toString
     val warcDir = s"$base/warc"
     Files.createDirectories(Paths.get(warcDir))
     def page(url: String, epoch: Long, text: String) =
@@ -279,8 +273,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming change detection resumes across restarts == batch revisitChanges (kill/resume)") {
     import spark.implicits._
-    val base = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "stream-chg-").toString
+    val base = SparkTestSession.tmpDir("stream-chg-").toString
     val srcDir = s"$base/src"
     // run 1: a unchanged twice, b once
     Seq(("https://a/", 100L, "v1"), ("https://a/", 200L, "v1"),
@@ -314,8 +307,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming near-dup resumes across restarts == batch minhash LSH (kill/resume)") {
-    val base = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "stream-neardup-").toString
+    val base = SparkTestSession.tmpDir("stream-neardup-").toString
     val srcDir = s"$base/src"
     val docs = spark.read.parquet(s"${SparkTestSession.sf0001}/documents.parquet")
       .select("doc_id", "text")
@@ -366,8 +358,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("degenerate band bucket saturates: bounded candidates, sweep preserves batch answer") {
     import spark.implicits._
-    val base = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "stream-satband-").toString
+    val base = SparkTestSession.tmpDir("stream-satband-").toString
     val srcDir = s"$base/src"
     // a boilerplate cluster — 60 IDENTICAL docs (one band bucket per band
     // holds all 60) — plus a normal near-dup pair and an unrelated doc
@@ -407,8 +398,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("MERGE sink runs a constant number of jobs per micro-batch, not per bucket") {
     import spark.implicits._
-    val base = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "stream-jobs-").toString
+    val base = SparkTestSession.tmpDir("stream-jobs-").toString
     val layer = new graft.table.ManifestTableLayer(s"$base/table")
     // 64 users over 16 buckets — 15 of them touched
     def batchDf(epoch: Long) = (0 until 64).map(u =>
@@ -466,8 +456,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("MERGE sink reads hundreds of touched buckets as ONE multi-path scan, not a union chain") {
     import spark.implicits._
-    val base = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "stream-manybk-").toString
+    val base = SparkTestSession.tmpDir("stream-manybk-").toString
     val layer = new graft.table.ManifestTableLayer(s"$base/table")
     // 400 users over 200 buckets — every bucket touched, twice
     def batchDf(epoch: Long) = (0 until 400).map(u =>
@@ -494,8 +483,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming retention bounds staging dirs across batches and survives resume") {
-    val base = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "stream-expire-").toString
+    val base = SparkTestSession.tmpDir("stream-expire-").toString
     val srcDir = s"$base/src"
     val events = spark.read.parquet(s"${SparkTestSession.sf0001}/events.parquet")
     val h = pmod(xxhash64(col("event_id")), lit(2))
@@ -539,8 +527,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("foreachBatch MERGE sink resumes across query restarts == batch rollup") {
     import java.nio.file.{Files, Paths}
-    val base = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "stream-merge-").toString
+    val base = SparkTestSession.tmpDir("stream-merge-").toString
     val srcDir = s"$base/src"
     val events = spark.read.parquet(s"${SparkTestSession.sf0001}/events.parquet")
 
@@ -583,8 +570,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("session_window sessions emit incrementally across micro-batches == single-batch run") {
-    val base = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "stream-sess-").toString
+    val base = SparkTestSession.tmpDir("stream-sess-").toString
     val ev = spark.read.parquet(s"${SparkTestSession.sf0001}/events.parquet")
       .select(col("user_id"), col("event_id"),
         col("ts").cast("timestamp").as("ts"),

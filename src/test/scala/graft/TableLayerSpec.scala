@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.table.{ManifestTableLayer, PartitionMeta}
 import graft.retention.Retention
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 
 class TableLayerSpec extends AnyFunSuite {
@@ -12,8 +12,7 @@ class TableLayerSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def freshRoot(): String =
-    Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "mtl-test-").toString
+    SparkTestSession.tmpDir("mtl-test-").toString
 
   private def df(k: Int) = (1 to 10).map(i => (k, i)).toDF("k", "v")
 
@@ -83,13 +82,44 @@ class TableLayerSpec extends AnyFunSuite {
     * day dir gets four data files, as a build stage's day dirs do.
     */
   private def stage(t: ManifestTableLayer, ns: String): Seq[PartitionMeta] = {
-    val days = Seq("2024-01-01", "2024-01-02", "2024-01-03")
-    val frame = (0 until 600).map(i => (i, i.toLong * 7, s"s$i", days(i % 3)))
-      .toDF("k", "v", "s", "_day").repartition(4)
-    val (metas, missing) = t.writeStage(frame, t.dataDir(s"$ns/build"), "_day", days,
-      d => s"$ns/day=$d", _ => "test")
-    assert(missing.isEmpty && metas.size == days.size)
+    val (metas, missing) = t.writeStage(stageFrame, t.dataDir(s"$ns/build"), "_day",
+      stageDays, d => s"$ns/day=$d", _ => "test")
+    assert(missing.isEmpty && metas.size == stageDays.size)
     metas
+  }
+  private val stageDays = Seq("2024-01-01", "2024-01-02", "2024-01-03")
+  private def stageFrame = (0 until 600).map(i => (i, i.toLong * 7, s"s$i", stageDays(i % 3)))
+    .toDF("k", "v", "s", "_day").repartition(4)
+
+  /** `dir` and everything under it as (relative path with the write's
+    * UUIDs masked, POSIX mode bits), sorted.
+    */
+  private def modes(dir: Path): Seq[(String, Int)] = {
+    val s = Files.walk(dir)
+    try s.iterator().asScala.map { p =>
+      (dir.relativize(p).toString.replaceAll("[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}", "*"),
+        Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xfff)
+    }.toSeq.sorted finally s.close()
+  }
+
+  test("a 3-day writeStage starts no child process") {
+    val t = new ManifestTableLayer(freshRoot())
+    val (_, started) = SparkTestSession.processesOf(stage(t, "tier=15min"))
+    assert(started.isEmpty, s"writeStage started ${started.size} process(es), e.g. " +
+      started.toSeq.sorted.take(3).mkString("; "))
+  }
+
+  test("writeStage leaves every dir and file with the mode the default local FS gives") {
+    val t = new ManifestTableLayer(freshRoot())
+    stage(t, "tier=15min")
+    // the same write (dynamic overwrite: the same layout, no root _SUCCESS)
+    // through the session's own file: FS
+    val plain = SparkTestSession.tmpDir("plain-").resolve("build")
+    stageFrame.write.partitionBy("_day").mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic").parquet(plain.toString)
+    val got = modes(t.dataDir("tier=15min/build"))
+    assert(got.exists(_._1.endsWith(".parquet")) && got.exists(_._1.endsWith(".crc")))
+    assert(got == modes(plain))
   }
 
   test("writeStage footer stats match every day dir of a multi-file stage") {

@@ -11,8 +11,7 @@ class XlsxSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def freshDir(): String =
-    Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "xlsx-test-").toString
+    SparkTestSession.tmpDir("xlsx-test-").toString
 
   /** Hand-assembled xlsx, INDEPENDENT of Xlsx.writeXlsx — the reader must
     * parse third-party workbooks, not just its own sink's output. Uses
