@@ -33,18 +33,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // RocksDB state store — engine default, matching Verify
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus.toInt)
 
     // input scale: replicate the doc corpus to make stage work dominate
     // fixed overhead (needed for meaningful scaling-efficiency numbers)
@@ -362,7 +351,7 @@ object Bench {
       // incl. its deterministic training) and the registry ingest;
       // q_stream_crawl_corpus is excluded — its checkpoint makes a second
       // in-JVM run a no-op, so a timed sample would not measure the work
-      // (volume evidence for the dedup path lives in tools/TimeDedup)
+      // (volume evidence for the dedup path: BENCH.md, q_dedup_corpus at 1.4 M docs)
       "q_ann_ivfpq_res", "q_source_registry",
       // late round-6 (additive): training-set layout (distributed-scan
       // shuffle-to-shards) and the Z-order zone-map box read (timed incl.

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.ingest.Pages
 import graft.pipeline.Pipeline
 import graft.table.ManifestTableLayer
@@ -37,16 +36,7 @@ object Main {
     val cutoff = arg(args, "cutoff", "2024-01-04")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
 
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(sys.props.getOrElse("spark.master", s"local[$cpus]"))
-      .appName("graft-pipeline")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus.toInt, appName = "graft-pipeline")
 
     val table = new ManifestTableLayer(tableRoot)
 

@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-/** Engine Catalyst extensions, registered on every engine session
-  * (`SparkSession.builder().withExtensions(new GraftExtensions)`, or
+/** Engine Catalyst extensions, registered on every engine session by
+  * [[graft.Sessions.local]] (or with
   * `--conf spark.sql.extensions=graft.plans.GraftExtensions` on a
   * cluster):
   *

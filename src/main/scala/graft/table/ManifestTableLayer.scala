@@ -12,13 +12,24 @@ import org.apache.parquet.io.LocalInputFile
 import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.types.{DataType, StructType}
 
-/** Snapshot-isolated table layout over plain Parquet directories — the
-  * local stand-in for Iceberg (no Iceberg jar ships offline; on a real
-  * cluster `IcebergTableLayer` would implement the same trait with
-  * `expireSnapshots` / `DROP PARTITION`). Design follows the
-  * log-structured-metadata pattern of Iceberg/Delta (Armbrust et al.,
-  * VLDB 2020 — PAPERS.md): immutable data files + an append-only chain of
-  * snapshot manifests + an atomically-swapped current-pointer.
+/** One immutable partition: `key` like "tier=15min/day=2024-01-03",
+  * `path` its directory, plus the lineage/metrics the north rule asks to
+  * be emitted per partition.
+  */
+case class PartitionMeta(
+    key: String,
+    path: String,
+    rows: Long,
+    bytes: Long,
+    lineage: String
+)
+
+/** The engine's table store: snapshot-isolated over plain Parquet
+  * directories, after the log-structured-metadata pattern of Iceberg and
+  * Delta (Armbrust et al., VLDB 2020 — PAPERS.md): immutable data files +
+  * an append-only chain of snapshot manifests + an atomically-swapped
+  * current-pointer. The build, retention and the streaming sinks all
+  * commit through this one class.
   *
   * Layout:
   *   root/data/<partition>/...parquet      immutable partition directories
@@ -30,28 +41,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * mutated after commit — drops only remove them from newer snapshots,
   * physical deletion happens in `expireSnapshots` (time-travel until then).
   */
-trait TableLayer {
-  def commit(added: Seq[PartitionMeta], removedKeys: Seq[String]): Long
-  def currentPartitions(): Seq[PartitionMeta]
-  def read(spark: SparkSession): DataFrame
-  def dropPartitions(pred: PartitionMeta => Boolean): Long
-  def expireSnapshots(keepLast: Int): Int
-}
-
-/** One immutable partition: `key` like "tier=15min/day=2024-01-03",
-  * `path` its directory, plus the lineage/metrics the north rule asks to
-  * be emitted per partition.
-  */
-case class PartitionMeta(
-    key: String,
-    path: String,
-    rows: Long,
-    bytes: Long,
-    lineage: String,
-    textShaOk: Boolean = true
-)
-
-class ManifestTableLayer(rootDir: String) extends TableLayer {
+class ManifestTableLayer(rootDir: String) {
   private val mapper = new ObjectMapper()
   private val root = Paths.get(rootDir)
   private val snapsDir = root.resolve("snapshots")
@@ -109,7 +99,7 @@ class ManifestTableLayer(rootDir: String) extends TableLayer {
       PartitionMeta(
         p.get("key").asText(), p.get("path").asText(),
         p.get("rows").asLong(), p.get("bytes").asLong(),
-        p.get("lineage").asText(), p.get("text_sha_ok").asBoolean())
+        p.get("lineage").asText())
     }.toSeq
   }
 
@@ -123,7 +113,7 @@ class ManifestTableLayer(rootDir: String) extends TableLayer {
       val n = arr.addObject()
       n.put("key", p.key); n.put("path", p.path)
       n.put("rows", p.rows); n.put("bytes", p.bytes)
-      n.put("lineage", p.lineage); n.put("text_sha_ok", p.textShaOk)
+      n.put("lineage", p.lineage)
     }
     Files.writeString(snapPath(id), mapper.writerWithDefaultPrettyPrinter()
       .writeValueAsString(rootNode))
@@ -134,7 +124,7 @@ class ManifestTableLayer(rootDir: String) extends TableLayer {
       StandardCopyOption.REPLACE_EXISTING)
   }
 
-  override def commit(added: Seq[PartitionMeta], removedKeys: Seq[String]): Long =
+  def commit(added: Seq[PartitionMeta], removedKeys: Seq[String]): Long =
     this.synchronized {
       val cur = readSnap(currentSnapId())
       val removed = removedKeys.toSet
@@ -144,7 +134,7 @@ class ManifestTableLayer(rootDir: String) extends TableLayer {
       id
     }
 
-  override def currentPartitions(): Seq[PartitionMeta] = readSnap(currentSnapId())
+  def currentPartitions(): Seq[PartitionMeta] = readSnap(currentSnapId())
 
   /** The live snapshot id (-1 if nothing committed) — callers pin it
     * before a mutation to time-travel back across it later.
@@ -178,19 +168,19 @@ class ManifestTableLayer(rootDir: String) extends TableLayer {
     * [[ManifestTableLayer.readPartitions]]: no Spark job runs before the
     * caller's action.
     */
-  override def read(spark: SparkSession): DataFrame = {
+  def read(spark: SparkSession): DataFrame = {
     val parts = currentPartitions()
     require(parts.nonEmpty, s"table $rootDir has no live partitions")
     ManifestTableLayer.readPartitions(spark, parts.map(_.path))
   }
 
-  override def dropPartitions(pred: PartitionMeta => Boolean): Long = {
+  def dropPartitions(pred: PartitionMeta => Boolean): Long = {
     val toDrop = currentPartitions().filter(pred).map(_.key)
     commit(Seq.empty, toDrop)
   }
 
   /** Physically delete data dirs referenced by no retained snapshot. */
-  override def expireSnapshots(keepLast: Int): Int = this.synchronized {
+  def expireSnapshots(keepLast: Int): Int = this.synchronized {
     val cur = currentSnapId()
     val keepIds = (math.max(0, cur - keepLast + 1) to cur)
     val live = keepIds.flatMap(readSnap).map(_.path).toSet

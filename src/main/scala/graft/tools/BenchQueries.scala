@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Time a SUBSET of SparkEntry headline queries with the same methodology
   * as graft.Bench (sf0.001 warm pass, noop-sink force, min over repeats) —
@@ -20,17 +20,7 @@ object BenchQueries {
     val names = args.drop(1).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(cpus.toInt)
     // session warm-up (mirrors Bench)
     spark.read.parquet(s"$sfDir/events.parquet").count()
     spark.read.parquet(s"$sfDir/documents.parquet").count()

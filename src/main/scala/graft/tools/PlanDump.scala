@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for named SparkEntry queries to files —
   * the optimization-round evidence artifacts (plans/rNN/<query>_{before,
   * after}.txt). Not part of the driver contract; measurement lives in
@@ -19,17 +17,7 @@ object PlanDump {
     val names = args.drop(2).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(cpus.toInt)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>
       val df = graft.SparkEntry.queries(name)(spark, sfDir)

@@ -6,33 +6,26 @@ import scala.jdk.CollectionConverters._
 
 /** One SparkSession for the whole test run (suites share the JVM). */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // RocksDB state store — the engine default (same as Verify/Bench):
-      // crawl-scale streaming state (one row per url / per distinct doc)
-      // must spill to local disk, not live on the executor heap
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val spark: SparkSession =
+    Sessions.local(4, appName = "graft-test", logLevel = "ERROR")
   val sf0001 = "/root/testdata/sf0.001"
 
-  /** A new empty dir named `prefix<n>` under `target/test_tmp` of the
-    * checkout the suite runs from (its working dir), so a run from a copy
-    * writes into the copy.
+  /** This JVM's dir under `target/test_tmp` of the checkout the suite runs
+    * from (its working dir), so a run from a copy writes into the copy. It
+    * is deleted when the JVM exits, after Spark's own shutdown hooks have
+    * stopped the context (Hadoop's hook manager runs hooks in priority
+    * order, and Spark's run at priorities above 0).
     */
-  def tmpDir(prefix: String): Path = {
-    val root = Paths.get(System.getProperty("user.dir"), "target", "test_tmp")
-    Files.createTempDirectory(Files.createDirectories(root), prefix)
+  private lazy val runRoot: Path = {
+    val base = Paths.get(System.getProperty("user.dir"), "target", "test_tmp")
+    val r = Files.createTempDirectory(Files.createDirectories(base), "run-")
+    org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
+      () => graft.table.ManifestTableLayer.deleteTree(r), 0)
+    r
   }
+
+  /** A new empty dir named `prefix<n>` under this JVM's [[runRoot]]. */
+  def tmpDir(prefix: String): Path = Files.createTempDirectory(runRoot, prefix)
 
   /** Runs `body` and counts the Spark jobs it started. */
   def jobsOf[T](body: => T): (T, Int) = {

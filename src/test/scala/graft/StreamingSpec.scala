@@ -404,40 +404,23 @@ class StreamingSpec extends AnyFunSuite {
     def batchDf(epoch: Long) = (0 until 64).map(u =>
         (u.toLong, u.toLong * 10 + epoch, epoch, "t", 100L))
       .toDF("user_id", "event_id", "epoch_us", "event_type", "cents")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    def settled(): Int = {
-      var prev = -1; var cur = jobs.get()
-      while (cur != prev) { Thread.sleep(250); prev = cur; cur = jobs.get() }
-      cur
-    }
-    // the live partitions after each batch, checked once the listener is off
-    val live = scala.collection.mutable.Buffer.empty[graft.table.PartitionMeta]
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // the merge is 2 queries (bucket discovery, partitioned write);
-      // AQE materializes each shuffle stage as its own job, so "O(1)"
-      // lands at a handful — the per-bucket loop it replaced ran 2 jobs
-      // PER bucket (write + count re-read), >= 32 here
-      StreamingRollup.mergeLatestBatch(spark, layer, batchDf(1L), 0L, nBuckets = 16)
-      val fresh = settled()
-      live ++= layer.currentPartitions()
-      info(s"fresh-table merge: $fresh jobs")
-      assert(fresh <= 10,
-        s"fresh-table merge of 16 buckets must be O(1) jobs, ran $fresh")
-      jobs.set(0)
-      // second batch exercises the read-existing-partitions path
-      StreamingRollup.mergeLatestBatch(spark, layer, batchDf(2L), 1L, nBuckets = 16)
-      val upsert = settled()
-      live ++= layer.currentPartitions()
-      info(s"upsert merge: $upsert jobs")
-      assert(upsert <= 10,
-        s"upsert merge of 16 existing buckets must be O(1) jobs, ran $upsert")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    // the merge is 2 queries (bucket discovery, partitioned write);
+    // AQE materializes each shuffle stage as its own job, so "O(1)"
+    // lands at a handful — the per-bucket loop it replaced ran 2 jobs
+    // PER bucket (write + count re-read), >= 32 here
+    val (_, fresh) = SparkTestSession.jobsOf(
+      StreamingRollup.mergeLatestBatch(spark, layer, batchDf(1L), 0L, nBuckets = 16))
+    val afterFresh = layer.currentPartitions()
+    info(s"fresh-table merge: $fresh jobs")
+    assert(fresh <= 10,
+      s"fresh-table merge of 16 buckets must be O(1) jobs, ran $fresh")
+    // second batch exercises the read-existing-partitions path
+    val (_, upsert) = SparkTestSession.jobsOf(
+      StreamingRollup.mergeLatestBatch(spark, layer, batchDf(2L), 1L, nBuckets = 16))
+    val live = afterFresh ++ layer.currentPartitions()
+    info(s"upsert merge: $upsert jobs")
+    assert(upsert <= 10,
+      s"upsert merge of 16 existing buckets must be O(1) jobs, ran $upsert")
     // and the merge itself is right: every user at epoch 2
     assert(layer.read(spark).count() == 64)
     assert(layer.read(spark).filter(col("epoch_us") === 2).count() == 64)
@@ -452,6 +435,21 @@ class StreamingSpec extends AnyFunSuite {
       }
       assert(p.bytes == onDisk, s"bytes of ${p.key}")
     }
+
+    // foreachBatch is at-least-once: a crash between sink write and offset
+    // commit REPLAYS the batch (same batchId, same data). The replay stages
+    // to fresh dirs, never over the files its own merge reads, and leaves
+    // the live keys and the table contents as they were
+    val rowsBefore = layer.read(spark).orderBy("user_id").collect().toSeq
+    val keysBefore = layer.currentPartitions().map(_.key).toSet
+    StreamingRollup.mergeLatestBatch(spark, layer, batchDf(2L), 1L, nBuckets = 16)
+    assert(layer.currentPartitions().map(_.key).toSet == keysBefore,
+      "replay must leave the live key set unchanged")
+    assert(layer.read(spark).orderBy("user_id").collect().toSeq == rowsBefore,
+      "replay must be a no-op on table contents")
+    // expiring all but the last 2 snapshots leaves the live rows readable
+    layer.expireSnapshots(keepLast = 2)
+    assert(layer.read(spark).orderBy("user_id").collect().toSeq == rowsBefore)
   }
 
   test("MERGE sink reads hundreds of touched buckets as ONE multi-path scan, not a union chain") {
