@@ -149,10 +149,10 @@ object Bench {
             taskMs.synchronized { taskMs += t.taskInfo.duration }
       })
 
-    // 2 warm iterations: C2 compilation of the generated code needs more
+    // 3 warm iterations: C2 compilation of the generated code needs more
     // than one pass to reach steady state at high thread counts (measured:
     // iter1 27s, iter2 6.7s, iter3+ 3.2s for tier-0 at local[32])
-    val iters = if (sys.env.contains("SPARK_GRAFT_NO_WARM")) 1 else 4
+    val iters = 4
     for (iter <- 1 to iters) {
       nPoints = timed("stage_points_extract") {
         Pipeline.pointsFromPages(pages).count()

@@ -114,6 +114,9 @@ object Warc {
 
   // ----------------------------------------------------------------- read
 
+  /** The file names a warc reader takes: `.warc` and `.warc.gz`. */
+  val Glob = "*.warc*"
+
   /** Distributed source: every `.warc` / `.warc.gz` under `dir` becomes
     * one task; yields (url STRING, warc_ts TIMESTAMP, html BINARY).
     *
@@ -125,13 +128,21 @@ object Warc {
     * real CC files are ~1 GB, where whole-file buffering is simply not
     * an option.
     */
-  def read(spark: SparkSession, dir: String): DataFrame = {
+  def read(spark: SparkSession, dir: String): DataFrame =
+    records(spark.read.format("binaryFile").option("pathGlobFilter", Glob)
+        .load(dir))
+      .select(col("url"), timestamp_seconds(col("epoch_s")).as("warc_ts"),
+        col("html"))
+
+  /** The records (url STRING, epoch_s LONG, html BINARY) of every warc
+    * file named in the `path` column of `files` — a batch listing or a
+    * file stream alike. Each file is [[parseStream]]ed off its path, one
+    * record at a time.
+    */
+  def records(files: DataFrame): DataFrame = {
+    val spark = files.sparkSession
     import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.warc*")
-      .load(dir)
-      .select(col("path"))
-      .as[String]
+    files.select(col("path")).as[String]
       .flatMap { p =>
         val uri = new java.net.URI(p)
         val fs = org.apache.hadoop.fs.FileSystem.get(uri,
@@ -140,8 +151,6 @@ object Warc {
           gz = p.endsWith(".gz"))
       }
       .toDF("url", "epoch_s", "html")
-      .select(col("url"), timestamp_seconds(col("epoch_s")).as("warc_ts"),
-        col("html"))
   }
 
   /** Parse a whole warc file eagerly (test/convenience surface). */

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.table.ManifestTableLayer
 
@@ -40,6 +40,12 @@ object MergeSink {
     * replaces dropped their `bucket` column.
     */
   val BucketCol = "mbk"
+
+  /** The [[BucketCol]] value of a hash-bucketed table: `keys` hashed into
+    * one of `nBuckets` buckets, rendered as a string.
+    */
+  def hashBucket(nBuckets: Int, keys: Column*): Column =
+    pmod(xxhash64(keys: _*), lit(nBuckets.toLong)).cast("string")
 
   /** MERGE one micro-batch into the layer.
     *
@@ -146,10 +152,10 @@ object MergeSink {
 
   /** Keep, per `keys` group, the single best row by `order` — the
     * window-dedupe merge every upsert-style sink uses (latest event,
-    * cumulative dedup counts). Formulated once here so the four sinks
+    * cumulative dedup counts). Formulated once here so the upsert sinks
     * share it.
     */
-  def keepBest(keys: Seq[String], order: Seq[org.apache.spark.sql.Column])(
+  def keepBest(keys: Seq[String], order: Seq[Column])(
       existing: DataFrame, incoming: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)

@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.sim.Ann
 
 /** T51s: CONTINUOUS vector ingestion into a materialized IVF index —
@@ -33,28 +33,16 @@ object StreamingAnn {
     // cold-start: an empty landing dir makes the batch-read schema probe
     // throw for an otherwise valid setup — fall back to the index's own
     // stored schema (id + vector columns match the append contract)
-    val schema =
-      try spark.read.parquet(landingDir).schema
-      catch { case e: org.apache.spark.sql.AnalysisException =>
-        val cents = spark.read.parquet(s"$indexPath/centroids")
-        val elemT = cents.schema("_cv").dataType
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField(idCol,
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField(vecCol, elemT,
-            nullable = true)))
-      }
-    val reader = spark.readStream.schema(schema)
-    val src = (if (maxFilesPerTrigger > 0)
-        reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
-      else reader).parquet(landingDir)
-    val q = src.writeStream
+    val src = FileStream.source(spark, landingDir, glob = "", maxFilesPerTrigger,
+      coldStart = { case _: AnalysisException =>
+        val elemT = spark.read.parquet(s"$indexPath/centroids").schema("_cv").dataType
+        StructType(Seq(StructField(idCol, LongType, nullable = false),
+          StructField(vecCol, elemT, nullable = true)))
+      })
+    FileStream.drain(src.writeStream
       .foreachBatch { (b: DataFrame, batchId: Long) =>
         Ann.appendToIvfIndexIdempotent(b, idCol, vecCol, indexPath, batchId)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      },
+      checkpoint)
   }
 }

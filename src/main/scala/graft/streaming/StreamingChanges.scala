@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming revisit change detection — the incremental form of
   * `Web.revisitChanges` (T31): as crawl snapshots stream in, per-url
@@ -44,8 +44,7 @@ object StreamingChanges {
   ): Unit = {
     val inc = batch.select("url", "n_visits", "n_changes", "first_s",
       "last_s", "change_ppm")
-      .withColumn(MergeSink.BucketCol,
-        pmod(xxhash64(col("url")), lit(nBuckets.toLong)).cast("string"))
+      .withColumn(MergeSink.BucketCol, MergeSink.hashBucket(nBuckets, col("url")))
     MergeSink.mergeBuckets(spark, layer, inc, batchId,
       keyPrefix = "changes/bucket=", lineageTag = "stream-changes",
       merge = MergeSink.keepBest(Seq("url"), Seq(col("n_visits").desc)),
@@ -70,12 +69,7 @@ object StreamingChanges {
   ): DataFrame = {
     import spark.implicits._
     val layer = new graft.table.ManifestTableLayer(tableRoot)
-    val schema = spark.read.option("pathGlobFilter", glob).parquet(dir).schema
-    val reader = spark.readStream.schema(schema).option("pathGlobFilter", glob)
-    val src = (if (maxFilesPerTrigger > 0)
-        reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
-      else reader).parquet(dir)
-    val visits = src
+    val visits = FileStream.source(spark, dir, glob, maxFilesPerTrigger)
       .select(col("url"), col("epoch_s").cast("long").as("epoch_s"),
         md5(col("text").cast("binary")).as("h"))
       .as[Visit]
@@ -97,15 +91,11 @@ object StreamingChanges {
           Iterator((url, cur.nVisits, cur.nChanges, cur.firstS, cur.lastS, ppm))
       }
       .toDF("url", "n_visits", "n_changes", "first_s", "last_s", "change_ppm")
-    val q = updates.writeStream
+    FileStream.drain(updates.writeStream
       .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
       .foreachBatch((batch: DataFrame, id: Long) =>
-        mergeChangesBatch(spark, layer, batch, id, nBuckets, expireEvery))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
+        mergeChangesBatch(spark, layer, batch, id, nBuckets, expireEvery)),
+      checkpointDir)
     layer.read(spark)
       .select("url", "n_visits", "n_changes", "first_s", "last_s", "change_ppm")
   }

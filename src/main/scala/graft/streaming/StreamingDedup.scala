@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming exact dedup — the crawl-time "have I seen this document
   * before" operator: content-hash keyed `flatMapGroupsWithState` carries
@@ -35,8 +35,7 @@ object StreamingDedup {
       expireEvery: Int = 0
   ): Unit = {
     val inc = batch.select("h", "keeper", "n_copies")
-      .withColumn(MergeSink.BucketCol,
-        pmod(xxhash64(col("h")), lit(nBuckets.toLong)).cast("string"))
+      .withColumn(MergeSink.BucketCol, MergeSink.hashBucket(nBuckets, col("h")))
     MergeSink.mergeBuckets(spark, layer, inc, batchId,
       keyPrefix = "dedup/bucket=", lineageTag = "stream-dedup",
       merge = MergeSink.keepBest(Seq("h"),
@@ -61,12 +60,7 @@ object StreamingDedup {
   ): DataFrame = {
     import spark.implicits._
     val layer = new graft.table.ManifestTableLayer(tableRoot)
-    val schema = spark.read.option("pathGlobFilter", glob).parquet(dir).schema
-    val reader = spark.readStream.schema(schema).option("pathGlobFilter", glob)
-    val src = (if (maxFilesPerTrigger > 0)
-        reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
-      else reader).parquet(dir)
-    val docs = src
+    val docs = FileStream.source(spark, dir, glob, maxFilesPerTrigger)
       .select(md5(col("text").cast("binary")).as("h"),
         col("doc_id").cast("long").as("doc_id"))
       .as[Doc]
@@ -81,15 +75,11 @@ object StreamingDedup {
           Iterator((h, cur.keeper, cur.n))
       }
       .toDF("h", "keeper", "n_copies")
-    val q = updates.writeStream
+    FileStream.drain(updates.writeStream
       .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
       .foreachBatch((batch: DataFrame, id: Long) =>
-        mergeDedupBatch(spark, layer, batch, id, nBuckets, expireEvery))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
+        mergeDedupBatch(spark, layer, batch, id, nBuckets, expireEvery)),
+      checkpointDir)
     layer.read(spark).select("h", "keeper", "n_copies")
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 import graft.text.TextOps
 
@@ -99,8 +99,7 @@ object StreamingNearDup {
       val pairs = b.filter(col("kind") === 0)
         .select(col("a").as("doc_a"), col("b").as("doc_b"))
         .withColumn(MergeSink.BucketCol,
-          pmod(xxhash64(col("doc_a"), col("doc_b")), lit(nBuckets.toLong))
-            .cast("string"))
+          MergeSink.hashBucket(nBuckets, col("doc_a"), col("doc_b")))
       MergeSink.mergeBuckets(spark, layer, pairs, batchId,
         keyPrefix = "cand/bucket=", lineageTag = "stream-neardup",
         merge = (ex, in) => ex.unionByName(in).distinct(),
@@ -180,11 +179,7 @@ object StreamingNearDup {
     import spark.implicits._
     require(k % bands == 0, s"k=$k must be divisible by bands=$bands")
     val layer = new graft.table.ManifestTableLayer(tableRoot)
-    val schema = spark.read.option("pathGlobFilter", glob).parquet(dir).schema
-    val reader = spark.readStream.schema(schema).option("pathGlobFilter", glob)
-    val src = (if (maxFilesPerTrigger > 0)
-        reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
-      else reader).parquet(dir)
+    val src = FileStream.source(spark, dir, glob, maxFilesPerTrigger)
     val bandRows = banded(src, k, bands).as[BandRow]
     val out = bandRows.groupByKey(r => (r.band_idx, r.band_hash))
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
@@ -198,15 +193,11 @@ object StreamingNearDup {
           pairRows ++ satRow
       }
       .toDF("kind", "a", "b")
-    val q = out.writeStream
+    FileStream.drain(out.writeStream
       .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
       .foreachBatch((batch: DataFrame, id: Long) =>
-        mergeCandidateBatch(spark, layer, batch, id, nBuckets, expireEvery))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
+        mergeCandidateBatch(spark, layer, batch, id, nBuckets, expireEvery)),
+      checkpointDir)
     // saturated-band sweep: recompute the FULL pair set of just the
     // flagged band keys with the batch band-join — the flagged set is
     // tiny (degenerate buckets only), so it broadcasts

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured-Streaming variant of the tier rollup: the incremental /
   * late-data path the batch reference lacks (OPSD handles revisions by
@@ -62,12 +62,7 @@ object StreamingRollup {
       expireEvery: Int = 8
   ): DataFrame = {
     val layer = new graft.table.ManifestTableLayer(tableRoot)
-    val schema = spark.read.option("pathGlobFilter", glob).parquet(dir).schema
-    val reader = spark.readStream.schema(schema).option("pathGlobFilter", glob)
-    val src = (if (maxFilesPerTrigger > 0)
-        reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
-      else reader).parquet(dir)
-    val stream = src
+    val stream = FileStream.source(spark, dir, glob, maxFilesPerTrigger)
       .select(
         col("event_type"),
         col("ts").cast("timestamp").as("ts"),
@@ -78,15 +73,11 @@ object StreamingRollup {
       .select(col("event_type"),
         unix_timestamp(col("window.start")).as("bucket_ts"),
         col("n"), col("sum_cents"))
-    val q = stream.writeStream
+    FileStream.drain(stream.writeStream
       .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
       .foreachBatch((batch: DataFrame, id: Long) =>
-        mergeHourlyBatch(spark, layer, batch, id, expireEvery))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
+        mergeHourlyBatch(spark, layer, batch, id, expireEvery)),
+      checkpointDir)
     layer.read(spark).select("event_type", "bucket_ts", "n", "sum_cents")
   }
 
@@ -117,7 +108,7 @@ object StreamingRollup {
     // touched buckets are bounded by nBuckets, never by user count
     val inc = batch.select("user_id", "event_id", "epoch_us", "event_type", "cents")
       .withColumn(MergeSink.BucketCol,
-        pmod(xxhash64(col("user_id")), lit(nBuckets.toLong)).cast("string"))
+        MergeSink.hashBucket(nBuckets, col("user_id")))
     MergeSink.mergeBuckets(spark, layer, inc, batchId,
       keyPrefix = "latest/bucket=", lineageTag = "stream-upsert",
       merge = MergeSink.keepBest(Seq("user_id"),
@@ -152,11 +143,7 @@ object StreamingRollup {
   ): DataFrame = {
     import spark.implicits._
     val layer = new graft.table.ManifestTableLayer(tableRoot)
-    val schema = spark.read.option("pathGlobFilter", glob).parquet(dir).schema
-    val reader = spark.readStream.schema(schema).option("pathGlobFilter", glob)
-    val src = (if (maxFilesPerTrigger > 0)
-        reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
-      else reader).parquet(dir)
+    val src = FileStream.source(spark, dir, glob, maxFilesPerTrigger)
     // state carries FULL-microsecond timestamps: the dedupe contract is
     // (ts, event_id) at source precision — second-truncated state would
     // silently diverge from the batch dedupe on sub-second ties
@@ -180,15 +167,11 @@ object StreamingRollup {
           Iterator((uid, cur.event_id, cur.epoch_us, cur.event_type, cur.cents))
       }
       .toDF("user_id", "event_id", "epoch_us", "event_type", "cents")
-    val q = latest.writeStream
+    FileStream.drain(latest.writeStream
       .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
       .foreachBatch((batch: DataFrame, id: Long) =>
-        mergeLatestBatch(spark, layer, batch, id, nBuckets, expireEvery))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
+        mergeLatestBatch(spark, layer, batch, id, nBuckets, expireEvery)),
+      checkpointDir)
     layer.read(spark)
       .withColumn("epoch_s", expr("epoch_us div 1000000"))
       .select("user_id", "event_id", "epoch_s", "event_type", "cents")
@@ -218,12 +201,7 @@ object StreamingRollup {
       gapSec: Long = 1800L,
       maxFilesPerTrigger: Int = 0
   ): DataFrame = {
-    val schema = spark.read.option("pathGlobFilter", glob).parquet(srcDir).schema
-    val reader = spark.readStream.schema(schema).option("pathGlobFilter", glob)
-    val src = (if (maxFilesPerTrigger > 0)
-        reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
-      else reader).parquet(srcDir)
-    val sessions = src
+    val sessions = FileStream.source(spark, srcDir, glob, maxFilesPerTrigger)
       .withWatermark("ts", "1 hour")
       .groupBy(col("user_id"), session_window(col("ts"), s"$gapSec seconds"))
       .agg(count(lit(1)).as("n_events"),
@@ -233,15 +211,11 @@ object StreamingRollup {
         unix_timestamp(col("ts_min")).as("t_start"),
         unix_timestamp(col("ts_max")).as("t_end"),
         col("cents_sum"))
-    val q = sessions.writeStream
+    FileStream.drain(sessions.writeStream
       .outputMode("append")
       .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      .option("path", outDir),
+      checkpointDir)
     spark.read.parquet(outDir).filter(col("user_id") >= 0)
       .select("user_id", "n_events", "t_start", "t_end", "cents_sum")
   }

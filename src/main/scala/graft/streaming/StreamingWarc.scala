@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.ingest.Warc
 
@@ -33,8 +32,7 @@ object StreamingWarc {
       expireEvery: Int = 0
   ): Unit = {
     val inc = batch.select("url", "epoch_s", "html_md5")
-      .withColumn(MergeSink.BucketCol,
-        pmod(xxhash64(col("url")), lit(nBuckets.toLong)).cast("string"))
+      .withColumn(MergeSink.BucketCol, MergeSink.hashBucket(nBuckets, col("url")))
     MergeSink.mergeBuckets(spark, layer, inc, batchId,
       keyPrefix = "warc/bucket=", lineageTag = "stream-warc",
       merge = MergeSink.keepBest(Seq("url", "epoch_s"),
@@ -54,35 +52,15 @@ object StreamingWarc {
       nBuckets: Int = 16,
       expireEvery: Int = 8
   ): DataFrame = {
-    import spark.implicits._
     val layer = new graft.table.ManifestTableLayer(tableRoot)
-    val schema = spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.warc*").load(dir).schema
-    val reader = spark.readStream.format("binaryFile").schema(schema)
-      .option("pathGlobFilter", "*.warc*")
-    val src = (if (maxFilesPerTrigger > 0)
-        reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
-      else reader).load(dir)
-    val recs = src
-      .select(col("path")).as[String]
-      .flatMap { p =>
-        val uri = new java.net.URI(p)
-        val fs = org.apache.hadoop.fs.FileSystem.get(uri,
-          new org.apache.hadoop.conf.Configuration())
-        Warc.parseStream(fs.open(new org.apache.hadoop.fs.Path(uri)),
-          gz = p.endsWith(".gz"))
-      }
-      .toDF("url", "epoch_s", "html")
+    val recs = Warc.records(FileStream.source(spark, dir, Warc.Glob,
+        maxFilesPerTrigger, format = "binaryFile"))
       .select(col("url"), col("epoch_s"), md5(col("html")).as("html_md5"))
-    val q = recs.writeStream
+    FileStream.drain(recs.writeStream
       .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
       .foreachBatch((batch: DataFrame, id: Long) =>
-        mergeWarcBatch(spark, layer, batch, id, nBuckets, expireEvery))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
+        mergeWarcBatch(spark, layer, batch, id, nBuckets, expireEvery)),
+      checkpointDir)
     layer.read(spark).select("url", "epoch_s", "html_md5")
   }
 }

@@ -29,17 +29,28 @@ object SparkTestSession {
 
   /** Runs `body` and counts the Spark jobs it started. */
   def jobsOf[T](body: => T): (T, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val (r, jobs) = jobBatchesOf(body)
+    (r, jobs.size)
+  }
+
+  /** Runs `body` and returns, for each Spark job it started, the streaming
+    * micro-batch the job ran in (its `streaming.sql.batchId` property), or
+    * None for a job outside any micro-batch.
+    */
+  def jobBatchesOf[T](body: => T): (T, Seq[Option[Long]]) = {
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Option[Long]]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
+        jobs.add(Option(js.properties)
+          .flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
+          .map(_.toLong))
     }
     // listener events arrive asynchronously: wait until the count settles
-    def settled(): Int = {
-      var prev = -1; var cur = jobs.get()
-      while (cur != prev) { Thread.sleep(250); prev = cur; cur = jobs.get() }
-      cur
+    def settled(): Seq[Option[Long]] = {
+      var prev = -1; var cur = jobs.size
+      while (cur != prev) { Thread.sleep(250); prev = cur; cur = jobs.size }
+      jobs.asScala.toSeq
     }
     spark.sparkContext.addSparkListener(listener)
     try { val r = body; (r, settled()) }

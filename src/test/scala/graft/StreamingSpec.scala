@@ -203,18 +203,28 @@ class StreamingSpec extends AnyFunSuite {
       page(s"https://w.example/p/$i", 1000 + i, s"text number $i one two three")) :+
       page("https://w.example/short", 1500, "too short") // gated out (< 3 tokens? no: 2 tokens)
     writeWave("w1", wave1)
-    val l1 = StreamingCrawlCorpus.ingest(spark, warcDir,
-      s"$base/table", s"$base/ckpt", maxFilesPerTrigger = 1)
+    val (l1, jobs1) = SparkTestSession.jobBatchesOf(StreamingCrawlCorpus.ingest(
+      spark, warcDir, s"$base/table", s"$base/ckpt", maxFilesPerTrigger = 1))
     assert(StreamingCrawlCorpus.corpus(spark, l1, minTokens = 3).count() == 10)
     // wave 2 lands AFTER the restart: p/0 re-crawled with p/1's TEXT (its
-    // old md5 group must tombstone — sole member gone — and p/1's group
+    // old md5 group must be deleted — sole member gone — and p/1's group
     // must recount to 2 copies), plus a brand-new url
     val wave2 = Seq(
       page("https://w.example/p/0", 2000, "text number 1 one two three"),
       page("https://w.example/p/10", 2001, "text number 10 one two three"))
     writeWave("w2", wave2)
-    val l2 = StreamingCrawlCorpus.ingest(spark, warcDir,
-      s"$base/table", s"$base/ckpt", maxFilesPerTrigger = 1)
+    val (l2, jobs2) = SparkTestSession.jobBatchesOf(StreamingCrawlCorpus.ingest(
+      spark, warcDir, s"$base/table", s"$base/ckpt", maxFilesPerTrigger = 1))
+    // Spark jobs per micro-batch: no more than the drain ran before its
+    // source, drain and record reader were shared with the other streams
+    val perBatch = (jobs1 ++ jobs2).flatten.groupBy(identity)
+      .map { case (b, js) => b -> js.size }.toSeq.sorted
+    info(s"jobs per micro-batch: ${perBatch.map { case (b, n) => s"$b=$n" }.mkString(" ")}")
+    val before = Seq(0L -> 30, 1L -> 30, 2L -> 32, 3L -> 1)
+    assert(perBatch.map(_._1) == before.map(_._1))
+    perBatch.zip(before).foreach { case ((b, n), (_, max)) =>
+      assert(n <= max, s"micro-batch $b ran $n Spark jobs, more than $max")
+    }
     val got = StreamingCrawlCorpus.corpus(spark, l2, minTokens = 3)
       .select("url", "text_md5", "n_copies", "n_tokens")
     // batch truth over ALL records: latest per url -> md5 groups -> gate
@@ -239,7 +249,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(got.filter(col("n_copies") === 2).count() == 1)
     assert(got.filter(col("n_copies") === 2).select("url").as[String].head()
       == "https://w.example/p/0")
-    // p/0's ORIGINAL text group is tombstoned (0 members), not stale
+    // p/0's ORIGINAL text group is deleted (0 members), not stale
     val origMd5 = all.filter(col("url") === "https://w.example/p/0" &&
         col("epoch_s") === 1000)
       .select(md5(col("text").cast("binary"))).as[String].head()
@@ -612,5 +622,24 @@ class StreamingSpec extends AnyFunSuite {
     assert(multi.count() == single.count() && multi.count() > 0)
     // append-mode emitted each finalized session exactly once
     assert(multi.groupBy(cols: _*).count().filter(col("count") > 1).isEmpty)
+  }
+
+  test("a micro-batch that throws fails the drain, and no query is left running") {
+    val root = SparkTestSession.tmpDir("stream-fail-").toString
+    spark.range(4).select(col("id").as("vec_id"),
+        array(lit(1.0f), lit(0.0f)).as("embedding"))
+      .write.parquet(s"$root/landing")
+    // no index at indexPath: the append in foreachBatch cannot read its
+    // centroids
+    val e = intercept[Exception](graft.streaming.StreamingAnn.appendVectorsStream(
+      spark, s"$root/landing", s"$root/no-index", s"$root/ckpt",
+      "vec_id", "embedding"))
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists {
+      case a: org.apache.spark.sql.AnalysisException =>
+        a.getMessage.contains("no-index/centroids")
+      case _ => false
+    }, s"the micro-batch's error must be in the cause chain: ${chain.mkString(" <- ")}")
+    assert(spark.streams.active.isEmpty, "the failed query must be stopped")
   }
 }
