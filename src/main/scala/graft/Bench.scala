@@ -215,51 +215,49 @@ object Bench {
     // stuck-slow JVM plateaus immediately (no wasted work); a
     // slow-converging one reaches its real steady state and its
     // iters_* series ends flat.
-    if (iters > 1) {
-      val resample: Seq[(String, () => Unit)] = Seq(
-        "stage_rollup_15min" -> (() => {
-          timed("stage_rollup_15min") {
-            Pipeline.tier15FromPages(pages)
-              .write.mode("overwrite").parquet(t15Path)
-          }; ()
-        }),
-        "stage_rollup_1h" -> (() => {
-          timed("stage_rollup_1h") {
-            TimeSeriesOps.chainTier(
-                spark.read.parquet(t15Path), Seq("domain", "metric"), 3600)
-              .write.mode("overwrite").parquet(t1hPath)
-          }; ()
-        }),
-        "stage_rollup_1d" -> (() => {
-          timed("stage_rollup_1d") {
-            TimeSeriesOps.chainTier(
-                spark.read.parquet(t1hPath), Seq("domain", "metric"), 86400)
-              .write.mode("overwrite").parquet(t1dPath)
-          }; ()
-        }),
-        "stage_gapfill_interp" -> (() => {
-          val t15b = spark.read.parquet(t15Path)
-          timed("stage_gapfill_interp") {
-            force(GapFill.interpolate(
-              GapFill.densify(
-                t15b.filter(col("metric") === "text_chars")
-                  .select(col("domain"), col("bucket_ts"), col("mean_v")),
-                Seq("domain"), "bucket_ts", 900),
-              Seq("domain"), "bucket_ts", "mean_v", 8,
-              concat(col("domain"), lit("_interp")),
-              denseGridPeriod = Some(900L)))
-          }; ()
-        }))
-      var pending = resample
-      var extra = 0
-      while (extra < 4 && pending.nonEmpty) {
-        pending = pending.filter { case (name, run) =>
-          val before = times(name)
-          run()
-          times(name) < before * 0.92
-        }
-        extra += 1
+    val resample: Seq[(String, () => Unit)] = Seq(
+      "stage_rollup_15min" -> (() => {
+        timed("stage_rollup_15min") {
+          Pipeline.tier15FromPages(pages)
+            .write.mode("overwrite").parquet(t15Path)
+        }; ()
+      }),
+      "stage_rollup_1h" -> (() => {
+        timed("stage_rollup_1h") {
+          TimeSeriesOps.chainTier(
+              spark.read.parquet(t15Path), Seq("domain", "metric"), 3600)
+            .write.mode("overwrite").parquet(t1hPath)
+        }; ()
+      }),
+      "stage_rollup_1d" -> (() => {
+        timed("stage_rollup_1d") {
+          TimeSeriesOps.chainTier(
+              spark.read.parquet(t1hPath), Seq("domain", "metric"), 86400)
+            .write.mode("overwrite").parquet(t1dPath)
+        }; ()
+      }),
+      "stage_gapfill_interp" -> (() => {
+        val t15b = spark.read.parquet(t15Path)
+        timed("stage_gapfill_interp") {
+          force(GapFill.interpolate(
+            GapFill.densify(
+              t15b.filter(col("metric") === "text_chars")
+                .select(col("domain"), col("bucket_ts"), col("mean_v")),
+              Seq("domain"), "bucket_ts", 900),
+            Seq("domain"), "bucket_ts", "mean_v", 8,
+            concat(col("domain"), lit("_interp")),
+            denseGridPeriod = Some(900L)))
+        }; ()
+      }))
+    var pending = resample
+    var extra = 0
+    while (extra < 4 && pending.nonEmpty) {
+      pending = pending.filter { case (name, run) =>
+        val before = times(name)
+        run()
+        times(name) < before * 0.92
       }
+      extra += 1
     }
 
     detail("input_points") = nPoints.toString

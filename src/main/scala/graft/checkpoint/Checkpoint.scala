@@ -5,12 +5,14 @@ package graft.checkpoint
   * rule's "resumable from per-partition checkpoints").
   *
   * `Pipeline.runRollup` computes a stage in ONE Spark job over all of its
-  * missing days into the stage's fixed dir (`<ns>/build`), one
-  * `_day=<d>` subdir per day, and commits each of those dirs where it was
-  * written ("tier=15min/day=2024-01-03" lives in
-  * `tier=15min/build/_day=2024-01-03`) INDIVIDUALLY, in order — so a
+  * missing (tier, day) partitions into the stage's fixed dir
+  * (`<ns>/build`), one subdir per partition, and commits each of those
+  * dirs where it was written ("tier=15min/day=2024-01-03" lives in
+  * `tier=15min/build/_day=2024-01-03`, "tier=1h/day=2024-01-03" in
+  * `tiers/build/_tier=1h/_day=2024-01-03`) INDIVIDUALLY, in order — so a
   * killed run resumes by skipping every key already in the current
-  * snapshot, and its write replaces only the uncommitted day dirs.
+  * snapshot, tier by tier, and its write replaces only the uncommitted
+  * partition dirs.
   * Partition metas carry rows/bytes/lineage, giving the per-partition
   * metrics emission for free.
   */

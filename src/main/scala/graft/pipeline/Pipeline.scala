@@ -16,21 +16,22 @@ import graft.retention.Retention
   *   pages (partitioned bucket x day)
   *     -> points (domain-level metrics derived from the page row ONLY)
   *     -> 15min tier  (algebraic partials, per-day partitions)
-  *     -> 30min, hourly, daily tiers (each chained from the stored tier
-  *        before it)
+  *     -> 30min, hourly, daily tiers (all three from the stored 15-min
+  *        tier, in one aggregation)
   *     -> Gorilla chunk partitions + delta index per day
   *   computed per stage, committed per (tier, day) partition in a
   *   ManifestTableLayer; retention sweeps raw tiers, aggregates survive.
   *
   * Every stage is one query and one `ManifestTableLayer.writeStage` job
   * over all the days it builds, and every partition is committed where
-  * it was written (`<stage dir>/_day=<d>`). The build ([[runRollup]]) and
-  * the refreshes ([[applyDelta]], [[forgetUrls]]) run the same stages and
-  * differ only in the stage dir and the commit: the resumable build
-  * writes the fixed dir `<ns>/build` (`ns` the stage's key namespace,
-  * e.g. `tier=1h`) and commits one (tier, day) partition at a time; a
-  * refresh writes a fresh `<ns>/<tag>[-r<n>]` dir and swaps all its days
-  * in one copy-on-write commit per stage.
+  * it was written (`<stage dir>/_day=<d>`, or `<stage dir>/_tier=<t>/
+  * _day=<d>` for the up-tiers stage). The build ([[runRollup]]) and the
+  * refreshes ([[applyDelta]], [[forgetUrls]]) run the same four stages
+  * and differ only in the stage dir and the commit: the resumable build
+  * writes the fixed dir `<ns>/build` (`ns` the stage's dir namespace,
+  * e.g. `tier=15min` or `tiers`) and commits one (tier, day) partition at
+  * a time; a refresh writes a fresh `<ns>/<tag>[-r<n>]` dir and swaps all
+  * its partitions in one copy-on-write commit per stage.
   *
   * Partition-independence invariant: every partition is a pure function of
   * one day of the stage before it (windows never span days: 900 | 3600 |
@@ -41,9 +42,10 @@ import graft.retention.Retention
   */
 object Pipeline {
 
-  /** Retention tiers in chain order: each aggregates the PREVIOUS one
-    * (continuous aggregates — raw pages are read once, by 15min only).
-    * Carries all three OPSD native resolutions (15/30/60 min) plus daily.
+  /** Retention tiers, finest first: 15min aggregates the pages, the
+    * others the stored 15-min partials (continuous aggregates — raw pages
+    * are read once, by 15min only). Carries all three OPSD native
+    * resolutions (15/30/60 min) plus daily.
     */
   val Tiers: Seq[(String, Long)] =
     Seq("15min" -> 900L, "30min" -> 1800L, "1h" -> 3600L, "1d" -> 86400L)
@@ -109,13 +111,15 @@ object Pipeline {
   }
 
   /** Build all tier + chunk partitions for the given days, resumable:
-    * each stage writes every day missing from the current snapshot in one
-    * job into its fixed stage dir (`<ns>/build`), then commits those
-    * `_day=<d>` dirs where they were written, one (tier, day) per commit.
-    * A resume's write replaces only the uncommitted day dirs, never a
-    * committed one, so a crash loses at most the uncommitted days of one
-    * stage and leaves no orphan dir. `failAfter >= 0` crashes after that
-    * many commits (test hook). Returns the number of newly committed
+    * each stage writes every (tier, day) partition missing from the
+    * current snapshot in one job into its fixed stage dir (`<ns>/build`),
+    * then commits those dirs where they were written, one (tier, day) per
+    * commit: the 15-min days, then every 30-min day, every 1-h day and
+    * every 1-d day, then the chunk and index days. A resume's write
+    * replaces only the uncommitted partition dirs, never a committed one,
+    * so a crash loses at most the uncommitted partitions of one stage and
+    * leaves no orphan dir. `failAfter >= 0` crashes after that many
+    * commits (test hook). Returns the number of newly committed
     * partitions.
     */
   def runRollup(
@@ -127,7 +131,7 @@ object Pipeline {
       indexBuckets: Int = 16,
       failAfter: Int = -1
   ): Int = {
-    val pages = spark.read.parquet(pagesPath)
+    val pages = ManifestTableLayer.readPartitions(spark, Seq(pagesPath))
     val pageDay =
       (if (pages.columns.contains("day")) col("day") else to_date(col("warc_ts")))
         .cast("string")
@@ -136,7 +140,7 @@ object Pipeline {
       chunkMaxPoints, indexBuckets)
     chain.foldLeft(0) { (n, stage) =>
       val done = table.currentPartitions().map(_.key).toSet
-      val missing = days.filterNot(d => done.contains(stage.keyOf(d)))
+      val missing = stage.parts(days).filterNot(p => done.contains(p.key))
       if (missing.isEmpty) n
       else writeStage(table, stage, missing, table.dataDir(s"${stage.ns}/build"), "build")
         .foldLeft(n) { (n, meta) =>
@@ -153,11 +157,11 @@ object Pipeline {
     * delta is pure addition — merged(n, sum) = stored + delta per
     * (series, bucket) — so ALL touched days of the 15-min tier merge in
     * ONE distributed aggregation over (stored partitions ∪ delta
-    * partials), each higher tier re-chains from its freshly merged child
-    * in one aggregation per TIER (work bounded by the touched days,
-    * never the corpus — and the job count bounded by the TIER count,
-    * never the day count: a year-long backfill is ~6 stage commits, not
-    * ~1,800 driver-serialized jobs), and the touched days' Gorilla
+    * partials), the higher tiers re-aggregate the freshly merged 15-min
+    * days in one aggregation (work bounded by the touched days, never the
+    * corpus — and the job count bounded by the STAGE count, never the day
+    * count: a year-long backfill is 4 stage commits, not ~1,800
+    * driver-serialized jobs), and the touched days' Gorilla
     * chunks + index rebuild in one keyed job each (compressed sorted
     * blobs don't merge incrementally; day-bounded scope keeps it cheap).
     * A delta may introduce entirely new days — those build fresh.
@@ -241,7 +245,7 @@ object Pipeline {
   ): (Seq[String], Seq[String]) = {
     import spark.implicits._
     require(urls.nonEmpty, "forgetUrls needs at least one url")
-    val pages = spark.read.parquet(pagesPath)
+    val pages = ManifestTableLayer.readPartitions(spark, Seq(pagesPath))
     val hit = pages.filter(col("url").isin(urls: _*))
       .select(col("bucket"), col("day").cast("string"))
       .distinct().as[(Int, String)].collect()
@@ -276,7 +280,7 @@ object Pipeline {
 
     // ---- recompute the touched days' 15-min tier from patched raw; days
     // the erasure emptied entirely are DROPPED, not rebuilt
-    val freshPages = spark.read.parquet(pagesPath)
+    val freshPages = ManifestTableLayer.readPartitions(spark, Seq(pagesPath))
       .filter(col("day").cast("string").isin(days: _*))
     val alive = freshPages.select(col("day").cast("string"))
       .distinct().as[String].collect().toSet
@@ -298,13 +302,13 @@ object Pipeline {
   }
 
   /** Shared tail of [[applyDelta]] / [[forgetUrls]]: commit the given
-    * 15-min tier content for the touched days, then re-chain every higher
-    * tier and rebuild chunks + index — one job + one copy-on-write commit
-    * PER STAGE (never per day). Each stage writes to a FRESH stage dir
-    * (`<ns>/<tag>[-r<n>]`) — never the live dirs, which the merged plan
-    * is lazily reading — and swaps all touched days in ONE snapshot; old
-    * dirs stay for time travel until `expireSnapshots`. The store-level
-    * twin of the streaming MergeSink's one-job MERGE.
+    * 15-min tier content for the touched days, then rebuild the higher
+    * tiers, chunks and index — one job + one copy-on-write commit PER
+    * STAGE (never per day or tier). Each stage writes to a FRESH stage
+    * dir (`<ns>/<tag>[-r<n>]`) — never the live dirs, which the merged
+    * plan is lazily reading — and swaps all its touched partitions in ONE
+    * snapshot; old dirs stay for time travel until `expireSnapshots`. The
+    * store-level twin of the streaming MergeSink's one-job MERGE.
     */
   private def refreshChainFrom15(
       spark: SparkSession,
@@ -317,23 +321,35 @@ object Pipeline {
   ): Unit =
     for (stage <- stages(spark, table, _ => merged15, chunkMaxPoints, indexBuckets)) {
       val metas =
-        writeStage(table, stage, days, table.freshDir(s"${stage.ns}/$tag"), tag)
+        writeStage(table, stage, stage.parts(days), table.freshDir(s"${stage.ns}/$tag"), tag)
       table.commit(metas, metas.map(_.key))
     }
 
-  /** One stage of the tier chain: `ns` is its key namespace (a day's
-    * partition key is `<ns>/day=<d>`, and its stage dirs live under
-    * `data/<ns>/`), and `frame(days)` is the stage's output for those days
-    * with the routing column `_day`. A partition's lineage is the caller's
-    * tag (build: from pages; delta: stored + late partials; forget:
-    * patched pages) and the stage's input.
+  /** One (tier, day) partition a stage writes: its table key, its value
+    * for each of the stage's route columns, and what it is built from. A
+    * committed partition's lineage is the caller's tag (build: from pages;
+    * delta: stored + late partials; forget: patched pages), this
+    * `lineage` and the day.
+    */
+  private case class Part(key: String, route: Seq[String], lineage: String)
+
+  /** One stage of the tier chain: its stage dirs live under `data/<ns>/`,
+    * its rows are routed by the `route` columns, `parts(days)` are its
+    * partitions over those days in commit order, and `frame(parts)` is
+    * its output for exactly those partitions, with the route columns.
     */
   private case class Stage(
       ns: String,
-      lineage: String,
-      frame: Seq[String] => DataFrame) {
-    def keyOf(day: String): String = s"$ns/day=$day"
-  }
+      route: Seq[String],
+      parts: Seq[String] => Seq[Part],
+      frame: Seq[Part] => DataFrame)
+
+  /** A stage of one key namespace `ns` (a day's partition key is
+    * `<ns>/day=<d>`), routed by `_day`.
+    */
+  private def dayStage(ns: String, lineage: String)(frame: Seq[String] => DataFrame) =
+    Stage(ns, Seq("_day"), _.map(d => Part(s"$ns/day=$d", Seq(d), lineage)),
+      parts => frame(parts.map(_.route.head)))
 
   /** bucket start (epoch s) -> day, for routing rows into day partitions
     * (windows never span days, so this is exact)
@@ -342,18 +358,23 @@ object Pipeline {
     to_date(timestamp_seconds(col(epochSec))).cast("string")
 
   /** The tier chain that the build and both refreshes run: 15 min from
-    * `tier15(days)` (pages, or stored + delta partials), then 30 min, 1 h
-    * and 1 d each chained from the STORED partitions of the tier before
-    * it (continuous aggregates: raw data is read once; 900|1800|3600|86400
-    * each divide the next, so every step is an exact re-aggregation), then
-    * the Gorilla chunks and the delta index of the stored 15-min tier.
-    * Chunk runs restart at every (day, series) boundary, so each day's
-    * chunks are bitwise those of a per-day build.
+    * `tier15(days)` (pages, or stored + delta partials); then 30 min, 1 h
+    * and 1 d in ONE stage from the STORED 15-min partitions (continuous
+    * aggregates: raw data is read once; 900 divides 1800, 3600 and 86400,
+    * so each is an exact re-aggregation, equal to chaining each tier from
+    * the one before it), routed by (`_tier`, `_day`) and built only for
+    * the (tier, day) partitions asked for; then the Gorilla chunks and the
+    * delta index of the stored 15-min tier. Chunk runs restart at every
+    * (day, series) boundary, so each day's chunks are bitwise those of a
+    * per-day build.
     *
     * Layout: each stage's output is hash-partitioned by (day, series key)
     * into `spark.sql.shuffle.partitions` tasks, so a day partition holds
     * that many files, each with a share of the series — the per-series
-    * dictionary skipping the readers rely on.
+    * dictionary skipping the readers rely on. The up-tiers stage lays out
+    * its 15-min input by the same (day, series key) before it aggregates,
+    * so each of its day dirs holds the series a stage of that tier alone
+    * would put in each file, with no shuffle between aggregation and write.
     */
   private def stages(
       spark: SparkSession,
@@ -370,14 +391,28 @@ object Pipeline {
       val cur = table.currentPartitions().map(p => p.key -> p.path).toMap
       ManifestTableLayer.readPartitions(spark, days.map(d => cur(keyOf(d))))
     }
-    val t15 = Stage("tier=15min", "15min", days =>
+    val t15 = dayStage("tier=15min", "15min")(days =>
       laidOut(tier15(days).withColumn("_day", dayOf("bucket_ts")), "domain"))
-    val chained = Tiers.sliding(2).map { case Seq((child, _), (tier, period)) =>
-      Stage(s"tier=$tier", s"$tier<-$child", days => laidOut(
-        TimeSeriesOps.chainTier(stored(tierKey(child, _), days),
-          seriesCols, period).withColumn("_day", dayOf("bucket_ts")), "domain"))
-    }.toSeq
-    val chunks = Stage("chunks-15min", "chunks-15min<-15min", days => {
+    val up = Tiers.tail
+    val upTiers = Stage("tiers", Seq("_tier", "_day"),
+      days => for ((t, _) <- up; d <- days) yield Part(tierKey(t, d), Seq(t, d), s"$t<-15min"),
+      parts => {
+        val days = parts.map(_.route(1)).distinct.sorted
+        // every group falls in one (day, domain), so the layout can come
+        // before the aggregation and the write needs no second shuffle
+        val child = laidOut(
+          stored(tierKey("15min", _), days).withColumn("_day", dayOf("bucket_ts")), "domain")
+        // only the (tier, day) pairs asked for: a resume may ask for some
+        // tiers of a day, and its write must not replace a committed dir
+        val daysOf = parts.groupMap(_.route.head)(_.route(1))
+        val asked = up.zipWithIndex.flatMap { case ((t, _), i) =>
+          daysOf.get(t).map(ds => col("tier_idx") === i && col("_day").isin(ds: _*))
+        }.reduce(_ || _)
+        TimeSeriesOps.chainTiers(child, "_day" +: seriesCols, up.map(_._2)).filter(asked)
+          .withColumn("_tier", element_at(typedLit(up.map(_._1)), col("tier_idx") + 1))
+          .drop("tier_idx")
+      })
+    val chunks = dayStage("chunks-15min", "chunks-15min<-15min")(days => {
       val flat = stored(tierKey("15min", _), days).select(
         dayOf("bucket_ts").as("pkey"),
         concat_ws("_", col("domain"), col("metric")).as("series_flat"),
@@ -385,29 +420,30 @@ object Pipeline {
       ChunkWriter.buildKeyed(flat, "15min", chunkMaxPoints, files).toDF()
         .withColumnRenamed("pkey", "_day")
     })
-    val index = Stage("index-15min", "index-15min<-chunks-15min", days => {
+    val index = dayStage("index-15min", "index-15min<-chunks-15min")(days => {
       val keyed = stored(chunkKey("15min", _), days).withColumn("pkey", dayOf("t0"))
       laidOut(ChunkWriter.buildIndexKeyed(keyed, indexBuckets)
         .withColumnRenamed("pkey", "_day"), "part_id")
     })
-    (t15 +: chained) :+ chunks :+ index
+    Seq(t15, upTiers, chunks, index)
   }
 
-  /** Write `stage` for `days` into `dir` and return one meta per day.
-    * Every day must come out: a day the stage emptied would leave its
-    * STALE partition live after a refresh swap.
+  /** Write `stage`'s `parts` into `dir` and return one meta per part, in
+    * order. Every part must come out: a partition the stage emptied would
+    * leave its STALE predecessor live after a refresh swap.
     */
   private def writeStage(
       table: ManifestTableLayer,
       stage: Stage,
-      days: Seq[String],
+      parts: Seq[Part],
       dir: Path,
       tag: String
   ): Seq[PartitionMeta] = {
-    val (metas, empty) = table.writeStage(stage.frame(days), dir, "_day", days,
-      stage.keyOf, d => s"$tag:${stage.lineage} day=$d")
-    require(empty.isEmpty,
-      s"${dir.getFileName} produced zero rows for day(s) ${empty.mkString(",")}")
+    val byRoute = parts.map(p => p.route -> p).toMap
+    val (metas, empty) = table.writeStage(stage.frame(parts), dir, stage.route,
+      parts.map(_.route), byRoute(_).key, v => s"$tag:${byRoute(v).lineage} day=${v.last}")
+    require(empty.isEmpty, s"${stage.ns} produced zero rows for " +
+      empty.map(byRoute(_).key).mkString(","))
     metas
   }
 

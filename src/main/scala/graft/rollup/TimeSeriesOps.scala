@@ -31,6 +31,10 @@ object TimeSeriesOps {
     * non-negative epochs, so long division floors correctly.
     */
   def bucketStart(epochSec: Column, periodSec: Long): Column =
+    bucketStart(epochSec, lit(periodSec))
+
+  /** [[bucketStart]] with the period taken from a column, row by row. */
+  def bucketStart(epochSec: Column, periodSec: Column): Column =
     (epochSec.cast("long") / periodSec).cast("long") * periodSec
 
   /** Tier-0 aggregation: raw points -> one row per (series, window) with
@@ -74,6 +78,33 @@ object TimeSeriesOps {
       )
       .withColumn("mean_v", col("sum_v") / col("n"))
   }
+
+  /** Several tiers up from one child tier in ONE aggregation: every child
+    * row is exploded over `parentPeriodsSec` (its index the `tier_idx`
+    * column) and the rows are summed per (tier_idx, series, parent
+    * bucket). The rows of index i are those of
+    * `chainTier(childTier, seriesCols, parentPeriodsSec(i))`; when each
+    * period divides the next they are also those of the chain that builds
+    * each tier from the one before it, since exact partials sum in any
+    * grouping.
+    *
+    * Output: tier_idx ++ seriesCols ++ (bucket_ts, n, sum_v, mean_v).
+    */
+  def chainTiers(
+      childTier: DataFrame,
+      seriesCols: Seq[String],
+      parentPeriodsSec: Seq[Long]
+  ): DataFrame =
+    childTier
+      .select((seriesCols.map(col) ++ Seq(col("bucket_ts"), col("n"), col("sum_v")) :+
+        posexplode(typedLit(parentPeriodsSec)).as(Seq("tier_idx", "period"))): _*)
+      .groupBy((col("tier_idx") +: seriesCols.map(col) :+
+        bucketStart(col("bucket_ts"), col("period")).as("bucket_ts")): _*)
+      .agg(
+        sum(col("n")).as("n"),
+        sum(col("sum_v")).as("sum_v")
+      )
+      .withColumn("mean_v", col("sum_v") / col("n"))
 
   /** Salted two-phase aggregation for skewed series (the hot-domain case:
     * one domain can dominate a zipf-distributed crawl). Phase 1 aggregates

@@ -108,8 +108,8 @@ object MergeSink {
       // snapshot and swept by expireSnapshots.
       val ns = keyPrefix.split("/").head
       val (added, vanished) = layer.writeStage(merged,
-        layer.freshDir(s"$ns/b$batchId"), BucketCol, buckets.toSeq,
-        keyPrefix + _, _ => s"$lineageTag batch=$batchId")
+        layer.freshDir(s"$ns/b$batchId"), Seq(BucketCol), buckets.toSeq.map(Seq(_)),
+        keyPrefix + _.head, _ => s"$lineageTag batch=$batchId")
       // merge-contract check: every TOUCHED bucket must re-appear in the
       // merged output (the default mergers only grow or keep per-key
       // rows). A merge that emptied a bucket writes no mbk= dir; without
@@ -118,12 +118,12 @@ object MergeSink {
       // merge (allowEmptied), in which case the emptied buckets' keys are
       // DROPPED in the same snapshot.
       require(allowEmptied || vanished.isEmpty,
-        s"merge produced zero rows for touched bucket(s) ${vanished.mkString(",")} " +
+        s"merge produced zero rows for touched bucket(s) ${vanished.map(_.head).mkString(",")} " +
           "— a bucket-emptying merge needs an explicit empty-partition commit, " +
           "which no current sink's merge can produce")
       // one snapshot per batch; re-written keys are swapped, emptied keys
       // (allowEmptied only) are dropped
-      layer.commit(added, added.map(_.key) ++ vanished.map(keyPrefix + _))
+      layer.commit(added, added.map(_.key) ++ vanished.map(keyPrefix + _.head))
       if (expireEvery > 0 && (batchId + 1) % expireEvery == 0)
         layer.expireSnapshots(keepLast = 2)
     } finally inc.unpersist()

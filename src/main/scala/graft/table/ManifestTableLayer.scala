@@ -59,31 +59,34 @@ class ManifestTableLayer(rootDir: String) {
     Iterator.from(0).map(i => dataDir(if (i == 0) name else s"$name-r$i"))
       .find(p => !Files.exists(p)).get
 
-  /** Write `df` into `dir` in ONE `partitionBy(route)` job and describe
-    * the partitions it made: one meta per requested value `v` whose
-    * `dir/<route>=<v>` dir came out (key `keyOf(v)`, rows and bytes from
-    * [[ManifestTableLayer.dirStats]]), plus the requested values that
-    * produced no dir. The overwrite is dynamic for this write only: it
-    * replaces just the route dirs it writes, so partitions already in
-    * `dir` — committed or not — stay as they are. Values must be
-    * partition-path-safe (days, rendered numbers). Local dirs and files
-    * are made through [[NioLocalFileSystem]], with no `chmod` process.
+  /** Write `df` into `dir` in ONE `partitionBy(route: _*)` job and
+    * describe the partitions it made: one meta per requested value tuple
+    * `v` (one value per route column, in route order) whose
+    * `dir/<route(0)>=<v(0)>/<route(1)>=<v(1)>/...` leaf dir came out (key
+    * `keyOf(v)`, rows and bytes from [[ManifestTableLayer.dirStats]]),
+    * plus the requested tuples that produced no dir. The overwrite is
+    * dynamic for this write only: it replaces just the leaf dirs it
+    * writes, so partitions already in `dir` — committed or not — stay as
+    * they are. Values must be partition-path-safe (days, tier names,
+    * rendered numbers). Local dirs and files are made through
+    * [[NioLocalFileSystem]], with no `chmod` process.
     */
   def writeStage(
       df: DataFrame,
       dir: Path,
-      route: String,
-      values: Seq[String],
-      keyOf: String => String,
-      lineageOf: String => String
-  ): (Seq[PartitionMeta], Seq[String]) = {
-    NioLocalFileSystem.write(df).partitionBy(route).mode("overwrite")
+      route: Seq[String],
+      values: Seq[Seq[String]],
+      keyOf: Seq[String] => String,
+      lineageOf: Seq[String] => String
+  ): (Seq[PartitionMeta], Seq[Seq[String]]) = {
+    NioLocalFileSystem.write(df).partitionBy(route: _*).mode("overwrite")
       .option("partitionOverwriteMode", "dynamic").parquet(dir.toString)
-    val (made, missing) = values.partition(v => Files.isDirectory(dir.resolve(s"$route=$v")))
+    def leaf(v: Seq[String]) =
+      dir.resolve(route.zip(v).map { case (r, x) => s"$r=$x" }.mkString("/"))
+    val (made, missing) = values.partition(v => Files.isDirectory(leaf(v)))
     (made.map { v =>
-      val part = dir.resolve(s"$route=$v")
-      val (rows, bytes) = ManifestTableLayer.dirStats(part)
-      PartitionMeta(keyOf(v), part.toString, rows, bytes, lineageOf(v))
+      val (rows, bytes) = ManifestTableLayer.dirStats(leaf(v))
+      PartitionMeta(keyOf(v), leaf(v).toString, rows, bytes, lineageOf(v))
     }, missing)
   }
 
@@ -115,8 +118,7 @@ class ManifestTableLayer(rootDir: String) {
       n.put("rows", p.rows); n.put("bytes", p.bytes)
       n.put("lineage", p.lineage)
     }
-    Files.writeString(snapPath(id), mapper.writerWithDefaultPrettyPrinter()
-      .writeValueAsString(rootNode))
+    Files.writeString(snapPath(id), mapper.writeValueAsString(rootNode))
     // atomic pointer swap — readers see old or new snapshot, never partial
     val tmp = root.resolve(s".CURRENT.tmp.$id")
     Files.writeString(tmp, id.toString)
@@ -236,17 +238,19 @@ object ManifestTableLayer {
     (rows, files.map(Files.size).sum)
   }
 
-  /** Read stored partition dirs as one frame, with the schema Spark wrote
-    * into the footer of the first path's first data file (every partition
-    * here is written by Spark's Parquet writer). A schema-less read would
-    * run a Spark job to infer that same schema; this one runs no job
-    * until the caller's action.
+  /** Read Parquet dirs written by Spark as one frame, with the schema
+    * Spark wrote into the footer of the first data file found under the
+    * first path. A schema-less read would run a Spark job to infer that
+    * same schema; this one runs no job until the caller's action. Spark
+    * still discovers partition columns from `<col>=<v>` dirs below the
+    * given paths: a stored partition's leaf dir has none, the pages
+    * table root yields `bucket` and `day`.
     */
   def readPartitions(spark: SparkSession, paths: Seq[String]): DataFrame = {
     require(paths.nonEmpty, "no partitions to read")
     val first = {
-      val s = Files.list(Paths.get(paths.head))
-      try s.iterator().asScala.find(isDataFile)
+      val s = Files.walk(Paths.get(paths.head))
+      try s.iterator().asScala.find(f => isDataFile(f) && Files.isRegularFile(f))
         .getOrElse(sys.error(s"${paths.head} holds no Parquet file"))
       finally s.close()
     }

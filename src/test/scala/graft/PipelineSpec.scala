@@ -77,6 +77,33 @@ class PipelineSpec extends AnyFunSuite {
     assert(stored.count() == direct.count())
   }
 
+  test("stored 30-min, 1-h and 1-d tiers equal the chain from each stored child, bitwise") {
+    val cols = Seq("domain", "metric", "bucket_ts", "n", "sum_v", "mean_v").map(col)
+    Pipeline.Tiers.sliding(2).foreach { case Seq((child, _), (tier, period)) =>
+      val chained = graft.rollup.TimeSeriesOps.chainTier(
+        Pipeline.readTier(spark, table, child), Seq("domain", "metric"), period).select(cols: _*)
+      val stored = Pipeline.readTier(spark, table, tier).select(cols: _*)
+      assert(stored.except(chained).isEmpty && chained.except(stored).isEmpty,
+        s"stored $tier tier must equal the chain from the stored $child tier")
+      assert(stored.count() == chained.count(), tier)
+      // and every row sits in the partition of its own day
+      val misrouted = table.currentPartitions().filter(_.key.startsWith(s"tier=$tier/"))
+        .map(p => spark.read.parquet(p.path).select(col("bucket_ts"),
+          lit(p.key.stripPrefix(s"tier=$tier/day=")).as("day")))
+        .reduce(_ union _)
+        .filter(to_date(timestamp_seconds(col("bucket_ts"))).cast("string") =!= col("day"))
+      assert(misrouted.isEmpty, s"$tier rows outside their day partition")
+    }
+  }
+
+  test("pages are read with the footer schema: no Spark job, partition columns discovered") {
+    val (got, jobs) = jobsOf(ManifestTableLayer.readPartitions(spark, Seq(pagesPath)))
+    assert(jobs == 0, s"reading the pages table ran $jobs Spark job(s) before any action")
+    val ref = spark.read.parquet(pagesPath)
+    assert(got.schema == ref.schema)
+    assert(got.select("bucket", "day").distinct().count() == 8 * 7)
+  }
+
   test("chunk partitions decode back to the stored 15-min tier, bitwise") {
     val chunkParts = table.currentPartitions()
       .filter(_.key.startsWith("chunks-15min/")).map(_.path)
@@ -127,9 +154,12 @@ class PipelineSpec extends AnyFunSuite {
       Pipeline.listDays(spark, s"$base/pages80"), chunkMaxPoints = 128)
     val built15 = tInc.currentPartitions()
       .filter(_.key.startsWith("tier=15min/")).map(p => p.key -> p.path).toMap
+    val snap0 = tInc.currentSnapshotId()
     val refreshed = Pipeline.applyDelta(spark, all.filter(late), tInc,
       chunkMaxPoints = 128)
     assert(refreshed.nonEmpty)
+    // one copy-on-write commit per stage: 15 min, the up-tiers, chunks, index
+    assert(tInc.currentSnapshotId() == snap0 + 4)
     // full: one build over everything
     Pages.writePartitioned(all, s"$base/pages100", buckets = 8)
     val tFull = new ManifestTableLayer(s"$base/full")
@@ -226,10 +256,14 @@ class PipelineSpec extends AnyFunSuite {
     }
     val (n7, j7) = build(7)
     val (n14, j14) = build(14)
+    info(s"Spark jobs: $j7 for 7 days, $j14 for 14 days")
     assert(n7 == 6 * 7 && n14 == 6 * 14)
     // each stage is one query over all its days, committed per (tier, day):
     // twice the days must not mean more driver-launched jobs
     assert(j7 < n7, s"7-day build ran $j7 jobs for $n7 partitions — per-unit loop is back")
+    // 18 while each up-tier was its own stage and the pages schema was
+    // inferred by a job
+    assert(j7 <= 18 - 6, s"7-day build ran $j7 jobs")
     assert(j14 <= j7 + 2, s"14-day build ran $j14 jobs vs $j7 for 7 days")
   }
 
@@ -263,6 +297,45 @@ class PipelineSpec extends AnyFunSuite {
     assert(Retention.expire(t, keepLast = 1) == 0)
     def leaves(p: java.nio.file.Path): Seq[String] = {
       import scala.jdk.CollectionConverters._
+      val kids = Files.list(p).iterator().asScala.filter(Files.isDirectory(_)).toSeq
+      if (kids.isEmpty) Seq(p.toString) else kids.flatMap(leaves)
+    }
+    assert(leaves(java.nio.file.Paths.get(s"$root2/table/data")).toSet ==
+      t.currentPartitions().map(_.path).toSet)
+    assert(digests(t) == digests(fresh))
+  }
+
+  test("crash inside the up-tiers' 1-h partitions resumes tier by tier, equals a fresh build") {
+    import scala.jdk.CollectionConverters._
+    val fresh = table
+    val root2 = SparkTestSession.tmpDir("pipe-resume-tiers-").toString
+    val t = new ManifestTableLayer(s"$root2/table")
+    val days = Pipeline.listDays(spark, pagesPath)
+    // 7 x 15 min + 7 x 30 min + 3 x 1 h: the up-tiers stage wrote all 21
+    // of its partitions, 10 of them are committed
+    val k = 17
+    intercept[Checkpoint.InjectedCrash] {
+      Pipeline.runRollup(spark, pagesPath, t, days, chunkMaxPoints = 128, failAfter = k)
+    }
+    val committed = t.currentPartitions()
+    assert(committed.map(_.key) == days.map(Pipeline.tierKey("15min", _)) ++
+      days.map(Pipeline.tierKey("30min", _)) ++ days.take(3).map(Pipeline.tierKey("1h", _)))
+    def files(dir: String): Seq[String] = {
+      val s = Files.list(java.nio.file.Paths.get(dir))
+      try s.iterator().asScala.map(_.getFileName.toString).toSeq.sorted finally s.close()
+    }
+    val before = committed.map(p => p.path -> files(p.path))
+    assert(Pipeline.runRollup(spark, pagesPath, t, days, chunkMaxPoints = 128) == 6 * 7 - k)
+    // the resume rewrote no committed dir (file names carry the write's id)
+    before.foreach { case (dir, fs) => assert(files(dir) == fs, s"$dir was rewritten") }
+    // the commit order of the chained stages, in both builds: every day of
+    // one tier before the next tier
+    val order = Pipeline.Tiers.flatMap { case (tier, _) => days.map(Pipeline.tierKey(tier, _)) } ++
+      days.map(Pipeline.chunkKey("15min", _)) ++ days.map(Pipeline.indexKey("15min", _))
+    assert(fresh.currentPartitions().map(_.key) == order)
+    assert(t.currentPartitions().map(_.key) == order)
+    // every leaf dir live, the same rows
+    def leaves(p: java.nio.file.Path): Seq[String] = {
       val kids = Files.list(p).iterator().asScala.filter(Files.isDirectory(_)).toSeq
       if (kids.isEmpty) Seq(p.toString) else kids.flatMap(leaves)
     }

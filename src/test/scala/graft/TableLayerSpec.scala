@@ -19,7 +19,7 @@ class TableLayerSpec extends AnyFunSuite {
   /** `df(k)` written as the one partition `key`, in a fresh stage dir. */
   private def write(t: ManifestTableLayer, k: Int, key: String): PartitionMeta = {
     val (metas, missing) = t.writeStage(df(k).withColumn("p", lit("v")),
-      t.freshDir(key), "p", Seq("v"), _ => key, _ => "test")
+      t.freshDir(key), Seq("p"), Seq(Seq("v")), _ => key, _ => "test")
     assert(missing.isEmpty && metas.map(_.key) == Seq(key))
     metas.head
   }
@@ -82,8 +82,8 @@ class TableLayerSpec extends AnyFunSuite {
     * day dir gets four data files, as a build stage's day dirs do.
     */
   private def stage(t: ManifestTableLayer, ns: String): Seq[PartitionMeta] = {
-    val (metas, missing) = t.writeStage(stageFrame, t.dataDir(s"$ns/build"), "_day",
-      stageDays, d => s"$ns/day=$d", _ => "test")
+    val (metas, missing) = t.writeStage(stageFrame, t.dataDir(s"$ns/build"), Seq("_day"),
+      stageDays.map(Seq(_)), d => s"$ns/day=${d.head}", _ => "test")
     assert(missing.isEmpty && metas.size == stageDays.size)
     metas
   }
@@ -134,6 +134,43 @@ class TableLayerSpec extends AnyFunSuite {
       assert(m.rows == spark.read.parquet(m.path).count(), s"rows of ${m.key}")
       assert(m.bytes == files.map(Files.size).sum, s"bytes of ${m.key}")
     }
+  }
+
+  test("a store whose snapshots were written pretty-printed still reads, time-travels and commits") {
+    import com.fasterxml.jackson.databind.ObjectMapper
+    val root = freshRoot()
+    val t = new ManifestTableLayer(root)
+    t.commit(Seq(write(t, 1, "tier=x/day=d1")), Seq.empty)
+    val pinned = t.currentSnapshotId()
+    t.commit(Seq(write(t, 2, "tier=x/day=d2")), Seq.empty)
+    val parts = t.currentPartitions()
+    // rewrite every snapshot the way earlier stores wrote them: Jackson's
+    // default pretty printer, one field per line
+    val mapper = new ObjectMapper()
+    val snaps = java.nio.file.Paths.get(root, "snapshots")
+    def snapFiles = {
+      val s = Files.list(snaps)
+      try s.iterator().asScala.toSeq.sortBy(_.getFileName.toString) finally s.close()
+    }
+    snapFiles.foreach { p =>
+      assert(!Files.readString(p).contains("\n"), s"$p is not compact")
+      Files.writeString(p, mapper.writerWithDefaultPrettyPrinter()
+        .writeValueAsString(mapper.readTree(Files.readString(p))))
+    }
+    val pretty = snapFiles.map(p => p -> Files.readString(p))
+    assert(pretty.forall(_._2.count(_ == '\n') > 10))
+    val reopened = new ManifestTableLayer(root)
+    assert(reopened.currentPartitions() == parts)
+    assert(reopened.read(spark).count() == 20)
+    assert(reopened.readAt(spark, pinned).count() == 10)
+    reopened.commit(Seq(write(reopened, 3, "tier=x/day=d3")), Seq("tier=x/day=d1"))
+    assert(reopened.currentPartitions().map(_.key) == Seq("tier=x/day=d2", "tier=x/day=d3"))
+    assert(reopened.read(spark).count() == 20)
+    assert(reopened.readAt(spark, pinned).count() == 10)
+    // the new snapshot is compact; the old ones are left as they were
+    val now = snapFiles
+    assert(now.size == pretty.size + 1 && !Files.readString(now.last).contains("\n"))
+    pretty.foreach { case (p, text) => assert(Files.readString(p) == text) }
   }
 
   test("read, readAt and readTier take the footer schema: no Spark job before the action") {
