@@ -10,12 +10,14 @@ import graft.table.NioLocalFileSystem
   * back, plus the delta-encoded per-partition index the north rule asks for.
   *
   * Layout decision (scale): a chunk covers ONE series over a bounded run of
-  * points (`maxPoints`). The build is a single
-  * `repartition(series) -> sortWithinPartitions(series, ts) -> mapPartitions`
-  * pass — the same shuffle+sort the gap-fill window ops already need, so on
-  * the full pipeline the chunk build rides an existing ordering instead of
-  * adding one. mapPartitions streams: memory is O(maxPoints), never
-  * O(partition), regardless of how hot a series is.
+  * points (`maxPoints`). Both encoders take a routing key `pkey` (the day,
+  * when a build writes many store partitions at once). [[buildKeyed]] is
+  * one `repartition(pkey, series) -> sortWithinPartitions(pkey, series,
+  * ts) -> mapPartitions` pass that streams the sorted points into chunk
+  * runs: memory is O(maxPoints), never O(partition), however hot a series
+  * is. [[buildIndexKeyed]] groups the chunks by (pkey, part_id, tier) into
+  * one delta+varint directory each. [[build]] and [[buildIndex]] are the
+  * same two passes over one constant key.
   */
 object ChunkWriter {
 
@@ -31,54 +33,22 @@ object ChunkWriter {
 
   case class FlatPoint(series_flat: String, ts: Long, value: Option[Double])
 
-  /** Encoder-side row shape: null folded to the codec's NaN sentinel
-    * BEFORE deserialization, so the hot loop moves primitives (no
-    * Option[Double] allocation per point).
-    */
-  case class PrimPoint(series_flat: String, ts: Long, value: Double)
-
   /** Build chunks from a points table with columns
-    * (series_flat string, ts long, value double-nullable).
+    * (series_flat string, ts long, value double-nullable): [[buildKeyed]]
+    * over one constant routing key, in `spark.sql.shuffle.partitions` tasks.
     */
-  def build(
-      points: DataFrame,
-      tier: String,
-      maxPoints: Int = 1024,
-      numPartitions: Int = 0
-  ): Dataset[FlatChunk] = {
+  def build(points: DataFrame, tier: String, maxPoints: Int = 1024): Dataset[FlatChunk] = {
     val spark = points.sparkSession
     import spark.implicits._
-    val pts = points
-      .select(col("series_flat"), col("ts").cast("long"),
-        coalesce(col("value").cast("double"), lit(Double.NaN)).as("value"))
-      .as[PrimPoint]
-    val parts =
-      if (numPartitions > 0) pts.repartition(numPartitions, col("series_flat"))
-      else pts.repartition(col("series_flat"))
-    parts
-      .sortWithinPartitions(col("series_flat"), col("ts"))
-      .mapPartitions { it =>
-        new Iterator[FlatChunk] {
-          private var cur: PrimPoint = if (it.hasNext) it.next() else null
-          override def hasNext: Boolean = cur != null
-          override def next(): FlatChunk = {
-            val ts = new ArrayBuffer[Long](64)
-            val vs = new ArrayBuffer[Double](64)
-            val key = cur.series_flat
-            while (cur != null && cur.series_flat == key && ts.length < maxPoints) {
-              ts += cur.ts
-              vs += cur.value
-              cur = if (it.hasNext) it.next() else null
-            }
-            val blob = Gorilla.encode(ts.toArray, vs.toArray)
-            FlatChunk(key, tier, ts.head, ts.last, ts.length, blob,
-              Gorilla.crc32(blob))
-          }
-        }
-      }
+    buildKeyed(points.withColumn("pkey", lit("")), tier, maxPoints,
+      spark.sessionState.conf.numShufflePartitions)
+      .drop("pkey").as[FlatChunk]
   }
 
-  /** [[PrimPoint]] with a routing key (a day) in front. */
+  /** Encoder-side point with its routing key (a day) in front; null is
+    * folded to the codec's NaN sentinel BEFORE deserialization, so the hot
+    * loop moves primitives (no Option[Double] allocation per point).
+    */
   case class KeyedPoint(pkey: String, series_flat: String, ts: Long, value: Double)
 
   /** [[FlatChunk]] with its routing key — feeds a dynamic-partition write. */
@@ -93,8 +63,8 @@ object ChunkWriter {
       crc: Int
   )
 
-  /** Multi-partition chunk build: [[build]] with an extra routing column
-    * `pkey` (the day), so the chunks of MANY store partitions build in ONE
+  /** Multi-partition chunk build: the chunks of MANY store partitions
+    * (routing column `pkey`, the day) build in ONE
     * repartition+sort+mapPartitions job instead of one driver-launched job
     * per day. Chunk runs restart at every (pkey, series) boundary, so each
     * pkey's chunks are bitwise identical to a per-pkey [[build]] — the
@@ -138,10 +108,18 @@ object ChunkWriter {
       }
   }
 
-  /** Keyed form of [[buildIndex]]: one distributed pass indexes the chunk
-    * partitions of many pkeys at once; per pkey the directory bytes are
-    * bitwise identical to a per-pkey [[buildIndex]] (the group key just
-    * gains the pkey prefix).
+  /** The storage partition of a chunk: a hash bucket of its series
+    * (mirroring the table layout's bucket-by-url-hash). The index builders
+    * and the part_id chunk store all derive it here, so the index's
+    * verdicts map 1:1 onto storage partitions.
+    */
+  private def withPartId(chunks: DataFrame, buckets: Int): DataFrame =
+    chunks.withColumn("part_id", pmod(xxhash64(col("series_flat")), lit(buckets)).cast("int"))
+
+  /** Index the chunk partitions of many pkeys in one distributed pass: one
+    * [[PartitionIndex]] row per (pkey, part_id, tier), with the pkey in
+    * front. Per pkey the directory bytes are bitwise identical to a
+    * per-pkey [[buildIndex]] (the group key just gains the pkey prefix).
     */
   def buildIndexKeyed(
       chunks: DataFrame, // KeyedChunk columns (blob unused beyond stats)
@@ -149,8 +127,7 @@ object ChunkWriter {
   ): DataFrame = {
     val spark = chunks.sparkSession
     import spark.implicits._
-    chunks
-      .withColumn("part_id", pmod(xxhash64(col("series_flat")), lit(buckets)).cast("int"))
+    withPartId(chunks, buckets)
       .select($"pkey", $"part_id", $"tier", $"series_flat", $"t0", $"t_max", $"n")
       .as[(String, Int, String, String, Long, Long, Int)]
       .groupByKey { case (pk, p, t, _, _, _, _) => (pk, p, t) }
@@ -176,6 +153,16 @@ object ChunkWriter {
           dir.toArray))
       }
       .select(col("_1").as("pkey"), col("_2.*"))
+  }
+
+  /** Build the per-partition index from the chunk table:
+    * [[buildIndexKeyed]] over one constant routing key.
+    */
+  def buildIndex(chunks: Dataset[FlatChunk], buckets: Int): Dataset[PartitionIndex] = {
+    val spark = chunks.sparkSession
+    import spark.implicits._
+    buildIndexKeyed(chunks.toDF().withColumn("pkey", lit("")), buckets)
+      .drop("pkey").as[PartitionIndex]
   }
 
   /** Decode chunks back to points — the verification read path. Checks CRC;
@@ -276,8 +263,7 @@ object ChunkWriter {
 
   /** Materialize the chunk store partitioned by series bucket, plus its
     * delta-encoded partition index (`<path>/chunks/part_id=*` +
-    * `<path>/index`). The same `part_id` derivation feeds both, so the
-    * index's verdicts map 1:1 onto storage partitions.
+    * `<path>/index`), both through [[NioLocalFileSystem.write]].
     */
   def writeIndexedStore(chunks: Dataset[FlatChunk], path: String, buckets: Int): Unit = {
     // pinned across the two writes: the chunk lineage (often a whole
@@ -285,12 +271,10 @@ object ChunkWriter {
     // again for the index
     val pinned = chunks.persist()
     try {
-      pinned.toDF()
-        .withColumn("part_id",
-          pmod(xxhash64(col("series_flat")), lit(buckets)).cast("int"))
-        .write.mode("overwrite").partitionBy("part_id").parquet(s"$path/chunks")
-      buildIndex(pinned, buckets).toDF()
-        .write.mode("overwrite").parquet(s"$path/index")
+      NioLocalFileSystem.write(withPartId(pinned.toDF(), buckets))
+        .mode("overwrite").partitionBy("part_id").parquet(s"$path/chunks")
+      NioLocalFileSystem.write(buildIndex(pinned, buckets).toDF())
+        .mode("overwrite").parquet(s"$path/index")
     } finally pinned.unpersist(false)
   }
 
@@ -346,9 +330,7 @@ object ChunkWriter {
       decode(scan.drop("part_id").as[FlatChunk]), tiers.head, maxPoints)
       .localCheckpoint()
     try {
-      NioLocalFileSystem.write(rebuilt.toDF()
-        .withColumn("part_id",
-          pmod(xxhash64(col("series_flat")), lit(buckets)).cast("int")))
+      NioLocalFileSystem.write(withPartId(rebuilt.toDF(), buckets))
         .mode("overwrite").partitionBy("part_id")
         .option("partitionOverwriteMode", "dynamic").parquet(s"$path/chunks")
       // swap the affected index rows; kept rows are bounded (<= buckets x
@@ -399,39 +381,5 @@ object ChunkWriter {
       else scan.filter(col("series_flat").isin(series: _*))
     decodeSql(bySeries)
       .filter(col("ts") >= from && col("ts") < until)
-  }
-
-  /** Build the per-partition index from the chunk table. Partition identity
-    * is a hash bucket of the series (mirroring the table layout's
-    * bucket-by-url-hash).
-    */
-  def buildIndex(chunks: Dataset[FlatChunk], buckets: Int): Dataset[PartitionIndex] = {
-    val spark = chunks.sparkSession
-    import spark.implicits._
-    chunks
-      .withColumn("part_id", pmod(xxhash64(col("series_flat")), lit(buckets)).cast("int"))
-      .select($"part_id", $"tier", $"series_flat", $"t0", $"t_max", $"n")
-      .as[(Int, String, String, Long, Long, Int)]
-      .groupByKey { case (p, t, _, _, _, _) => (p, t) }
-      .mapGroups { (key: (Int, String), rows: Iterator[(Int, String, String, Long, Long, Int)]) =>
-        val (partId, tier) = key
-        val entries = rows.toArray.sortBy { case (_, _, s, t0, _, _) => (s, t0) }
-        val dir = new ArrayBuffer[Byte](entries.length * 8)
-        var prevHash = 0L
-        var prevT0 = 0L
-        val seriesSeen = scala.collection.mutable.HashSet.empty[String]
-        entries.foreach { case (_, _, s, t0, tMax, n) =>
-          seriesSeen += s
-          val h = scala.util.hashing.MurmurHash3.stringHash(s).toLong
-          writeVarLong(dir, h - prevHash); prevHash = h
-          writeVarLong(dir, t0 - prevT0); prevT0 = t0
-          writeVarLong(dir, tMax - t0)
-          writeVarLong(dir, n.toLong)
-        }
-        PartitionIndex(
-          partId, tier, seriesSeen.size, entries.length.toLong,
-          entries.iterator.map(_._4).min, entries.iterator.map(_._5).max,
-          dir.toArray)
-      }
   }
 }

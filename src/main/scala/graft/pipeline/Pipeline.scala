@@ -8,7 +8,6 @@ import graft.rollup.TimeSeriesOps
 import graft.chunk.ChunkWriter
 import graft.table.{ManifestTableLayer, NioLocalFileSystem, PartitionMeta}
 import graft.checkpoint.Checkpoint
-import graft.retention.Retention
 
 /** The end-to-end engine pipeline over a canonical
   * `pages(url, warc_ts, html, text, lang)` table (SURVEY.md §3.4):
@@ -99,15 +98,19 @@ object Pipeline {
   def chunkKey(tier: String, day: String) = s"chunks-$tier/day=$day"
   def indexKey(tier: String, day: String) = s"index-$tier/day=$day"
 
-  /** Distinct days present in the pages table (partition column if the
-    * table is partitioned, derived otherwise).
+  /** The day of a pages row: the `day` partition column if the table is
+    * partitioned, the day of `warc_ts` otherwise.
+    */
+  private def pageDay(pages: DataFrame) =
+    (if (pages.columns.contains("day")) col("day") else to_date(col("warc_ts")))
+      .cast("string")
+
+  /** Distinct days present in the pages table, read with the footer schema
+    * ([[ManifestTableLayer.readPartitions]]: no schema-inference job).
     */
   def listDays(spark: SparkSession, pagesPath: String): Seq[String] = {
-    val pages = spark.read.parquet(pagesPath)
-    val withDay =
-      if (pages.columns.contains("day")) pages.select(col("day").cast("string"))
-      else pages.select(to_date(col("warc_ts")).cast("string").as("day"))
-    withDay.distinct().collect().map(_.getString(0)).sorted.toSeq
+    val pages = ManifestTableLayer.readPartitions(spark, Seq(pagesPath))
+    pages.select(pageDay(pages)).distinct().collect().map(_.getString(0)).sorted.toSeq
   }
 
   /** Build all tier + chunk partitions for the given days, resumable:
@@ -132,11 +135,8 @@ object Pipeline {
       failAfter: Int = -1
   ): Int = {
     val pages = ManifestTableLayer.readPartitions(spark, Seq(pagesPath))
-    val pageDay =
-      (if (pages.columns.contains("day")) col("day") else to_date(col("warc_ts")))
-        .cast("string")
     val chain = stages(spark, table,
-      ds => tier15FromPages(pages.filter(pageDay.isin(ds: _*))),
+      ds => tier15FromPages(pages.filter(pageDay(pages).isin(ds: _*))),
       chunkMaxPoints, indexBuckets)
     chain.foldLeft(0) { (n, stage) =>
       val done = table.currentPartitions().map(_.key).toSet
@@ -458,16 +458,17 @@ object Pipeline {
     ManifestTableLayer.readPartitions(spark, parts.map(_.path))
   }
 
-  /** Retention: drop raw 15-min partitions (and their chunk/index
-    * partitions) older than cutoffDay; aggregates (1h/1d) stay.
+  /** Retention: drop the raw 15-min partitions and their chunk and index
+    * partitions older than cutoffDay in ONE snapshot commit, a logical
+    * drop (the data stays until [[graft.retention.Retention.expire]]); the
+    * 30-min, 1-h and 1-d aggregates stay. Keys end in `day=<yyyy-MM-dd>`,
+    * so the horizon is a lexicographic comparison. Returns the new
+    * snapshot id.
     */
   def sweepRaw(table: ManifestTableLayer, cutoffDay: String): Long = {
-    Retention.sweep(table, "15min", cutoffDay)
+    val prefixes = Seq(tierKey("15min", ""), chunkKey("15min", ""), indexKey("15min", ""))
     table.dropPartitions { p =>
-      (p.key.startsWith("chunks-15min/day=") &&
-        p.key.stripPrefix("chunks-15min/day=") < cutoffDay) ||
-      (p.key.startsWith("index-15min/day=") &&
-        p.key.stripPrefix("index-15min/day=") < cutoffDay)
+      prefixes.exists(pre => p.key.startsWith(pre) && p.key.stripPrefix(pre) < cutoffDay)
     }
   }
 

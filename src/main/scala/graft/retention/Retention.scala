@@ -2,27 +2,15 @@ package graft.retention
 
 import graft.table.ManifestTableLayer
 
-/** Retention sweeper: expire raw-tier partitions past their horizon while
+/** Retention: [[graft.pipeline.Pipeline.sweepRaw]] expires raw-tier
+  * partitions past their horizon by a logical partition drop, while the
   * higher-tier continuous aggregates stay queryable (the north rule's
   * "retention sweeper that expires raw tiers via snapshot/partition drops
   * while continuous aggregates remain queryable"; on Iceberg this is
-  * `DROP PARTITION` + `expire_snapshots`).
-  *
-  * Partition keys are "tier=<t>/day=<yyyy-MM-dd>" so the horizon is a
-  * lexicographic comparison — no parsing, no tz.
+  * `DROP PARTITION` + `expire_snapshots`). [[expire]] then reclaims the
+  * dropped data.
   */
 object Retention {
-
-  /** Drop all partitions of `tier` with day < cutoffDay. Logical drop
-    * (new snapshot); data remains until `expire`.
-    */
-  def sweep(table: ManifestTableLayer, tier: String, cutoffDay: String): Long = {
-    val prefix = s"tier=$tier/day="
-    table.dropPartitions { p =>
-      p.key.startsWith(prefix) &&
-        p.key.stripPrefix(prefix) < cutoffDay
-    }
-  }
 
   /** Physically delete everything unreachable from the last `keepLast`
     * snapshots.

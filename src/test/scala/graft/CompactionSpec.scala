@@ -18,6 +18,16 @@ class CompactionSpec extends AnyFunSuite {
         (s, i * 900L, Some(((i % 37) + s.length).toDouble / 8)))
     }.toDF("series_flat", "ts", "value")
 
+  test("writeIndexedStore starts no child process") {
+    val store = SparkTestSession.tmpDir("indexed-store-").toString
+    val chunks = ChunkWriter.build(mkPoints(Seq("c0", "c1", "c2")), "15min", maxPoints = 96)
+    val (_, started) =
+      SparkTestSession.processesOf(ChunkWriter.writeIndexedStore(chunks, store, buckets = 8))
+    assert(started.isEmpty, s"writeIndexedStore started ${started.size} process(es), e.g. " +
+      started.toSeq.sorted.take(3).mkString("; "))
+    assert(spark.read.parquet(s"$store/chunks").count() == chunks.count())
+  }
+
   test("compactStore merges small chunks copy-on-write, content bitwise-stable") {
     val store = SparkTestSession.tmpDir("compact-store-").toString
     val buckets = 8

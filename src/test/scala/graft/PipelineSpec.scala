@@ -117,6 +117,37 @@ class PipelineSpec extends AnyFunSuite {
     assert(decoded.count() == tier.count())
   }
 
+  test("each day's stored chunks and index equal a build over that day alone, bitwise") {
+    val live = table.currentPartitions().map(p => p.key -> p.path).toMap
+    def stored(key: String) = spark.read.parquet(live(key))
+    def same(got: org.apache.spark.sql.DataFrame, want: org.apache.spark.sql.DataFrame,
+        what: String): Unit = {
+      assert(got.columns.sorted.toSeq == want.columns.sorted.toSeq, what)
+      val w = want.select(got.columns.map(col): _*)
+      assert(got.except(w).isEmpty && w.except(got).isEmpty, what)
+      assert(got.count() == w.count(), what)
+    }
+    for (day <- Pipeline.listDays(spark, pagesPath)) {
+      val points = stored(Pipeline.tierKey("15min", day)).select(
+        concat_ws("_", col("domain"), col("metric")).as("series_flat"),
+        col("bucket_ts").as("ts"), col("mean_v").as("value"))
+      val chunks = stored(Pipeline.chunkKey("15min", day))
+      same(chunks, ChunkWriter.build(points, "15min", maxPoints = 128).toDF(), s"chunks $day")
+      same(stored(Pipeline.indexKey("15min", day)),
+        ChunkWriter.buildIndex(chunks.as[ChunkWriter.FlatChunk], buckets = 16).toDF(),
+        s"index $day")
+    }
+  }
+
+  test("listDays reads the pages with the footer schema") {
+    assert(table.currentPartitions().nonEmpty) // the shared build wrote the pages
+    val (days, jobs) = jobsOf(Pipeline.listDays(spark, pagesPath))
+    assert(days == (1 to 7).map(d => f"2024-01-0$d%d"))
+    // the distinct's shuffle stage and the collect; a schema-less read
+    // added an inference job
+    assert(jobs <= 2, s"listDays ran $jobs Spark job(s)")
+  }
+
   test("delta index agrees with chunk partitions (counts + time bounds)") {
     val idxParts = table.currentPartitions()
       .filter(_.key.startsWith("index-15min/")).map(_.path)
@@ -352,7 +383,11 @@ class PipelineSpec extends AnyFunSuite {
     Pipeline.runRollup(spark, pagesPath, t2,
       Pipeline.listDays(spark, pagesPath), chunkMaxPoints = 128)
     val daysBefore = Pipeline.readTier(spark, t2, "1d").count()
+    val snap0 = t2.currentSnapshotId()
     Pipeline.sweepRaw(t2, "2024-01-04")
+    // one logical drop, one commit: no snapshot has the 15-min days gone
+    // but their chunk and index days live
+    assert(t2.currentSnapshotId() == snap0 + 1)
     val keys = t2.currentPartitions().map(_.key)
     assert(keys.count(_.startsWith("tier=15min/")) == 4)
     assert(keys.count(_.startsWith("chunks-15min/")) == 4)

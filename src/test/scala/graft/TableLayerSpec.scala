@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.table.{ManifestTableLayer, PartitionMeta}
-import graft.retention.Retention
+import graft.pipeline.Pipeline
 import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 
@@ -72,7 +72,7 @@ class TableLayerSpec extends AnyFunSuite {
       val m = write(t, 1, s"tier=$tier/day=$d")
       t.commit(Seq(m), Seq.empty)
     }
-    Retention.sweep(t, "15min", "2024-01-04")
+    Pipeline.sweepRaw(t, "2024-01-04")
     assert(t.currentPartitions().map(_.key).sorted == Seq(
       "tier=15min/day=2024-01-05",
       "tier=1d/day=2024-01-01", "tier=1d/day=2024-01-05"))
@@ -174,7 +174,6 @@ class TableLayerSpec extends AnyFunSuite {
   }
 
   test("read, readAt and readTier take the footer schema: no Spark job before the action") {
-    import graft.pipeline.Pipeline
     import SparkTestSession.jobsOf
     val t = new ManifestTableLayer(freshRoot())
     val m15 = stage(t, "tier=15min")
