@@ -56,7 +56,6 @@ object Gorilla {
     }
     def toBytes: Array[Byte] =
       java.util.Arrays.copyOf(buf, ((bitPos + 7) / 8).toInt)
-    def lengthBits: Long = bitPos
   }
 
   final class BitReader(bytes: Array[Byte]) {

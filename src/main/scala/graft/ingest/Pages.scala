@@ -34,7 +34,6 @@ object Pages {
 
   val T0Epoch: Long = 1704067200L // 2024-01-01T00:00:00Z
   val PeriodSec: Long = 900L
-  val Periods: Int = 7 * 96
 
   /** The derivation, Spark side. Mirrors `oracleCte` exactly (at
     * `replicate = 1`; higher values repeat the corpus with shifted doc_ids

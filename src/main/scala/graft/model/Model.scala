@@ -1,18 +1,14 @@
 package graft.model
 
-/** Core data model of the engine.
+/** Series identity of the engine.
   *
-  * Mirrors the reference's data model (OPSD `time_series`: a set of time
-  * series keyed by a 6-level column header `(region, variable, attribute,
-  * source, web, unit)` in a wide pandas frame — see SURVEY.md §1.1) as a
-  * LONG/NARROW typed layout: one row per (series, timestamp) point. Wide →
-  * long is the scale move: at 10^12 documents a column-per-series layout is
-  * impossible, while long points shard perfectly by (series bucket, day).
-  *
-  * All timestamps are UTC epoch **seconds** (`Long`) internally; rendering
-  * to `timestamp` happens only at output edges. This keeps arithmetic exact,
-  * comparisons engine-portable (no tz/ntz ambiguity vs oracles) and codegen
-  * tight (long math, no tz logic in the hot path).
+  * The reference's data model (OPSD `time_series`: a set of time series
+  * keyed by a 6-level column header `(region, variable, attribute, source,
+  * web, unit)` in a wide pandas frame — see SURVEY.md §1.1) is kept LONG/
+  * NARROW: one DataFrame row per (series, timestamp) point, timestamps as
+  * UTC epoch seconds. Wide → long is the scale move: at 10^12 documents a
+  * column-per-series layout is impossible, while long points shard by
+  * (series bucket, day).
   */
 
 /** Identity of one time series — the engine's analog of the reference's
@@ -36,79 +32,3 @@ case class SeriesKey(
   def flat: String = Seq(domain, metric, attribute, source, unit)
     .filter(_.nonEmpty).mkString("_")
 }
-
-/** One observation. `value = None` models the reference's NaN cell. */
-case class Point(
-    series: SeriesKey,
-    ts: Long, // epoch seconds, UTC
-    value: Option[Double]
-)
-
-/** A point after gap-fill: carries markers (which fills touched it) and
-  * lineage, the engine's analog of the reference's `interpolated_values`
-  * marker column + datapackage.json lineage (SURVEY.md §1.1).
-  */
-case class FilledPoint(
-    series: SeriesKey,
-    ts: Long,
-    value: Option[Double],
-    markers: Seq[String], // sorted, deduped; rendered " | "-joined at edges
-    lineage: Lineage
-)
-
-case class Lineage(source: String, ownCalcBasis: Seq[String])
-
-/** One rolled-up point in a retention tier. Stores the algebraic PARTIALS
-  * (`sum`, `n`) alongside the policy value so higher tiers chain exactly
-  * (hourly from 15-min, daily from hourly) without re-reading raw data —
-  * the continuous-aggregate design.
-  */
-case class TierPoint(
-    series: SeriesKey,
-    ts: Long,       // window start, epoch seconds
-    sum: Double,    // exact when inputs are integer-scaled
-    n: Long,
-    value: Double,  // per-policy rendering: mean | sum | last
-    markers: Seq[String]
-)
-
-/** Retention tiers. */
-sealed abstract class Tier(val name: String, val periodSec: Long)
-object Tier {
-  case object T15m extends Tier("15min", 900L)
-  case object T1h  extends Tier("1h", 3600L)
-  case object T1d  extends Tier("1d", 86400L)
-  val all: Seq[Tier] = Seq(T15m, T1h, T1d)
-  def of(name: String): Tier = all.find(_.name == name).getOrElse(
-    throw new IllegalArgumentException(s"unknown tier $name"))
-}
-
-/** Per-metric aggregation policy (the reference resamples power columns
-  * with `.mean()`, energy/capacity columns with `.sum()`/`.last()` —
-  * SURVEY.md §2.4 A1/A2).
-  */
-sealed trait AggPolicy
-object AggPolicy {
-  case object Mean extends AggPolicy
-  case object Sum  extends AggPolicy
-  case object Last extends AggPolicy
-}
-
-/** A Gorilla-compressed chunk of one series within one tier/time-range. */
-case class Chunk(
-    series: SeriesKey,
-    tier: String,
-    t0: Long,            // first timestamp, epoch seconds
-    n: Int,              // number of points
-    blob: Array[Byte],   // delta-of-delta ts + XOR float64 values
-    crc: Int
-)
-
-/** Input row shape fixed by the north rule: a Common-Crawl-style web page. */
-case class Page(
-    url: String,
-    warc_ts: java.sql.Timestamp,
-    html: Array[Byte],
-    text: String,
-    lang: String
-)

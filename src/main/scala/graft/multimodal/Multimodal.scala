@@ -20,9 +20,11 @@ import org.apache.spark.sql.functions._
   *    `videoFrames`): MJPEG-in-AVI parsed as a plain RIFF chunk tree,
   *    each movi frame a standalone JPEG decoded by the same ImageIO
   *    path — oracle-checked (`q_video_decode`).
-  *  - STUB path (`decodeStub`/`resize`, and `sampleFrames` for NON-AVI
-  *    containers only — mp4/webm/mkv have no in-JVM codec):
-  *    deterministic fake features so the partition-local batched
+  *  - REAL mp4 metadata path (`mp4Meta` / `mp4Features`): the ISO-BMFF
+  *    box tree is parsed in-JVM; frame decode is not claimed (no
+  *    H.264/H.265 codec ships with the JDK).
+  *  - STUB path (`decodeStub` / `extractFeatures`): deterministic fake
+  *    features from the byte length, so the partition-local batched
   *    plumbing stays testable; a real build swaps the body for an
   *    ffmpeg-style call, not the pipeline.
   */
@@ -96,33 +98,9 @@ object Multimodal {
   final case class ResizedMedia(url: String, width: Int, height: Int,
       payload: Array[Byte])
 
-  /** STUB resize to a bounding box: real builds swap the body for a codec
-    * scale call; the stub deterministically truncates/pads the payload to
-    * the area ratio so output byte-lengths are oracle-reproducible. The
-    * Spark shape is what matters: binary-in/binary-out, partition-local,
-    * no driver round-trip.
-    */
-  def resize(media: DataFrame, urlCol: String, binCol: String,
-      maxW: Int, maxH: Int): Dataset[ResizedMedia] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col(urlCol), col(binCol)).as[(String, Array[Byte])]
-      .mapPartitions(_.map { case (url, bytes) =>
-        val m = decodeStub(url, bytes)
-        val scale = math.min(1.0,
-          math.min(maxW.toDouble / m.width, maxH.toDouble / m.height))
-        val w = math.max(1, (m.width * scale).toInt)
-        val h = math.max(1, (m.height * scale).toInt)
-        val outLen = math.max(1, (bytes.length * scale * scale).toInt)
-        ResizedMedia(url, w, h, java.util.Arrays.copyOf(bytes, outLen))
-      })
-  }
-
   // -------------------------------------------------------------------
   // REAL image codec path — the JDK ships javax.imageio (PNG/JPEG/GIF/BMP)
   // so decode, bounding-box resize and re-encode need no external library.
-  // The stub path above remains for payloads with no in-JVM codec
-  // (audio/video/webp).
   // -------------------------------------------------------------------
 
   locally { // BufferedImage/Graphics2D without a display server
@@ -311,9 +289,7 @@ object Multimodal {
   // REAL video codec path — MJPEG-in-AVI. The RIFF/AVI container is a
   // plain chunk tree and each '..dc' frame is a standalone JPEG, which
   // the already-used ImageIO path decodes: container parse + frame
-  // sample + pixel decode all run in-JVM with no external library. The
-  // byte-slicing stub below remains ONLY for containers with no in-JVM
-  // codec (mp4/webm/mkv).
+  // sample + pixel decode all run in-JVM with no external library.
   // -------------------------------------------------------------------
 
   private val Ascii = java.nio.charset.StandardCharsets.US_ASCII
@@ -469,11 +445,10 @@ object Multimodal {
 
   // ------------------------------------------------------------------
   // ISO BMFF (mp4) — REAL metadata extraction (round 5). Frame DECODE
-  // stays impossible in-JVM (no H.264/H.265 codec ships with the JDK —
-  // declared stub, [[sampleFrames]] byte-slice path), but the container
-  // METADATA is fully parseable: the box tree, movie header, track
-  // headers, and sample tables are plain big-endian structures
-  // (ISO/IEC 14496-12, publicly specified).
+  // stays impossible in-JVM (no H.264/H.265 codec ships with the JDK),
+  // so it is not claimed; the container METADATA is fully parseable: the
+  // box tree, movie header, track headers, and sample tables are plain
+  // big-endian structures (ISO/IEC 14496-12, publicly specified).
   // ------------------------------------------------------------------
 
   private def be16(v: Int): Array[Byte] =
@@ -531,7 +506,6 @@ object Multimodal {
       sizes.flatMap(s => be32(s.toLong)).toArray)
     val stsc = box("stsc", be32(0) ++ be32(1) ++ be32(1) ++
       be32(nFrames.toLong) ++ be32(1))
-    val stbl0 = box("stbl", stsd ++ stts ++ stsz ++ stsc)
     // stco needs the mdat payload offset = everything before it; build
     // the tree once with a placeholder to learn the length, then rebuild
     def assemble(mdatOffset: Long): Array[Byte] = {
@@ -652,36 +626,5 @@ object Multimodal {
     import spark.implicits._
     media.select(col(urlCol), col(binCol)).as[(String, Array[Byte])]
       .mapPartitions(_.flatMap { case (url, bytes) => mp4Meta(url, bytes) })
-  }
-
-  final case class Frame(url: String, frame_idx: Int, offset: Long,
-      payload: Array[Byte])
-
-  /** Frame sampling for video payloads: AVI containers go through the
-    * REAL parser ([[decodeAviFrames]] — frame bytes are the actual movi
-    * JPEG chunks); only containers with no in-JVM codec fall back to the
-    * STUB `stride`-th fixed-size slice (flatMap — 1:N row fan-out, the
-    * real shape of video decode, so the Spark plumbing is identical on
-    * both paths).
-    */
-  def sampleFrames(media: DataFrame, urlCol: String, binCol: String,
-      frameBytes: Int = 256, stride: Int = 4, maxFrames: Int = 8): Dataset[Frame] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col(urlCol), col(binCol)).as[(String, Array[Byte])]
-      .flatMap { case (url, bytes) =>
-        if (isAvi(bytes))
-          decodeAviFrames(url, bytes, stride, maxFrames)
-            .map(f => Frame(url, f.frame_idx, f.offset, f.payload))
-        else {
-          val nSlices = bytes.length / frameBytes
-          (0 until nSlices by stride).take(maxFrames).zipWithIndex.map {
-            case (slice, idx) =>
-              val off = slice.toLong * frameBytes
-              Frame(url, idx, off,
-                java.util.Arrays.copyOfRange(bytes, off.toInt, off.toInt + frameBytes))
-          }
-        }
-      }
   }
 }

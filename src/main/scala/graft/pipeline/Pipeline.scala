@@ -94,6 +94,16 @@ object Pipeline {
 
   private val seriesCols = Seq("domain", "metric")
 
+  /** Point cap of one 15-min Gorilla chunk. Chunk runs restart at every
+    * (day, series), and a day holds at most 86400 / 900 = 96 points of a
+    * series in the 15-min tier, so any cap >= 96 cuts no chunk: every
+    * stored chunk is one (day, series) run whatever the value.
+    */
+  private val ChunkMaxPoints = 1024
+
+  /** `part_id` buckets of the per-day delta index. */
+  private val IndexBuckets = 16
+
   def tierKey(tier: String, day: String) = s"tier=$tier/day=$day"
   def chunkKey(tier: String, day: String) = s"chunks-$tier/day=$day"
   def indexKey(tier: String, day: String) = s"index-$tier/day=$day"
@@ -130,14 +140,11 @@ object Pipeline {
       pagesPath: String,
       table: ManifestTableLayer,
       days: Seq[String],
-      chunkMaxPoints: Int = 1024,
-      indexBuckets: Int = 16,
       failAfter: Int = -1
   ): Int = {
     val pages = ManifestTableLayer.readPartitions(spark, Seq(pagesPath))
     val chain = stages(spark, table,
-      ds => tier15FromPages(pages.filter(pageDay(pages).isin(ds: _*))),
-      chunkMaxPoints, indexBuckets)
+      ds => tier15FromPages(pages.filter(pageDay(pages).isin(ds: _*))))
     chain.foldLeft(0) { (n, stage) =>
       val done = table.currentPartitions().map(_.key).toSet
       val missing = stage.parts(days).filterNot(p => done.contains(p.key))
@@ -174,9 +181,7 @@ object Pipeline {
   def applyDelta(
       spark: SparkSession,
       deltaPages: DataFrame,
-      table: ManifestTableLayer,
-      chunkMaxPoints: Int = 1024,
-      indexBuckets: Int = 16
+      table: ManifestTableLayer
   ): Seq[String] = {
     import spark.implicits._
     val withDay = deltaPages
@@ -205,8 +210,7 @@ object Pipeline {
         .agg(sum(col("n")).as("n"), sum(col("sum_v")).as("sum_v"))
         .withColumn("mean_v", col("sum_v") / col("n"))
         .select("domain", "metric", "bucket_ts", "n", "sum_v", "mean_v")
-      refreshChainFrom15(spark, table, merged15, days, "delta",
-        chunkMaxPoints, indexBuckets)
+      refreshChainFrom15(spark, table, merged15, days, "delta")
       days
     } finally withDay.unpersist()
   }
@@ -238,10 +242,7 @@ object Pipeline {
       spark: SparkSession,
       pagesPath: String,
       table: ManifestTableLayer,
-      urls: Seq[String],
-      buckets: Int = 16,
-      chunkMaxPoints: Int = 1024,
-      indexBuckets: Int = 16
+      urls: Seq[String]
   ): (Seq[String], Seq[String]) = {
     import spark.implicits._
     require(urls.nonEmpty, "forgetUrls needs at least one url")
@@ -295,8 +296,7 @@ object Pipeline {
       val fresh15 = tier15FromPages(
         freshPages.filter(col("day").cast("string").isin(rebuildDays: _*)))
         .select("domain", "metric", "bucket_ts", "n", "sum_v", "mean_v")
-      refreshChainFrom15(spark, table, fresh15, rebuildDays, "forget",
-        chunkMaxPoints, indexBuckets)
+      refreshChainFrom15(spark, table, fresh15, rebuildDays, "forget")
     }
     (rebuildDays, droppedDays)
   }
@@ -315,11 +315,9 @@ object Pipeline {
       table: ManifestTableLayer,
       merged15: DataFrame,
       days: Seq[String],
-      tag: String,
-      chunkMaxPoints: Int,
-      indexBuckets: Int
+      tag: String
   ): Unit =
-    for (stage <- stages(spark, table, _ => merged15, chunkMaxPoints, indexBuckets)) {
+    for (stage <- stages(spark, table, _ => merged15)) {
       val metas =
         writeStage(table, stage, stage.parts(days), table.freshDir(s"${stage.ns}/$tag"), tag)
       table.commit(metas, metas.map(_.key))
@@ -379,9 +377,7 @@ object Pipeline {
   private def stages(
       spark: SparkSession,
       table: ManifestTableLayer,
-      tier15: Seq[String] => DataFrame,
-      chunkMaxPoints: Int,
-      indexBuckets: Int
+      tier15: Seq[String] => DataFrame
   ): Seq[Stage] = {
     val files = spark.sessionState.conf.numShufflePartitions
     def laidOut(df: DataFrame, key: String) =
@@ -417,12 +413,12 @@ object Pipeline {
         dayOf("bucket_ts").as("pkey"),
         concat_ws("_", col("domain"), col("metric")).as("series_flat"),
         col("bucket_ts").as("ts"), col("mean_v").as("value"))
-      ChunkWriter.buildKeyed(flat, "15min", chunkMaxPoints, files).toDF()
+      ChunkWriter.buildKeyed(flat, "15min", ChunkMaxPoints, files).toDF()
         .withColumnRenamed("pkey", "_day")
     })
     val index = dayStage("index-15min", "index-15min<-chunks-15min")(days => {
       val keyed = stored(chunkKey("15min", _), days).withColumn("pkey", dayOf("t0"))
-      laidOut(ChunkWriter.buildIndexKeyed(keyed, indexBuckets)
+      laidOut(ChunkWriter.buildIndexKeyed(keyed, IndexBuckets)
         .withColumnRenamed("pkey", "_day"), "part_id")
     })
     Seq(t15, upTiers, chunks, index)
@@ -473,10 +469,12 @@ object Pipeline {
   }
 
   /** Per-row invariant check: every url's text hash in the pages table is
-    * unique (one text per url) — returns violation count (0 == ok).
+    * unique (one text per url) — returns violation count (0 == ok). The
+    * pages are read with the footer schema
+    * ([[ManifestTableLayer.readPartitions]]: no schema-inference job).
     */
   def textInvariantViolations(spark: SparkSession, pagesPath: String): Long = {
-    spark.read.parquet(pagesPath)
+    ManifestTableLayer.readPartitions(spark, Seq(pagesPath))
       .groupBy(col("url"))
       .agg(countDistinct(sha2(col("text"), 256)).as("n_hashes"))
       .filter(col("n_hashes") > 1)

@@ -5,8 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Core rollup / downsample operators, column-generic so they apply to any
-  * long-format point table (a `Dataset[Point]`, the driver's `events`
-  * fixture, or the synthesized `pages` stream).
+  * long-format point table (one row per (series, timestamp): the
+  * `events` fixture, or the synthesized `pages` stream).
   *
   * Semantics reproduce the reference pipeline's resample stage
   * (OPSD `time_series` main.ipynb: `df.resample('60min').mean()` plus

@@ -7,16 +7,21 @@ import graft.table.ManifestTableLayer
 /** The shared `foreachBatch` copy-on-write MERGE sink used by every
   * streaming path (hourly rollup, latest-per-user upsert, exact dedup,
   * near-dup candidates). One micro-batch is merged into its bucketed
-  * snapshot table with a CONSTANT number of Spark jobs — two —
-  * regardless of how many buckets the batch touches:
+  * snapshot table by two queries, regardless of how many buckets the
+  * batch touches:
   *
   *   1. touched-bucket discovery (also materializes the incoming cache),
-  *   2. ONE `ManifestTableLayer.writeStage` job writing the merged
+  *   2. ONE `ManifestTableLayer.writeStage` query writing the merged
   *      contents of ALL touched buckets (`partitionBy` over the routing
   *      column — the same all-partitions-in-one-job shape the build and
   *      the chunk-store compaction use). Per-bucket rows and bytes come
   *      from the written files' Parquet footers and sizes on the driver,
   *      not from a second job.
+  *
+  * AQE runs each shuffle stage of those queries as a Spark job of its
+  * own, so a batch starts a CONSTANT 5 jobs: measured both into a fresh
+  * table and as an upsert over 16 existing buckets (StreamingSpec `MERGE
+  * sink runs a constant number of jobs …`).
   *
   * The whole batch then commits as ONE snapshot. The previous shape — a
   * sequential `buckets.foreach` launching a write job plus a parquet

@@ -237,48 +237,6 @@ object Skipping {
   def bloomMightContain(bits: Array[Byte], mBits: Int, nHashes: Int, key: String): Boolean =
     probes(key, mBits, nHashes).forall(p => (bits(p >> 3) & (1 << (p & 7))) != 0)
 
-  /** Bloom union: two filters over the same (mBits, nHashes) config OR
-    * together into the filter of the UNION of their key sets — the
-    * property that makes the sidecar maintainable under append without
-    * re-reading old keys.
-    */
-  def bloomMerge(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
-    require(a.length == b.length, "bloom bitsets must share mBits")
-    val out = new Array[Byte](a.length)
-    var i = 0
-    while (i < a.length) { out(i) = (a(i) | b(i)).toByte; i += 1 }
-    out
-  }
-
-  /** Append new keys to an existing Bloom sidecar: one distributed pass
-    * builds per-partition filters for JUST the new rows (same config as
-    * the stored sidecar), then the bounded sidecar rows merge driver-side
-    * by bitwise OR — old keys are never re-read.
-    */
-  def bloomAppend(df: DataFrame, keyCol: String, partCol: String, bloomPath: String): Unit = {
-    val spark = df.sparkSession
-    def asMap(rows: Array[org.apache.spark.sql.Row]) = rows.map { r =>
-      r.getLong(0) -> ((r.getLong(1), r.getInt(2), r.getInt(3),
-        r.getAs[Array[Byte]](4)))
-    }.toMap
-    val stored = asMap(spark.read.parquet(bloomPath).collect())
-    require(stored.nonEmpty, s"no sidecar at $bloomPath to append to")
-    val (_, mBits, nHashes, _) = stored.values.head
-    val fresh = asMap(bloomBuild(df, keyCol, partCol, mBits, nHashes).collect())
-    val merged = (stored.keySet ++ fresh.keySet).toSeq.sorted.map { part =>
-      (stored.get(part), fresh.get(part)) match {
-        case (Some((n1, m, k, b1)), Some((n2, _, _, b2))) =>
-          (part, n1 + n2, m, k, bloomMerge(b1, b2))
-        case (Some((n, m, k, b)), None) => (part, n, m, k, b)
-        case (None, Some((n, m, k, b))) => (part, n, m, k, b)
-        case _ => sys.error("unreachable: part came from one of the sets")
-      }
-    }
-    import spark.implicits._
-    merged.toDF("part", "n_keys", "m_bits", "n_hashes", "bits")
-      .coalesce(1).write.mode("overwrite").parquet(bloomPath)
-  }
-
   /** The partitions that MIGHT contain any of `keys`, from the sidecar
     * table (one bounded row per partition — safe to collect at any data
     * volume). No false negatives; false positives only widen the scan.

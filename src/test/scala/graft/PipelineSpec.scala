@@ -28,8 +28,7 @@ class PipelineSpec extends AnyFunSuite {
     val t = new ManifestTableLayer(s"$root/table")
     val days = Pipeline.listDays(spark, pagesPath)
     assert(days.size == 7)
-    Pipeline.runRollup(spark, pagesPath, table = t, days = days,
-      chunkMaxPoints = 128)
+    Pipeline.runRollup(spark, pagesPath, table = t, days = days)
     t
   }
 
@@ -139,6 +138,16 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("every stored 15-min chunk is one whole (day, series) run") {
+    val chunks = spark.read.parquet(table.currentPartitions()
+      .filter(_.key.startsWith("chunks-15min/")).map(_.path): _*)
+    // a day holds at most 86400 / 900 points of a series, so no chunk
+    // cap >= 96 can cut a run
+    assert(chunks.filter(col("n") > 86400 / 900).isEmpty)
+    val runs = chunks.select(to_date(timestamp_seconds(col("t0"))), col("series_flat"))
+    assert(runs.distinct().count() == chunks.count(), "a (day, series) run was cut")
+  }
+
   test("listDays reads the pages with the footer schema") {
     assert(table.currentPartitions().nonEmpty) // the shared build wrote the pages
     val (days, jobs) = jobsOf(Pipeline.listDays(spark, pagesPath))
@@ -163,7 +172,12 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("text invariant holds end-to-end on the partitioned pages table") {
-    assert(Pipeline.textInvariantViolations(spark, pagesPath) == 0)
+    assert(table.currentPartitions().nonEmpty) // the shared build wrote the pages
+    val (violations, jobs) = jobsOf(Pipeline.textInvariantViolations(spark, pagesPath))
+    assert(violations == 0)
+    // the shuffle stages of the two-level distinct aggregation and the
+    // count; a schema-less read of the pages added an inference job
+    assert(jobs <= 4, s"textInvariantViolations ran $jobs Spark job(s)")
     // and the hashes equal the source documents' hashes
     val src = spark.read.parquet(s"${SparkTestSession.sf0001}/documents.parquet")
       .select(sha2(col("text"), 256).as("h")).distinct()
@@ -182,12 +196,11 @@ class PipelineSpec extends AnyFunSuite {
     Pages.writePartitioned(all.filter(!late), s"$base/pages80", buckets = 8)
     val tInc = new ManifestTableLayer(s"$base/inc")
     Pipeline.runRollup(spark, s"$base/pages80", tInc,
-      Pipeline.listDays(spark, s"$base/pages80"), chunkMaxPoints = 128)
+      Pipeline.listDays(spark, s"$base/pages80"))
     val built15 = tInc.currentPartitions()
       .filter(_.key.startsWith("tier=15min/")).map(p => p.key -> p.path).toMap
     val snap0 = tInc.currentSnapshotId()
-    val refreshed = Pipeline.applyDelta(spark, all.filter(late), tInc,
-      chunkMaxPoints = 128)
+    val refreshed = Pipeline.applyDelta(spark, all.filter(late), tInc)
     assert(refreshed.nonEmpty)
     // one copy-on-write commit per stage: 15 min, the up-tiers, chunks, index
     assert(tInc.currentSnapshotId() == snap0 + 4)
@@ -195,7 +208,7 @@ class PipelineSpec extends AnyFunSuite {
     Pages.writePartitioned(all, s"$base/pages100", buckets = 8)
     val tFull = new ManifestTableLayer(s"$base/full")
     Pipeline.runRollup(spark, s"$base/pages100", tFull,
-      Pipeline.listDays(spark, s"$base/pages100"), chunkMaxPoints = 128)
+      Pipeline.listDays(spark, s"$base/pages100"))
     for ((tier, _) <- Pipeline.Tiers) {
       val cols = Seq("domain", "metric", "bucket_ts", "n", "sum_v", "mean_v").map(col)
       val inc = Pipeline.readTier(spark, tInc, tier).select(cols: _*)
@@ -225,7 +238,7 @@ class PipelineSpec extends AnyFunSuite {
     // a delta that introduces an entirely NEW day builds fresh partitions
     val shifted = all.filter(late).withColumn("warc_ts",
       org.apache.spark.sql.functions.expr("warc_ts + INTERVAL 30 DAYS"))
-    val newDays = Pipeline.applyDelta(spark, shifted, tInc, chunkMaxPoints = 128)
+    val newDays = Pipeline.applyDelta(spark, shifted, tInc)
     assert(newDays.forall(d => tInc.currentPartitions()
       .exists(_.key == Pipeline.tierKey("1d", d))))
     assert(newDays.intersect(refreshed).isEmpty)
@@ -243,14 +256,14 @@ class PipelineSpec extends AnyFunSuite {
     Pages.writePartitioned(all.filter(!late), s"$base/pages", buckets = 8)
     val t = new ManifestTableLayer(s"$base/table")
     Pipeline.runRollup(spark, s"$base/pages", t,
-      Pipeline.listDays(spark, s"$base/pages"), chunkMaxPoints = 128)
+      Pipeline.listDays(spark, s"$base/pages"))
     val delta = all.filter(late).persist()
     val twoDays = delta.filter(to_date(col("warc_ts")) < lit("2024-01-03"))
     val restDays = delta.filter(to_date(col("warc_ts")) >= lit("2024-01-03"))
     try {
-      val (_, j2) = jobsOf(Pipeline.applyDelta(spark, twoDays, t, chunkMaxPoints = 128))
+      val (_, j2) = jobsOf(Pipeline.applyDelta(spark, twoDays, t))
       val (refreshed, j14) =
-        jobsOf(Pipeline.applyDelta(spark, restDays, t, chunkMaxPoints = 128))
+        jobsOf(Pipeline.applyDelta(spark, restDays, t))
       assert(refreshed.size == 12)
       // 7x the touched days must NOT mean more driver-launched jobs: each
       // stage is one dynamic-partition job regardless of day span (AQE
@@ -283,7 +296,7 @@ class PipelineSpec extends AnyFunSuite {
       val days = Pipeline.listDays(spark, pages)
       assert(days.size == n)
       jobsOf(Pipeline.runRollup(spark, pages,
-        new ManifestTableLayer(s"$base/table$n"), days, chunkMaxPoints = 128))
+        new ManifestTableLayer(s"$base/table$n"), days))
     }
     val (n7, j7) = build(7)
     val (n14, j14) = build(14)
@@ -302,7 +315,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(table.currentPartitions().nonEmpty) // the shared build wrote the pages
     val t = new ManifestTableLayer(SparkTestSession.tmpDir("pipe-proc-").toString)
     val (_, started) = SparkTestSession.processesOf(Pipeline.runRollup(spark, pagesPath, t,
-      Pipeline.listDays(spark, pagesPath), chunkMaxPoints = 128))
+      Pipeline.listDays(spark, pagesPath)))
     assert(started.isEmpty, s"runRollup started ${started.size} process(es), e.g. " +
       started.toSeq.sorted.take(3).mkString("; "))
   }
@@ -316,12 +329,12 @@ class PipelineSpec extends AnyFunSuite {
     // 7 days per stage: the crash lands inside the 30-min stage
     val k = 9
     intercept[Checkpoint.InjectedCrash] {
-      Pipeline.runRollup(spark, pagesPath, t, days, chunkMaxPoints = 128, failAfter = k)
+      Pipeline.runRollup(spark, pagesPath, t, days, failAfter = k)
     }
     assert(t.currentPartitions().map(_.key) ==
       days.map(Pipeline.tierKey("15min", _)) ++ days.take(2).map(Pipeline.tierKey("30min", _)))
     // only the remaining partitions run
-    assert(Pipeline.runRollup(spark, pagesPath, t, days, chunkMaxPoints = 128) == 6 * 7 - k)
+    assert(Pipeline.runRollup(spark, pagesPath, t, days) == 6 * 7 - k)
     assert(t.currentPartitions().map(_.key).toSet == fresh.currentPartitions().map(_.key).toSet)
     // the crashed run's staging dirs are gone: expiry finds nothing to
     // delete, and every leaf dir under data/ is a live partition
@@ -346,7 +359,7 @@ class PipelineSpec extends AnyFunSuite {
     // of its partitions, 10 of them are committed
     val k = 17
     intercept[Checkpoint.InjectedCrash] {
-      Pipeline.runRollup(spark, pagesPath, t, days, chunkMaxPoints = 128, failAfter = k)
+      Pipeline.runRollup(spark, pagesPath, t, days, failAfter = k)
     }
     val committed = t.currentPartitions()
     assert(committed.map(_.key) == days.map(Pipeline.tierKey("15min", _)) ++
@@ -356,7 +369,7 @@ class PipelineSpec extends AnyFunSuite {
       try s.iterator().asScala.map(_.getFileName.toString).toSeq.sorted finally s.close()
     }
     val before = committed.map(p => p.path -> files(p.path))
-    assert(Pipeline.runRollup(spark, pagesPath, t, days, chunkMaxPoints = 128) == 6 * 7 - k)
+    assert(Pipeline.runRollup(spark, pagesPath, t, days) == 6 * 7 - k)
     // the resume rewrote no committed dir (file names carry the write's id)
     before.foreach { case (dir, fs) => assert(files(dir) == fs, s"$dir was rewritten") }
     // the commit order of the chained stages, in both builds: every day of
@@ -381,7 +394,7 @@ class PipelineSpec extends AnyFunSuite {
     val root2 = SparkTestSession.tmpDir("pipe-sweep-").toString
     val t2 = new ManifestTableLayer(s"$root2/table")
     Pipeline.runRollup(spark, pagesPath, t2,
-      Pipeline.listDays(spark, pagesPath), chunkMaxPoints = 128)
+      Pipeline.listDays(spark, pagesPath))
     val daysBefore = Pipeline.readTier(spark, t2, "1d").count()
     val snap0 = t2.currentSnapshotId()
     Pipeline.sweepRaw(t2, "2024-01-04")
@@ -406,7 +419,7 @@ class PipelineSpec extends AnyFunSuite {
     Pages.writePartitioned(all, s"$base/pages", buckets = 8)
     val t = new ManifestTableLayer(s"$base/table")
     Pipeline.runRollup(spark, s"$base/pages", t,
-      Pipeline.listDays(spark, s"$base/pages"), chunkMaxPoints = 128)
+      Pipeline.listDays(spark, s"$base/pages"))
     // d7.example is contributed by doc 7 ALONE at sf0.001; d0 is the hot
     // domain with many other contributors
     val urls = Seq("https://d7.example/p/7", "https://d0.example/p/5")
@@ -425,8 +438,7 @@ class PipelineSpec extends AnyFunSuite {
     }
     val before = listing(untouched)
     val pinned = t.currentSnapshotId()
-    val (rebuilt, dropped) = Pipeline.forgetUrls(
-      spark, s"$base/pages", t, urls, buckets = 8, chunkMaxPoints = 128)
+    val (rebuilt, dropped) = Pipeline.forgetUrls(spark, s"$base/pages", t, urls)
     assert(dropped.isEmpty && rebuilt.size == 7)
     // raw: the urls are gone, other buckets never rewritten
     assert(spark.read.parquet(s"$base/pages")
@@ -438,7 +450,7 @@ class PipelineSpec extends AnyFunSuite {
       s"$base/pagesClean", buckets = 8)
     val tClean = new ManifestTableLayer(s"$base/tableClean")
     Pipeline.runRollup(spark, s"$base/pagesClean", tClean,
-      Pipeline.listDays(spark, s"$base/pagesClean"), chunkMaxPoints = 128)
+      Pipeline.listDays(spark, s"$base/pagesClean"))
     val cols = Seq("domain", "metric", "bucket_ts", "n", "sum_v", "mean_v").map(col)
     for ((tier, _) <- Pipeline.Tiers) {
       val got = Pipeline.readTier(spark, t, tier).select(cols: _*)
@@ -480,9 +492,8 @@ class PipelineSpec extends AnyFunSuite {
     Pages.writePartitioned(pages, s"$base/pages", buckets = 4)
     val t = new ManifestTableLayer(s"$base/table")
     Pipeline.runRollup(spark, s"$base/pages", t,
-      Pipeline.listDays(spark, s"$base/pages"), chunkMaxPoints = 128)
-    val (rebuilt, droppedDays) = Pipeline.forgetUrls(
-      spark, s"$base/pages", t, Seq(urlA), buckets = 4, chunkMaxPoints = 128)
+      Pipeline.listDays(spark, s"$base/pages"))
+    val (rebuilt, droppedDays) = Pipeline.forgetUrls(spark, s"$base/pages", t, Seq(urlA))
     assert(droppedDays == Seq("2024-02-01") && rebuilt == Seq("2024-02-02"))
     // the emptied (bucket, day) partitions are physically gone from raw
     assert(spark.read.parquet(s"$base/pages")

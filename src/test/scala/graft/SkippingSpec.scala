@@ -117,34 +117,6 @@ class SkippingSpec extends AnyFunSuite {
     assert(kept.size < 64, s"still skipping after append, kept ${kept.size}")
   }
 
-  test("bloomAppend: union by OR — no false negatives over old+new keys, new partitions join the sidecar") {
-    val root = tmp("skip-bapp-")
-    val df = spark.range(200)
-      .select(col("id").cast("string").as("key"), (col("id") % 10).as("part"))
-    Skipping.bloomBuild(df, "key", "part", mBits = 1 << 12, nHashes = 7)
-      .write.parquet(s"$root/bloom")
-    // appended keys: some land in existing partitions, some in a NEW one
-    val extra = spark.range(200, 260)
-      .select(col("id").cast("string").as("key"),
-        when(col("id") < 230, col("id") % 10).otherwise(lit(10L)).as("part"))
-    Skipping.bloomAppend(extra, "key", "part", s"$root/bloom")
-    val blooms = spark.read.parquet(s"$root/bloom").collect()
-      .map(r => r.getLong(0) ->
-        ((r.getLong(1), r.getInt(2), r.getInt(3), r.getAs[Array[Byte]](4))))
-      .toMap
-    assert(blooms.size == 11 && blooms(10L)._1 == 30)
-    // old keys still pass (the OR can only ADD bits), new keys pass too
-    (0L until 230L).foreach { id =>
-      val (_, m, k, bits) = blooms(id % 10)
-      assert(Skipping.bloomMightContain(bits, m, k, id.toString),
-        s"false negative for $id after append")
-    }
-    (230L until 260L).foreach { id =>
-      val (_, m, k, bits) = blooms(10L)
-      assert(Skipping.bloomMightContain(bits, m, k, id.toString))
-    }
-  }
-
   test("bloom sidecar: no false negatives, bounded false positives, pruned lookup") {
     val df = spark.range(200)
       .select(col("id").cast("string").as("key"), (col("id") % 10).as("part"))

@@ -416,20 +416,20 @@ class StreamingSpec extends AnyFunSuite {
       .toDF("user_id", "event_id", "epoch_us", "event_type", "cents")
     // the merge is 2 queries (bucket discovery, partitioned write);
     // AQE materializes each shuffle stage as its own job, so "O(1)"
-    // lands at a handful — the per-bucket loop it replaced ran 2 jobs
+    // lands at 5 (measured) — the per-bucket loop it replaced ran 2 jobs
     // PER bucket (write + count re-read), >= 32 here
     val (_, fresh) = SparkTestSession.jobsOf(
       StreamingRollup.mergeLatestBatch(spark, layer, batchDf(1L), 0L, nBuckets = 16))
     val afterFresh = layer.currentPartitions()
     info(s"fresh-table merge: $fresh jobs")
-    assert(fresh <= 10,
+    assert(fresh <= 5,
       s"fresh-table merge of 16 buckets must be O(1) jobs, ran $fresh")
     // second batch exercises the read-existing-partitions path
     val (_, upsert) = SparkTestSession.jobsOf(
       StreamingRollup.mergeLatestBatch(spark, layer, batchDf(2L), 1L, nBuckets = 16))
     val live = afterFresh ++ layer.currentPartitions()
     info(s"upsert merge: $upsert jobs")
-    assert(upsert <= 10,
+    assert(upsert <= 5,
       s"upsert merge of 16 existing buckets must be O(1) jobs, ran $upsert")
     // and the merge itself is right: every user at epoch 2
     assert(layer.read(spark).count() == 64)
