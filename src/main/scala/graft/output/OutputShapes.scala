@@ -210,8 +210,7 @@ object OutputShapes {
     Files.write(Paths.get(file), Files.readAllBytes(bodyFile),
       StandardOpenOption.APPEND)
     // clean the temp body dir
-    Files.walk(Paths.get(tmp)).sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => Files.delete(p))
+    graft.table.ManifestTableLayer.deleteTree(Paths.get(tmp))
   }
 
   /** Parse a multiindex CSV back to the long shape (series, utc_timestamp,

@@ -39,16 +39,6 @@ object RetentionQueries {
   private val CutoffDay = "2024-01-04"
   private val CutoffEpoch = 1704326400L
 
-  private def freshRoot(name: String): String = {
-    val p = java.nio.file.Paths.get(Scratch.dir(name))
-    if (java.nio.file.Files.exists(p)) {
-      java.nio.file.Files.walk(p)
-        .sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => java.nio.file.Files.delete(f))
-    }
-    p.toString
-  }
-
   /** synth pages -> full rollup into a fresh table; returns the table. */
   private def buildTable(s: SparkSession, dir: String, root: String,
       failAfter: Int = -1): ManifestTableLayer = {
@@ -69,7 +59,7 @@ object RetentionQueries {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // sweep raw tier < cutoff; surviving 15-min partitions per day
     "q_retention_raw" -> ((s, dir) => {
-      val table = buildTable(s, dir, freshRoot("ret_raw"))
+      val table = buildTable(s, dir, Scratch.fresh("ret_raw"))
       Pipeline.sweepRaw(table, CutoffDay)
       Pipeline.readTier(s, table, "15min")
         .groupBy(graft.rollup.TimeSeriesOps.bucketStart(col("bucket_ts"), 86400)
@@ -79,7 +69,7 @@ object RetentionQueries {
 
     // aggregates must remain complete (all 7 days) AFTER the raw sweep
     "q_retention_aggs" -> ((s, dir) => {
-      val table = buildTable(s, dir, freshRoot("ret_aggs"))
+      val table = buildTable(s, dir, Scratch.fresh("ret_aggs"))
       Pipeline.sweepRaw(table, CutoffDay)
       Pipeline.readTier(s, table, "1d")
         .select("domain", "metric", "bucket_ts", "n", "sum_v", "mean_v")
@@ -91,7 +81,7 @@ object RetentionQueries {
     // bitwise the tier a full build over ALL pages produces — the
     // algebraic-partials merge is exact, not approximate.
     "q_tier_refresh" -> ((s, dir) => {
-      val root = freshRoot("tier_refresh")
+      val root = Scratch.fresh("tier_refresh")
       val all = Pages.synthesize(s, dir)
         .select("url", "warc_ts", "html", "text", "lang")
       val late = regexp_extract(col("url"), "/p/(\\d+)$", 1)
@@ -108,7 +98,7 @@ object RetentionQueries {
     // crash after 5 committed partitions, resume, hourly tier must equal
     // the single-run result
     "q_checkpoint_resume" -> ((s, dir) => {
-      val table = buildTable(s, dir, freshRoot("resume"), failAfter = 5)
+      val table = buildTable(s, dir, Scratch.fresh("resume"), failAfter = 5)
       Pipeline.readTier(s, table, "1h")
         .select("domain", "metric", "bucket_ts", "n", "sum_v", "mean_v")
     }),
@@ -119,7 +109,7 @@ object RetentionQueries {
     // though the live table has merged the delta (copy-on-write stage
     // dirs keep every retained snapshot's bytes immutable)
     "q_time_travel" -> ((s, dir) => {
-      val root = freshRoot("time_travel")
+      val root = Scratch.fresh("time_travel")
       val all = Pages.synthesize(s, dir)
         .select("url", "warc_ts", "html", "text", "lang")
       val late = regexp_extract(col("url"), "/p/(\\d+)$", 1)
@@ -141,7 +131,7 @@ object RetentionQueries {
     // ways over the hourly tier; at scale the two sides are partition-
     // pruned to the touched days before the except shuffles anything.
     "q_snapshot_diff" -> ((s, dir) => {
-      val root = freshRoot("snap_diff")
+      val root = Scratch.fresh("snap_diff")
       val all = Pages.synthesize(s, dir)
         .select("url", "warc_ts", "html", "text", "lang")
       val late = regexp_extract(col("url"), "/p/(\\d+)$", 1)
@@ -163,7 +153,7 @@ object RetentionQueries {
     // store AND rebuild exactly the partitions they contributed to; the
     // live hourly tier must equal a from-scratch build without those urls
     "q_forget_url" -> ((s, dir) => {
-      val root = freshRoot("forget")
+      val root = Scratch.fresh("forget")
       val table = buildTable(s, dir, root)
       val urls = Seq(7L, 110L).map { id =>
         val dom = if (id % 5 < 2) 0L else id % 97
@@ -180,7 +170,7 @@ object RetentionQueries {
     // touched changes or disappears, nothing else moves). This is the
     // compliance artifact a real erasure request ends with.
     "q_erasure_proof" -> ((s, dir) => {
-      val root = freshRoot("erasure")
+      val root = Scratch.fresh("erasure")
       val table = buildTable(s, dir, root)
       val urls = Seq(7L, 110L).map { id =>
         val dom = if (id % 5 < 2) 0L else id % 97

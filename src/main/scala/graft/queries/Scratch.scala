@@ -1,6 +1,7 @@
 package graft.queries
 
 import java.nio.file.{Files, Paths}
+import graft.table.ManifestTableLayer
 
 /** Per-JVM-run scratch root for queries that materialize stores/sinks
   * (index stores, signature tables, streaming tables, CSV round-trips).
@@ -30,8 +31,7 @@ object Scratch {
       .filter(p => p.getFileName.toString.startsWith("run-"))
       .filter(p => Files.getLastModifiedTime(p).toMillis < cutoff)
       .toSeq.foreach { p =>
-        try Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(Files.delete)
+        try ManifestTableLayer.deleteTree(p)
         catch { case _: java.io.IOException => () }
       }
     finally ls.close()
@@ -44,6 +44,15 @@ object Scratch {
   def dir(name: String): String = {
     val p = Paths.get(root, name)
     Files.createDirectories(p.getParent)
+    p.toString
+  }
+
+  /** [[dir]] of `name`, with whatever an earlier query of this run left
+    * there deleted: the root of a store or stream that must start empty.
+    */
+  def fresh(name: String): String = {
+    val p = Paths.get(dir(name))
+    if (Files.exists(p)) ManifestTableLayer.deleteTree(p)
     p.toString
   }
 }

@@ -78,7 +78,7 @@ object SimQueries {
       Ann.writeIvfIndex(emb.filter(col("vec_id") % 3 =!= 0),
         "vec_id", "embedding", path, nCentroids = 20)
       Ann.appendToIvfIndex(emb.filter(col("vec_id") % 3 === 0),
-        "vec_id", "embedding", path)
+        "vec_id", "embedding", path, batchId = 0L)
       val qv = emb.filter(col("vec_id") === 0L)
         .select("embedding").head().getSeq[Float](0).toArray
       Ann.ivfTopKIndexed(s, path, "vec_id", "embedding", qv,

@@ -582,13 +582,7 @@ object TextQueries {
     // the PRODUCTION sink: foreachBatch copy-on-write MERGE into a
     // day-partitioned snapshot table (memory sink is test-harness-only)
     "q_stream_1h" -> ((s, dir) => {
-      val root = java.nio.file.Paths.get(Scratch.dir("stream_1h"))
-      if (java.nio.file.Files.exists(root)) {
-        val st = java.nio.file.Files.walk(root)
-        try st.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => java.nio.file.Files.delete(p))
-        finally st.close()
-      }
+      val root = Scratch.fresh("stream_1h")
       StreamingRollup.hourlyRollupMerged(s, dir, "events.parquet",
         s"$root/table", s"$root/ckpt")
     }),
@@ -600,13 +594,7 @@ object TextQueries {
     // which session_window's merge rule provably equals (probed: events
     // exactly 1800s apart merge).
     "q_stream_sessions" -> ((s, dir) => {
-      val root = java.nio.file.Paths.get(Scratch.dir("stream_sessions"))
-      if (java.nio.file.Files.exists(root)) {
-        val st = java.nio.file.Files.walk(root)
-        try st.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => java.nio.file.Files.delete(p))
-        finally st.close()
-      }
+      val root = Scratch.fresh("stream_sessions")
       import s.implicits._
       val ev = s.read.parquet(s"$dir/events.parquet")
         .select(col("user_id"), col("event_id"),
@@ -627,13 +615,7 @@ object TextQueries {
     // through the hash-bucketed MERGE sink — final table == the batch
     // exact-dedup answer regardless of arrival order
     "q_stream_dedup" -> ((s, dir) => {
-      val root = java.nio.file.Paths.get(Scratch.dir("stream_dedup"))
-      if (java.nio.file.Files.exists(root)) {
-        val st = java.nio.file.Files.walk(root)
-        try st.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => java.nio.file.Files.delete(p))
-        finally st.close()
-      }
+      val root = Scratch.fresh("stream_dedup")
       docsWithDups(s, dir).repartition(4)
         .write.mode("overwrite").parquet(s"$root/src")
       StreamingDedup.dedupExactMerged(s, s"$root/src", "*.parquet",
@@ -648,13 +630,7 @@ object TextQueries {
     // files (the codegen'd signature is deterministic, so the dump is
     // bit-identical to what the stream banded).
     "q_stream_minhash" -> ((s, dir) => {
-      val root = java.nio.file.Paths.get(Scratch.dir("stream_minhash"))
-      if (java.nio.file.Files.exists(root)) {
-        val st = java.nio.file.Files.walk(root)
-        try st.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => java.nio.file.Files.delete(p))
-        finally st.close()
-      }
+      val root = Scratch.fresh("stream_minhash")
       docsWithNearDups(s, dir).repartition(4)
         .write.mode("overwrite").parquet(s"$root/src")
       TextOps.minhashSigTable(
@@ -669,13 +645,7 @@ object TextQueries {
     // PRODUCTION sink — foreachBatch MERGE into a user-hash-bucketed
     // snapshot table (nothing ever collects on the driver)
     "q_stream_latest" -> ((s, dir) => {
-      val root = java.nio.file.Paths.get(Scratch.dir("stream_latest"))
-      if (java.nio.file.Files.exists(root)) {
-        val st = java.nio.file.Files.walk(root)
-        try st.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => java.nio.file.Files.delete(p))
-        finally st.close()
-      }
+      val root = Scratch.fresh("stream_latest")
       StreamingRollup.latestEventPerUserMerged(s, dir, "events.parquet",
         s"$root/table", s"$root/ckpt")
     })

@@ -305,13 +305,7 @@ object WebQueries {
     // visit files through the stateful change detector + MERGE sink; the
     // drained table must equal the batch q_change_rate truth
     "q_stream_changes" -> ((s, dir) => {
-      val root = java.nio.file.Paths.get(Scratch.dir("stream_changes"))
-      if (java.nio.file.Files.exists(root)) {
-        val st = java.nio.file.Files.walk(root)
-        try st.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => java.nio.file.Files.delete(p))
-        finally st.close()
-      }
+      val root = java.nio.file.Paths.get(Scratch.fresh("stream_changes"))
       val rp = revisionPages(s, dir).select(col("url"),
         unix_timestamp(col("warc_ts")).as("epoch_s"),
         col("text_v").as("text"), expr("p div 96").as("day"))
@@ -344,13 +338,7 @@ object WebQueries {
     // (2 files per micro-batch) through the stateless parse + MERGE sink;
     // the drained table must equal the batch roundtrip truth
     "q_stream_warc" -> ((s, dir) => {
-      val root = java.nio.file.Paths.get(Scratch.dir("stream_warc"))
-      if (java.nio.file.Files.exists(root)) {
-        val st = java.nio.file.Files.walk(root)
-        try st.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => java.nio.file.Files.delete(p))
-        finally st.close()
-      }
+      val root = Scratch.fresh("stream_warc")
       Warc.write(
         Pages.synthesize(s, dir).where(col("p") < 96)
           .select(col("url"), col("warc_ts"), col("html")),

@@ -508,85 +508,58 @@ object Ann {
     * the STORED centroids (read back from `<path>/centroids` and folded
     * into the same literal projection, so appended rows are assigned
     * bit-identically to the original build), and the new rows land as
-    * APPENDED files inside their cell partitions. Probes see
-    * base + appended transparently; untouched cell files are never
-    * rewritten (AnnSpec asserts byte-stable base files).
+    * NEW files inside their cell partitions. Probes see base + appended
+    * transparently; untouched cell files are never rewritten (AnnSpec
+    * asserts byte-stable base files).
+    *
+    * Replay-safe under at-least-once delivery: the batch's cell files are
+    * staged under `staging/batch-<batchId>` (overwrite — a replay rewrites
+    * the same staging dir) and then MOVED into their cell partitions under
+    * a DETERMINISTIC per-batch name (`b<batchId>-<file>`), after purging
+    * that batch's files from any earlier attempt — so replaying a batch
+    * converges to exactly one copy of its rows no matter where the
+    * previous attempt died. Listing, purge and moves go through the Hadoop
+    * file system of `path`, the same one the write uses.
     */
   def appendToIvfIndex(
-      vectors: DataFrame,
-      idCol: String,
-      vecCol: String,
-      path: String
-  ): Unit = {
-    val spark = vectors.sparkSession
-    val cents = spark.read.parquet(s"$path/centroids")
-    val centRows = cents.select(col("_cell"), col("_cv")).collect()
-    ivfAssignRows(vectors, idCol, vecCol, centRows,
-        cents.schema("_cv").dataType
-          .asInstanceOf[org.apache.spark.sql.types.ArrayType].elementType)
-      .write.mode("append").partitionBy("cell").parquet(s"$path/cells")
-  }
-
-  /** REPLAY-SAFE index append for the streaming ingest path: a plain
-    * `mode("append")` duplicates rows when a micro-batch is redelivered
-    * (at-least-once foreachBatch). This variant stages the batch's cell
-    * files under `staging/batch-<id>` (overwrite — a replay rewrites the
-    * same staging dir) and then MOVES each file into its cell partition
-    * under a DETERMINISTIC per-batch name (`b<id>-<file>`), replacing any
-    * half-moved leftovers — so replaying a batch converges to exactly one
-    * copy of its rows no matter where the previous attempt died.
-    */
-  def appendToIvfIndexIdempotent(
       vectors: DataFrame,
       idCol: String,
       vecCol: String,
       path: String,
       batchId: Long
   ): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import scala.jdk.CollectionConverters._
+    import org.apache.hadoop.fs.Path
     val spark = vectors.sparkSession
     val cents = spark.read.parquet(s"$path/centroids")
     val centRows = cents.select(col("_cell"), col("_cv")).collect()
-    val staging = Paths.get(s"$path/staging/batch-$batchId")
+    val staging = new Path(s"$path/staging/batch-$batchId")
     ivfAssignRows(vectors, idCol, vecCol, centRows,
         cents.schema("_cv").dataType
           .asInstanceOf[org.apache.spark.sql.types.ArrayType].elementType)
       .write.mode("overwrite").partitionBy("cell").parquet(staging.toString)
-    val cellDirs = {
-      val ls = Files.list(staging)
-      try ls.iterator().asScala
-        .filter(p => Files.isDirectory(p) &&
-          p.getFileName.toString.startsWith("cell="))
-        .toSeq
-      finally ls.close()
-    }
+    val fs = staging.getFileSystem(spark.sessionState.newHadoopConf())
+    val cellDirs = fs.listStatus(staging)
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
     cellDirs.foreach { cd =>
-      val target = Paths.get(s"$path/cells").resolve(cd.getFileName.toString)
-      Files.createDirectories(target)
+      val target = new Path(s"$path/cells", cd.getPath.getName)
+      fs.mkdirs(target)
       // purge THIS batch's files from a previous (crashed) attempt first —
       // part-file names embed a per-job uuid, so a replay's moves would
       // otherwise coexist with the earlier attempt's instead of replacing
-      val old = Files.list(target)
-      try old.iterator().asScala
-        .filter(_.getFileName.toString.startsWith(s"b$batchId-"))
-        .toSeq.foreach(Files.delete)
-      finally old.close()
-      val ls = Files.list(cd)
-      try ls.iterator().asScala
-        .filter(p => p.getFileName.toString.endsWith(".parquet"))
-        .toSeq.foreach { f =>
-          Files.move(f, target.resolve(s"b$batchId-${f.getFileName}"),
-            StandardCopyOption.REPLACE_EXISTING)
+      fs.listStatus(target)
+        .filter(_.getPath.getName.startsWith(s"b$batchId-"))
+        .foreach(st => fs.delete(st.getPath, false))
+      fs.listStatus(cd.getPath)
+        .filter(_.getPath.getName.endsWith(".parquet"))
+        .foreach { st =>
+          val f = st.getPath
+          require(fs.rename(f, new Path(target, s"b$batchId-${f.getName}")),
+            s"could not move $f into $target")
         }
-      finally ls.close()
     }
-    // staging leftovers (crc files, _SUCCESS) — safe to drop now; a crash
-    // before this point leaves them for the replay's overwrite to reuse
-    val walk = Files.walk(staging)
-    try walk.sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(Files.delete)
-    finally walk.close()
+    // staging leftovers (_SUCCESS) — safe to drop now; a crash before this
+    // point leaves them for the replay's overwrite to reuse
+    fs.delete(staging, true)
   }
 
   /** Probe a materialized IVF index: nearest `nProbe` cells are computed

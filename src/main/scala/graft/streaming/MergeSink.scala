@@ -2,13 +2,15 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.table.ManifestTableLayer
+import graft.table.{ManifestTableLayer, PartitionMeta}
 
 /** The shared `foreachBatch` copy-on-write MERGE sink used by every
   * streaming path (hourly rollup, latest-per-user upsert, exact dedup,
-  * near-dup candidates). One micro-batch is merged into its bucketed
-  * snapshot table by two queries, regardless of how many buckets the
-  * batch touches:
+  * near-dup candidates, crawl corpus). A micro-batch is [[MergeSink.stage]]d
+  * into each key namespace it touches, then [[MergeSink.commit]]ted as ONE
+  * snapshot of the layer, however many namespaces it staged. Staging one
+  * namespace runs two queries, regardless of how many buckets the batch
+  * touches:
   *
   *   1. touched-bucket discovery (also materializes the incoming cache),
   *   2. ONE `ManifestTableLayer.writeStage` query writing the merged
@@ -19,17 +21,17 @@ import graft.table.ManifestTableLayer
   *      not from a second job.
   *
   * AQE runs each shuffle stage of those queries as a Spark job of its
-  * own, so a batch starts a CONSTANT 5 jobs: measured both into a fresh
-  * table and as an upsert over 16 existing buckets (StreamingSpec `MERGE
-  * sink runs a constant number of jobs …`).
+  * own, so a one-namespace batch starts a CONSTANT 5 jobs: measured both
+  * into a fresh table and as an upsert over 16 existing buckets
+  * (StreamingSpec `MERGE sink runs a constant number of jobs …`).
   *
-  * The whole batch then commits as ONE snapshot. The previous shape — a
-  * sequential `buckets.foreach` launching a write job plus a parquet
-  * re-read `count()` job per bucket from the driver — is invisible at
-  * nBuckets=16 but driver-serialized job launches dominate batch latency
-  * once a cluster batch touches hundreds of day/bucket partitions.
+  * One commit per batch makes the batch atomic across namespaces: a crash
+  * before it leaves the store as it was (the staged dirs are referenced by
+  * no snapshot, and a replay stages into fresh `-r<n>` dirs), a crash
+  * after it leaves the whole batch live (every merge is idempotent, so the
+  * replay rewrites identical rows).
   *
-  * Retention: with `expireEvery > 0` the sink calls
+  * Retention: with `expireEvery > 0` the commit calls
   * `expireSnapshots(keepLast = 2)` every N batches, so a long-running stream
   * keeps a bounded number of `b<batchId>` stage dirs on disk instead of
   * one per touched bucket per batch forever. Expiry never touches live
@@ -52,7 +54,14 @@ object MergeSink {
   def hashBucket(nBuckets: Int, keys: Column*): Column =
     pmod(xxhash64(keys: _*), lit(nBuckets.toLong)).cast("string")
 
-  /** MERGE one micro-batch into the layer.
+  /** One namespace's part of a micro-batch, written but not committed:
+    * the partitions to add and the keys to drop (re-written keys are
+    * swapped, so they are in both).
+    */
+  case class Staged(added: Seq[PartitionMeta], dropped: Seq[String])
+
+  /** Write the MERGE of one micro-batch into one key namespace of the
+    * layer, without committing it.
     *
     * @param incoming  the batch, carrying [[BucketCol]]
     * @param keyPrefix partition key = keyPrefix + bucket value
@@ -63,20 +72,18 @@ object MergeSink {
     *                  caller guarantees by construction — the bucket IS a
     *                  hash/date of the merge key — so a global window or
     *                  anti-join inside `merge` equals the per-bucket one.
-    * @param expireEvery run `expireSnapshots(keepLast = 2)` every N batches
-    *                  (0 = never; finite drains with AvailableNow keep
-    *                  full history for the duration of the run anyway)
+    *                  `existing` is the namespace as of the last commit.
     * @param extraBuckets buckets to REWRITE even when no incoming row
     *                  lands in them — `merge(existing, ∅)` runs there.
     *                  Needed by merges that DELETE keys from buckets the
     *                  batch adds nothing to (a url moving between md5
     *                  groups must be removed from its OLD group's bucket).
     * @param allowEmptied a touched bucket whose merged content is empty
-    *                  commits as a DROPPED partition instead of failing
+    *                  is staged as a DROPPED partition instead of failing
     *                  the batch (only deletion-capable merges opt in; the
     *                  default keeps the loud stale-partition guard)
     */
-  def mergeBuckets(
+  def stage(
       spark: SparkSession,
       layer: ManifestTableLayer,
       incoming: DataFrame,
@@ -84,16 +91,15 @@ object MergeSink {
       keyPrefix: String,
       lineageTag: String,
       merge: (DataFrame, DataFrame) => DataFrame,
-      expireEvery: Int = 0,
       extraBuckets: Seq[String] = Nil,
       allowEmptied: Boolean = false
-  ): Unit = {
+  ): Staged = {
     import spark.implicits._
     val inc = incoming.persist()
     try {
       val buckets = (inc.select(BucketCol).distinct().as[String].collect() ++
         extraBuckets).distinct.sorted
-      if (buckets.isEmpty) return
+      if (buckets.isEmpty) return Staged(Nil, Nil)
       val current = layer.currentPartitions().map(p => p.key -> p).toMap
       // stored files carry the data columns only (BucketCol is in the dir
       // name); reading them back with the explicit schema skips footer
@@ -118,20 +124,37 @@ object MergeSink {
       // merge-contract check: every TOUCHED bucket must re-appear in the
       // merged output (the default mergers only grow or keep per-key
       // rows). A merge that emptied a bucket writes no mbk= dir; without
-      // an explicit commit the STALE old partition would silently stay
+      // an explicit drop the STALE old partition would silently stay
       // live — fail loudly, unless the caller declared a deletion-capable
       // merge (allowEmptied), in which case the emptied buckets' keys are
-      // DROPPED in the same snapshot.
+      // dropped by the commit.
       require(allowEmptied || vanished.isEmpty,
         s"merge produced zero rows for touched bucket(s) ${vanished.map(_.head).mkString(",")} " +
           "— a bucket-emptying merge needs an explicit empty-partition commit, " +
           "which no current sink's merge can produce")
-      // one snapshot per batch; re-written keys are swapped, emptied keys
-      // (allowEmptied only) are dropped
-      layer.commit(added, added.map(_.key) ++ vanished.map(keyPrefix + _.head))
-      if (expireEvery > 0 && (batchId + 1) % expireEvery == 0)
-        layer.expireSnapshots(keepLast = 2)
+      Staged(added, added.map(_.key) ++ vanished.map(keyPrefix + _.head))
     } finally inc.unpersist()
+  }
+
+  /** Commit every namespace a micro-batch staged as ONE snapshot, so a
+    * crash leaves either all of the batch or none of it live. A batch
+    * that staged nothing commits nothing. With `expireEvery > 0`,
+    * `expireSnapshots(keepLast = 2)` runs after every N-th batch's
+    * commit (0 = never; finite drains with AvailableNow keep full history
+    * for the duration of the run anyway).
+    */
+  def commit(
+      layer: ManifestTableLayer,
+      batchId: Long,
+      expireEvery: Int,
+      staged: Staged*
+  ): Unit = {
+    val added = staged.flatMap(_.added)
+    val dropped = staged.flatMap(_.dropped)
+    if (added.isEmpty && dropped.isEmpty) return
+    layer.commit(added, dropped)
+    if (expireEvery > 0 && (batchId + 1) % expireEvery == 0)
+      layer.expireSnapshots(keepLast = 2)
   }
 
   /** ONE multi-path read of all touched buckets' current partitions, the

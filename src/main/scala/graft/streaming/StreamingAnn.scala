@@ -9,10 +9,10 @@ import graft.sim.Ann
   * embedder emits), the file stream discovers them via the checkpoint,
   * and each micro-batch assigns its vectors with the STORED centroids
   * (bit-identical to the batch append) and lands them in their cell
-  * partitions REPLAY-SAFELY ([[Ann.appendToIvfIndexIdempotent]]: staged
-  * write + per-batch deterministic file moves — a redelivered batch
-  * converges to one copy instead of duplicating rows the way a plain
-  * `mode("append")` foreachBatch would). Probes see base + streamed
+  * partitions REPLAY-SAFELY ([[Ann.appendToIvfIndex]] with the micro-batch
+  * id: staged write + per-batch deterministic file moves — a redelivered
+  * batch converges to one copy instead of duplicating rows the way a
+  * plain `mode("append")` foreachBatch would). Probes see base + streamed
   * vectors transparently; centroids retrain on drift, never per batch.
   */
 object StreamingAnn {
@@ -41,7 +41,7 @@ object StreamingAnn {
       })
     FileStream.drain(src.writeStream
       .foreachBatch { (b: DataFrame, batchId: Long) =>
-        Ann.appendToIvfIndexIdempotent(b, idCol, vecCol, indexPath, batchId)
+        Ann.appendToIvfIndex(b, idCol, vecCol, indexPath, batchId)
       },
       checkpoint)
   }

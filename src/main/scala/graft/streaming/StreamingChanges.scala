@@ -45,10 +45,10 @@ object StreamingChanges {
     val inc = batch.select("url", "n_visits", "n_changes", "first_s",
       "last_s", "change_ppm")
       .withColumn(MergeSink.BucketCol, MergeSink.hashBucket(nBuckets, col("url")))
-    MergeSink.mergeBuckets(spark, layer, inc, batchId,
-      keyPrefix = "changes/bucket=", lineageTag = "stream-changes",
-      merge = MergeSink.keepBest(Seq("url"), Seq(col("n_visits").desc)),
-      expireEvery = expireEvery)
+    MergeSink.commit(layer, batchId, expireEvery,
+      MergeSink.stage(spark, layer, inc, batchId,
+        keyPrefix = "changes/bucket=", lineageTag = "stream-changes",
+        merge = MergeSink.keepBest(Seq("url"), Seq(col("n_visits").desc))))
   }
 
   /** Streaming change detection over a directory of visit files

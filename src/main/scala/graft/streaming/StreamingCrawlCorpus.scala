@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ingest.Warc
-import graft.table.{ManifestTableLayer, NioLocalFileSystem}
+import graft.table.ManifestTableLayer
 import graft.web.Web
 
 /** The streaming crawl-to-corpus capstone: S9s -> T28 -> T21 as ONE
@@ -23,11 +23,11 @@ import graft.web.Web
   * Incremental view maintenance: a url whose text changes moves between
   * md5 groups, so the affected-group set of a batch is
   * {old md5 of every incoming url} ∪ {incoming md5s}. Old md5s come from
-  * the PRE-merge pages table; because foreachBatch is at-least-once and
-  * the pages MERGE may commit before a crash, the affected set is made
-  * DURABLE (written under `corpus-affected/b<batchId>` before the pages
-  * commit) and unioned with whatever a replay recomputes — a superset of
-  * the affected set only adds no-op recounts, so replays stay idempotent.
+  * the pages table as of the last commit. The three merges below are
+  * staged and then committed as ONE snapshot, so a crash leaves the
+  * batch either wholly absent (the replay recomputes it from the same
+  * state) or wholly live (the merges are idempotent over it, so the
+  * replay rewrites identical rows).
   * Every per-batch read is BUCKET-PRUNED (the r6 verdict's streaming
   * scale-killer): the old-md5 lookup lists only the incoming urls'
   * url-hash buckets, and the recount runs against a companion member
@@ -56,15 +56,6 @@ object StreamingCrawlCorpus {
     import spark.implicits._
     val urlBucket = MergeSink.hashBucket(nBuckets, col("url"))
     val md5Bucket = MergeSink.hashBucket(nBuckets, col("text_md5"))
-    // live partition paths of one bucket family, PRUNED to a bucket set —
-    // the whole point of bucketed storage: per-batch reads list only the
-    // buckets the batch can touch, never the corpus (r6 verdict: the
-    // full-table recount scan was the one streaming scale-killer left)
-    def partsOf(prefix: String, keep: Set[String]): Seq[String] =
-      layer.currentPartitions()
-        .filter(p => p.key.startsWith(prefix) &&
-          keep.contains(p.key.stripPrefix(prefix)))
-        .map(_.path)
     val rows = batch.select(col("url"), col("epoch_s"),
         md5(col("text").cast("binary")).as("text_md5"),
         size(split(trim(col("text")), "\\s+")).cast("long").as("n_tokens"))
@@ -74,116 +65,83 @@ object StreamingCrawlCorpus {
       // url-hash buckets the batch touches — computable batch-side, bounded
       val urlBuckets = rows.select(urlBucket.as("ub")).distinct()
         .as[String].collect().toSet
-      // ---- (1) affected md5 groups, durable for replay; the old-md5
-      // lookup reads ONLY the incoming urls' buckets (a url's row can
-      // live nowhere else)
-      val preParts = partsOf("pages/bucket=", urlBuckets)
+      // ---- (1) affected md5 groups; the old-md5 lookup lists ONLY the
+      // incoming urls' live pages buckets (a url's row can live nowhere
+      // else) — per-batch reads never scan the corpus (r6 verdict: the
+      // full-table recount scan was the one streaming scale-killer left)
+      val preParts = layer.currentPartitions()
+        .filter(p => p.key.startsWith("pages/bucket=") &&
+          urlBuckets.contains(p.key.stripPrefix("pages/bucket=")))
+        .map(_.path)
       val oldMd5 =
         if (preParts.isEmpty) rows.select("text_md5").limit(0)
         else ManifestTableLayer.readPartitions(spark, preParts)
           .join(rows.select("url").distinct(), Seq("url"), "left_semi")
           .select("text_md5")
-      val freshAffected = oldMd5.unionByName(rows.select("text_md5")).distinct()
-      val affected = persistAffected(spark, layer, freshAffected, batchId)
+      val affected = oldMd5.unionByName(rows.select("text_md5")).distinct()
+        .persist()
       try {
-        // ---- (2) latest-per-url MERGE (url-hash buckets). expire is
-        // deferred to the corpus merge: the batch protocol must not sweep
-        // its own affected file between the two commits.
+        // ---- (2) latest-per-url MERGE (url-hash buckets)
         val incPages = rows.withColumn(MergeSink.BucketCol, urlBucket)
-        MergeSink.mergeBuckets(spark, layer, incPages, batchId,
+        val pages = MergeSink.stage(spark, layer, incPages, batchId,
           keyPrefix = "pages/bucket=", lineageTag = "stream-crawl-pages",
           merge = MergeSink.keepBest(Seq("url"),
             Seq(col("epoch_s").desc, col("text_md5").asc)))
         // ---- (2b) companion member table `pagesmd5/bucket=<md5-hash>`:
         // the SAME latest-per-url rows as `pages`, re-bucketed by md5 so
         // the recount can prune its scan to affected md5 buckets. The
-        // post-merge truth for each incoming url comes from the incoming
-        // urls' pages buckets (pruned read); the merge drops the incoming
-        // urls' OLD rows (their old-md5 buckets ride in as extraBuckets —
-        // affected ⊇ {old md5s}) and inserts the fresh rows. A bucket the
-        // deletions empty commits as a dropped partition (allowEmptied).
-        // Replay-safe: urlTruth re-derives from the idempotent pages
-        // table; delete-then-insert converges on any replay.
+        // post-merge truth for each incoming url comes from the staged
+        // pages buckets (the keepBest merge empties no bucket, so every
+        // url bucket of the batch is among them); the merge drops the
+        // incoming urls' OLD rows (their old-md5 buckets ride in as
+        // extraBuckets — affected ⊇ {old md5s}) and inserts the fresh
+        // rows. A bucket the deletions empty is dropped (allowEmptied).
         val urlTruth = ManifestTableLayer
-          .readPartitions(spark, partsOf("pages/bucket=", urlBuckets))
+          .readPartitions(spark, pages.added.map(_.path))
           .join(rows.select("url").distinct(), Seq("url"), "left_semi")
           .select(col("url"), col("text_md5"), col("n_tokens"))
           .withColumn(MergeSink.BucketCol, md5Bucket)
         val affectedBuckets = affected.select(md5Bucket.as("mb")).distinct()
           .as[String].collect().toSeq.sorted
-        MergeSink.mergeBuckets(spark, layer, urlTruth, batchId,
+        val members = MergeSink.stage(spark, layer, urlTruth, batchId,
           keyPrefix = "pagesmd5/bucket=", lineageTag = "stream-crawl-bymd5",
           merge = (existing, incoming) =>
             existing.join(incoming.select("url").distinct(),
                 Seq("url"), "left_anti")
               .unionByName(incoming),
           extraBuckets = affectedBuckets, allowEmptied = true)
-        // ---- (3) recount affected groups against the companion table,
-        // reading ONLY the affected md5s' buckets
-        val compParts = partsOf("pagesmd5/bucket=", affectedBuckets.toSet)
-        val members =
-          if (compParts.isEmpty)
-            rows.select("url", "text_md5", "n_tokens").limit(0)
-          else ManifestTableLayer.readPartitions(spark, compParts)
-        val recounts = members.join(broadcast(affected), "text_md5")
+        // ---- (3) recount affected groups against the staged companion
+        // buckets. Every post-merge md5 of an incoming url is an incoming
+        // or an old md5, so the staged buckets are exactly the affected
+        // ones, minus those the deletions emptied (never all of them: each
+        // incoming url's row lands in one).
+        val recounts = ManifestTableLayer
+          .readPartitions(spark, members.added.map(_.path))
+          .join(broadcast(affected), "text_md5")
           .groupBy(col("text_md5"))
           .agg(min(col("url")).as("url"), count(lit(1)).as("n_copies"),
             max(col("n_tokens")).as("n_tokens"))
         // no tombstones: the merge deletes by the (broadcast-sized)
         // AFFECTED set rather than by the incoming md5s, so a group the
         // batch emptied simply vanishes — its bucket rides in via
-        // extraBuckets and, if emptied entirely, commits as a dropped
-        // partition. The old n_copies = 0 tombstone rows existed only to
-        // carry deletions through an incoming-keyed anti-join and
-        // accumulated forever (r6 "Missing #5"); nothing reads them.
+        // extraBuckets and, if emptied entirely, is dropped.
         val incCorpus = recounts
           .select("text_md5", "url", "n_copies", "n_tokens")
           .withColumn(MergeSink.BucketCol, md5Bucket)
-        MergeSink.mergeBuckets(spark, layer, incCorpus, batchId,
+        val corpus = MergeSink.stage(spark, layer, incCorpus, batchId,
           keyPrefix = "corpus/bucket=", lineageTag = "stream-crawl-corpus",
           merge = (existing, incoming) =>
             existing.join(broadcast(affected.select("text_md5")),
                 Seq("text_md5"), "left_anti")
               .unionByName(incoming),
-          expireEvery = expireEvery,
           extraBuckets = affectedBuckets, allowEmptied = true)
+        MergeSink.commit(layer, batchId, expireEvery, pages, members, corpus)
       } finally affected.unpersist()
     } finally rows.unpersist()
   }
 
-  /** Write the affected set under `corpus-affected/b<batchId>[-rN]` and
-    * return the union of THIS attempt with every earlier attempt of the
-    * same batch — the durable superset a replay needs.
-    */
-  private def persistAffected(
-      spark: SparkSession,
-      layer: ManifestTableLayer,
-      fresh: DataFrame,
-      batchId: Long
-  ): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    val ns = layer.dataDir("corpus-affected")
-    java.nio.file.Files.createDirectories(ns)
-    val prevDirs = {
-      val s = java.nio.file.Files.list(ns)
-      try s.iterator().asScala.map(_.getFileName.toString)
-        .filter(n => n == s"b$batchId" || n.startsWith(s"b$batchId-r"))
-        .map(ns.resolve(_).toString).toList
-      finally s.close()
-    }
-    val combined = prevDirs match {
-      case Nil => fresh
-      case ds => ManifestTableLayer.readPartitions(spark, ds).unionByName(fresh).distinct()
-    }
-    val attempt = layer.freshDir(s"corpus-affected/b$batchId").toString
-    NioLocalFileSystem.write(combined.coalesce(1)).mode("overwrite").parquet(attempt)
-    val out = ManifestTableLayer.readPartitions(spark, Seq(attempt)).persist()
-    out.count()
-    out
-  }
-
   /** The continuous query: stream `.warc(.gz)` files under `dir` through
-    * parse -> extract -> both MERGEs; drains with AvailableNow. Returns
+    * parse -> extract -> the three MERGEs; drains with AvailableNow. Returns
     * the layer for reads; a later call with the same checkpoint resumes.
     */
   def ingest(

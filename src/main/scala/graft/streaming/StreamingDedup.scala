@@ -36,11 +36,11 @@ object StreamingDedup {
   ): Unit = {
     val inc = batch.select("h", "keeper", "n_copies")
       .withColumn(MergeSink.BucketCol, MergeSink.hashBucket(nBuckets, col("h")))
-    MergeSink.mergeBuckets(spark, layer, inc, batchId,
-      keyPrefix = "dedup/bucket=", lineageTag = "stream-dedup",
-      merge = MergeSink.keepBest(Seq("h"),
-        Seq(col("n_copies").desc, col("keeper").asc)),
-      expireEvery = expireEvery)
+    MergeSink.commit(layer, batchId, expireEvery,
+      MergeSink.stage(spark, layer, inc, batchId,
+        keyPrefix = "dedup/bucket=", lineageTag = "stream-dedup",
+        merge = MergeSink.keepBest(Seq("h"),
+          Seq(col("n_copies").desc, col("keeper").asc))))
   }
 
   /** Streaming exact dedup over a documents directory: md5(text) keys the

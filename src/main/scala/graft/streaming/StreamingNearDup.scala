@@ -29,8 +29,8 @@ import graft.text.TextOps
   * batch engine where it belongs.
   *
   * Candidates and saturation markers drain through the shared
-  * [[MergeSink]] (one distributed job + one snapshot per namespace per
-  * micro-batch, replay-idempotent, checkpoint-resumable). The exact
+  * [[MergeSink]] (one distributed write per namespace and one snapshot
+  * per micro-batch, replay-idempotent, checkpoint-resumable). The exact
   * shingle-Jaccard verification then runs BATCH over just the candidate
   * ids — the same candidates-then-verify contract as the batch pipeline,
   * so the final (doc_a, doc_b, jaccard >= threshold) table equals the
@@ -83,8 +83,9 @@ object StreamingNearDup {
 
   /** MERGE one micro-batch of stateful output — candidate pairs
     * (kind=0: a=doc_a, b=doc_b) and saturation markers (kind=1:
-    * a=band_idx, b=band_hash) — into the two table namespaces. Both are
-    * pure distinct-set growth, so replays are no-ops.
+    * a=band_idx, b=band_hash) — into the two table namespaces, committed
+    * as one snapshot. Both are pure distinct-set growth, so replays are
+    * no-ops.
     */
   def mergeCandidateBatch(
       spark: SparkSession,
@@ -100,18 +101,17 @@ object StreamingNearDup {
         .select(col("a").as("doc_a"), col("b").as("doc_b"))
         .withColumn(MergeSink.BucketCol,
           MergeSink.hashBucket(nBuckets, col("doc_a"), col("doc_b")))
-      MergeSink.mergeBuckets(spark, layer, pairs, batchId,
-        keyPrefix = "cand/bucket=", lineageTag = "stream-neardup",
-        merge = (ex, in) => ex.unionByName(in).distinct(),
-        expireEvery = expireEvery)
       val marks = b.filter(col("kind") === 1)
         .select(col("a").cast("int").as("band_idx"), col("b").as("band_hash"))
         .withColumn(MergeSink.BucketCol,
           pmod(col("band_hash"), lit(4L)).cast("string"))
-      MergeSink.mergeBuckets(spark, layer, marks, batchId,
-        keyPrefix = "satband/bucket=", lineageTag = "stream-satband",
-        merge = (ex, in) => ex.unionByName(in).distinct(),
-        expireEvery = expireEvery)
+      MergeSink.commit(layer, batchId, expireEvery,
+        MergeSink.stage(spark, layer, pairs, batchId,
+          keyPrefix = "cand/bucket=", lineageTag = "stream-neardup",
+          merge = (ex, in) => ex.unionByName(in).distinct()),
+        MergeSink.stage(spark, layer, marks, batchId,
+          keyPrefix = "satband/bucket=", lineageTag = "stream-satband",
+          merge = (ex, in) => ex.unionByName(in).distinct()))
     } finally b.unpersist()
   }
 

@@ -23,7 +23,7 @@ object StreamingRollup {
     * by the batch's new values). This is the cluster sink shape (Iceberg
     * MERGE INTO is the same copy-on-write move); nothing accumulates on
     * the driver. All touched days merge in ONE distributed job + ONE
-    * snapshot commit per batch ([[MergeSink.mergeBuckets]]) — the
+    * snapshot commit per batch ([[MergeSink.commit]]) — the
     * affected-day count is bounded by the watermark horizon, but even a
     * wide-horizon batch costs a constant number of job launches.
     */
@@ -37,13 +37,13 @@ object StreamingRollup {
     val inc = batch.select("event_type", "bucket_ts", "n", "sum_cents")
       .withColumn(MergeSink.BucketCol,
         date_format(timestamp_seconds(col("bucket_ts")), "yyyy-MM-dd"))
-    MergeSink.mergeBuckets(spark, layer, inc, batchId,
-      keyPrefix = "tier=1h/day=", lineageTag = "stream-merge",
-      merge = (existing, incoming) =>
-        existing.join(incoming.select("event_type", "bucket_ts"),
-            Seq("event_type", "bucket_ts"), "left_anti")
-          .unionByName(incoming),
-      expireEvery = expireEvery)
+    MergeSink.commit(layer, batchId, expireEvery,
+      MergeSink.stage(spark, layer, inc, batchId,
+        keyPrefix = "tier=1h/day=", lineageTag = "stream-merge",
+        merge = (existing, incoming) =>
+          existing.join(incoming.select("event_type", "bucket_ts"),
+              Seq("event_type", "bucket_ts"), "left_anti")
+            .unionByName(incoming)))
   }
 
   /** Hourly streaming rollup through the PRODUCTION sink shape:
@@ -109,11 +109,11 @@ object StreamingRollup {
     val inc = batch.select("user_id", "event_id", "epoch_us", "event_type", "cents")
       .withColumn(MergeSink.BucketCol,
         MergeSink.hashBucket(nBuckets, col("user_id")))
-    MergeSink.mergeBuckets(spark, layer, inc, batchId,
-      keyPrefix = "latest/bucket=", lineageTag = "stream-upsert",
-      merge = MergeSink.keepBest(Seq("user_id"),
-        Seq(col("epoch_us").desc, col("event_id").desc)),
-      expireEvery = expireEvery)
+    MergeSink.commit(layer, batchId, expireEvery,
+      MergeSink.stage(spark, layer, inc, batchId,
+        keyPrefix = "latest/bucket=", lineageTag = "stream-upsert",
+        merge = MergeSink.keepBest(Seq("user_id"),
+          Seq(col("epoch_us").desc, col("event_id").desc))))
   }
 
   /** Stateful streaming upsert through the PRODUCTION sink shape: latest

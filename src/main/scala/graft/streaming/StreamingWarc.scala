@@ -33,11 +33,11 @@ object StreamingWarc {
   ): Unit = {
     val inc = batch.select("url", "epoch_s", "html_md5")
       .withColumn(MergeSink.BucketCol, MergeSink.hashBucket(nBuckets, col("url")))
-    MergeSink.mergeBuckets(spark, layer, inc, batchId,
-      keyPrefix = "warc/bucket=", lineageTag = "stream-warc",
-      merge = MergeSink.keepBest(Seq("url", "epoch_s"),
-        Seq(col("html_md5").asc)),
-      expireEvery = expireEvery)
+    MergeSink.commit(layer, batchId, expireEvery,
+      MergeSink.stage(spark, layer, inc, batchId,
+        keyPrefix = "warc/bucket=", lineageTag = "stream-warc",
+        merge = MergeSink.keepBest(Seq("url", "epoch_s"),
+          Seq(col("html_md5").asc))))
   }
 
   /** Ingest every `.warc` / `.warc.gz` under `dir` as a stream; returns

@@ -309,7 +309,7 @@ class AnnSpec extends AnyFunSuite {
     }
     val before = cellFiles()
     Ann.appendToIvfIndex(emb.filter(col("vec_id") % 3 === 0),
-      "vec_id", "embedding", path)
+      "vec_id", "embedding", path, batchId = 0L)
     // append NEVER rewrites existing files — new part files only
     val after = cellFiles()
     assert(before.subsetOf(after), "append must not rewrite base cell files")
@@ -346,8 +346,8 @@ class AnnSpec extends AnyFunSuite {
 
     // replay idempotence: the same batch applied twice lands ONE copy
     val wave = emb.filter(pmod(col("vec_id"), lit(9)) === 0)
-    Ann.appendToIvfIndexIdempotent(wave, "vec_id", "embedding", path, 7L)
-    Ann.appendToIvfIndexIdempotent(wave, "vec_id", "embedding", path, 7L)
+    Ann.appendToIvfIndex(wave, "vec_id", "embedding", path, 7L)
+    Ann.appendToIvfIndex(wave, "vec_id", "embedding", path, 7L)
     val cells1 = spark.read.parquet(s"$path/cells")
     assert(cells1.count() == baseCount + wave.count(),
       "a replayed batch must not duplicate rows")

@@ -74,4 +74,38 @@ object SparkTestSession {
     val r = try body finally { running.set(false); watcher.join() }
     (r, seen.asScala.toSet)
   }
+
+  /** A table layer that counts its commits and, with `crashAt = k > 0`,
+    * fails the k-th of its `writeStage` and `commit` calls: a `writeStage`
+    * after its files are written (their metas are lost), a `commit` before
+    * anything is committed. The crash-injection seam for the stores'
+    * atomicity tests; the engine itself carries no hook.
+    */
+  class CrashingLayer(root: String, crashAt: Int = 0)
+      extends graft.table.ManifestTableLayer(root) {
+    var commits = 0
+    var calls = 0
+    private def step(what: String): Unit = {
+      calls += 1
+      if (calls == crashAt) throw new IllegalStateException(s"injected crash at $what")
+    }
+    override def writeStage(
+        df: org.apache.spark.sql.DataFrame,
+        dir: Path,
+        route: Seq[String],
+        values: Seq[Seq[String]],
+        keyOf: Seq[String] => String,
+        lineageOf: Seq[String] => String
+    ): (Seq[graft.table.PartitionMeta], Seq[Seq[String]]) = {
+      val r = super.writeStage(df, dir, route, values, keyOf, lineageOf)
+      step("writeStage")
+      r
+    }
+    override def commit(
+        added: Seq[graft.table.PartitionMeta], removedKeys: Seq[String]): Long = {
+      step("commit")
+      commits += 1
+      super.commit(added, removedKeys)
+    }
+  }
 }

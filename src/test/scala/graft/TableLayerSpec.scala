@@ -11,7 +11,7 @@ class TableLayerSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  private def freshRoot(): String =
+  private def tableRoot(): String =
     SparkTestSession.tmpDir("mtl-test-").toString
 
   private def df(k: Int) = (1 to 10).map(i => (k, i)).toDF("k", "v")
@@ -25,7 +25,7 @@ class TableLayerSpec extends AnyFunSuite {
   }
 
   test("commit + read: snapshot sees exactly the committed partitions") {
-    val t = new ManifestTableLayer(freshRoot())
+    val t = new ManifestTableLayer(tableRoot())
     val m1 = write(t, 1, "tier=x/day=d1")
     t.commit(Seq(m1), Seq.empty)
     val m2 = write(t, 2, "tier=x/day=d2")
@@ -37,7 +37,7 @@ class TableLayerSpec extends AnyFunSuite {
   }
 
   test("dropPartitions is a logical drop; data returns on no snapshot change") {
-    val t = new ManifestTableLayer(freshRoot())
+    val t = new ManifestTableLayer(tableRoot())
     val metas = Seq("d1", "d2", "d3").map { d =>
       val m = write(t, 1, s"tier=x/day=$d")
       t.commit(Seq(m), Seq.empty)
@@ -52,7 +52,7 @@ class TableLayerSpec extends AnyFunSuite {
   }
 
   test("expireSnapshots physically deletes unreferenced partitions only") {
-    val t = new ManifestTableLayer(freshRoot())
+    val t = new ManifestTableLayer(tableRoot())
     val Seq(m1, m2) = Seq("d1", "d2").map { d =>
       val m = write(t, 1, s"tier=x/day=$d")
       t.commit(Seq(m), Seq.empty)
@@ -67,7 +67,7 @@ class TableLayerSpec extends AnyFunSuite {
   }
 
   test("retention sweep drops only the raw tier below the cutoff") {
-    val t = new ManifestTableLayer(freshRoot())
+    val t = new ManifestTableLayer(tableRoot())
     for (tier <- Seq("15min", "1d"); d <- Seq("2024-01-01", "2024-01-05")) {
       val m = write(t, 1, s"tier=$tier/day=$d")
       t.commit(Seq(m), Seq.empty)
@@ -103,14 +103,14 @@ class TableLayerSpec extends AnyFunSuite {
   }
 
   test("a 3-day writeStage starts no child process") {
-    val t = new ManifestTableLayer(freshRoot())
+    val t = new ManifestTableLayer(tableRoot())
     val (_, started) = SparkTestSession.processesOf(stage(t, "tier=15min"))
     assert(started.isEmpty, s"writeStage started ${started.size} process(es), e.g. " +
       started.toSeq.sorted.take(3).mkString("; "))
   }
 
   test("writeStage leaves every dir and file with the mode the default local FS gives") {
-    val t = new ManifestTableLayer(freshRoot())
+    val t = new ManifestTableLayer(tableRoot())
     stage(t, "tier=15min")
     // the same write (dynamic overwrite: the same layout, no root _SUCCESS)
     // through the session's own file: FS
@@ -123,7 +123,7 @@ class TableLayerSpec extends AnyFunSuite {
   }
 
   test("writeStage footer stats match every day dir of a multi-file stage") {
-    val t = new ManifestTableLayer(freshRoot())
+    val t = new ManifestTableLayer(tableRoot())
     stage(t, "tier=15min").foreach { m =>
       val files = {
         val s = Files.walk(java.nio.file.Paths.get(m.path))
@@ -138,7 +138,7 @@ class TableLayerSpec extends AnyFunSuite {
 
   test("a store whose snapshots were written pretty-printed still reads, time-travels and commits") {
     import com.fasterxml.jackson.databind.ObjectMapper
-    val root = freshRoot()
+    val root = tableRoot()
     val t = new ManifestTableLayer(root)
     t.commit(Seq(write(t, 1, "tier=x/day=d1")), Seq.empty)
     val pinned = t.currentSnapshotId()
@@ -175,7 +175,7 @@ class TableLayerSpec extends AnyFunSuite {
 
   test("read, readAt and readTier take the footer schema: no Spark job before the action") {
     import SparkTestSession.jobsOf
-    val t = new ManifestTableLayer(freshRoot())
+    val t = new ManifestTableLayer(tableRoot())
     val m15 = stage(t, "tier=15min")
     t.commit(m15, Seq.empty)
     val snap = t.currentSnapshotId()
